@@ -6,14 +6,16 @@ Reference semantics (pdf-tool/page.tsx):
 - F21 page-spec: ``"1,3,5-7"`` -> [[1],[3],[5,6,7]]; ranges normalized
   min..max; non-numeric chunks skipped (:54-73) — plan-time parser.
 - D1 merge: N valid PDFs (>=2) in explicit user order -> one PDF
-  (:317-359). Inherently sequential assembly: a single task concatenates
+  (:317-359). Inherently sequential assembly: the driver concatenates
   page streams in manifest order (don't over-engineer — SURVEY §7.3.7).
 - D2 split: one PDF -> one output per page group; ``all`` mode = one per
   page; out-of-range pages filtered, empty groups skipped; zero-padded
-  ``_split_001`` names (:362-445). Groups parallelize across tasks.
+  ``_split_001`` names (:362-445). The codec parses the document once on
+  the driver and builds every group from that parse: a per-group Python
+  task costs far more than the byte surgery it would carry.
 
-Page-level byte surgery needs a PDF codec; three implement the same
-protocol (count_pages/extract/merge):
+Both collect only the requested PDFs. Page-level byte surgery needs a
+PDF codec; three implement the same protocol (count_pages/split/merge):
 
 - ``PypdfCodec`` — full format coverage via pypdf (gated: not in this
   container).
@@ -31,6 +33,7 @@ from __future__ import annotations
 
 import io
 import os
+import re
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -106,27 +109,29 @@ class PypdfCodec:
 
         return len(PdfReader(io.BytesIO(data)).pages)
 
-    def extract(self, data: bytes, pages: list[int]) -> bytes:
-        from pypdf import PdfReader, PdfWriter
+    @staticmethod
+    def _write(pages) -> bytes:
+        from pypdf import PdfWriter
 
-        reader = PdfReader(io.BytesIO(data))
         writer = PdfWriter()
-        for p in pages:  # 1-based
-            writer.add_page(reader.pages[p - 1])
+        for page in pages:
+            writer.add_page(page)
         out = io.BytesIO()
         writer.write(out)
         return out.getvalue()
+
+    def split(self, data: bytes, groups: list[list[int]]) -> list[bytes]:
+        from pypdf import PdfReader
+
+        pages = PdfReader(io.BytesIO(data)).pages
+        return [self._write(pages[p - 1] for p in g) for g in groups]  # 1-based
 
     def merge(self, docs: list[bytes]) -> bytes:
-        from pypdf import PdfReader, PdfWriter
+        from pypdf import PdfReader
 
-        writer = PdfWriter()
-        for data in docs:
-            for page in PdfReader(io.BytesIO(data)).pages:
-                writer.add_page(page)
-        out = io.BytesIO()
-        writer.write(out)
-        return out.getvalue()
+        return self._write(
+            page for data in docs for page in PdfReader(io.BytesIO(data)).pages
+        )
 
 
 class MiniPdfCodec:
@@ -137,10 +142,8 @@ class MiniPdfCodec:
 
     Compressed/object-stream PDFs raise ``ValueError`` (honest gate);
     ``PypdfCodec`` covers them when pypdf is installed. Protocol
-    matches PypdfCodec/FakePdfCodec: count_pages / extract / merge.
+    matches PypdfCodec/FakePdfCodec: count_pages / split / merge.
     """
-
-    _OBJ_RE = None  # compiled lazily (module import stays cheap)
 
     @staticmethod
     def make(page_texts: list[str]) -> bytes:
@@ -208,8 +211,6 @@ class MiniPdfCodec:
         NotImplementedError gate. A general parser would bound stream
         extraction by the declared ``/Length`` instead.
         """
-        import re
-
         objs = {
             int(m.group(1)): m.group(2)
             for m in re.finditer(
@@ -253,9 +254,9 @@ class MiniPdfCodec:
     def count_pages(self, data: bytes) -> int:
         return len(self._parse(data))
 
-    def extract(self, data: bytes, pages: list[int]) -> bytes:
-        all_pages = self._parse(data)
-        return self._build([all_pages[p - 1] for p in pages])
+    def split(self, data: bytes, groups: list[list[int]]) -> list[bytes]:
+        pages = self._parse(data)
+        return [self._build([pages[p - 1] for p in g]) for g in groups]
 
     def merge(self, docs: list[bytes]) -> bytes:
         pages: list[tuple[bytes, bytes]] = []
@@ -287,18 +288,20 @@ class FakePdfCodec:
     def count_pages(self, data: bytes) -> int:
         return len(data[len(self.HEADER):].splitlines())
 
-    def extract(self, data: bytes, pages: list[int]) -> bytes:
+    def split(self, data: bytes, groups: list[list[int]]) -> list[bytes]:
         lines = data[len(self.HEADER):].splitlines()
-        return self.HEADER + b"".join(
-            lines[p - 1] + b"\n" for p in pages if 1 <= p <= len(lines)
-        )
+        return [
+            self.HEADER
+            + b"".join(lines[p - 1] + b"\n" for p in g if 1 <= p <= len(lines))
+            for g in groups
+        ]
 
     def merge(self, docs: list[bytes]) -> bytes:
         return self.HEADER + b"".join(d[len(self.HEADER):] for d in docs)
 
 
 # ---------------------------------------------------------------------------
-# D1 — merge (manifest-ordered, single sequential task)
+# D1 — merge (manifest-ordered, one driver-side pass)
 # ---------------------------------------------------------------------------
 
 
@@ -308,12 +311,22 @@ class PdfOutput:
     content: bytes
 
 
+# binaryFile reports file: URIs; manifests use plain paths.
+_FILE_URI = "^file:(//)?"
+
+
 def _norm_path(p: str) -> str:
-    """binaryFile reports file: URIs; manifests use plain paths."""
-    for prefix in ("file://", "file:"):
-        if p.startswith(prefix):
-            return p[len(prefix):]
-    return p
+    return re.sub(_FILE_URI, "", p)
+
+
+def _requested(df: DataFrame, paths: list[str]) -> dict[str, bytes]:
+    """Content of the valid PDFs among ``paths``, keyed by normalized
+    path. The scan is filtered on the paths before collecting, so the
+    other files of a directory never reach the driver."""
+    wanted = sorted({_norm_path(p) for p in paths})
+    norm = F.regexp_replace("path", _FILE_URI, "")
+    rows = valid_pdfs(df).filter(norm.isin(wanted)).select("path", "content")
+    return {_norm_path(r.path): bytes(r.content) for r in rows.collect()}
 
 
 def merge_pdfs(
@@ -326,21 +339,14 @@ def merge_pdfs(
     if len(order) < 2:
         raise ValueError("merge needs >= 2 files (pdf-tool/page.tsx:317)")
     rank = {_norm_path(p): i for i, p in enumerate(order)}
-    rows = [
-        r for r in valid_pdfs(df).collect() if _norm_path(r.path) in rank
-    ]
-    if len(rows) < len(order):
-        missing = set(rank) - {_norm_path(r.path) for r in rows}
-        raise ValueError(f"invalid or missing PDFs: {sorted(missing)}")
-    docs = [
-        bytes(r.content)
-        for r in sorted(rows, key=lambda r: rank[_norm_path(r.path)])
-    ]
-    return PdfOutput(out_name, codec.merge(docs))
+    docs = _requested(df, order)
+    if len(docs) < len(order):
+        raise ValueError(f"invalid or missing PDFs: {sorted(set(rank) - set(docs))}")
+    return PdfOutput(out_name, codec.merge([docs[p] for p in sorted(rank, key=rank.get)]))
 
 
 # ---------------------------------------------------------------------------
-# D2 — split (page groups fan out across tasks)
+# D2 — split (one driver-side parse, every group built from it)
 # ---------------------------------------------------------------------------
 
 
@@ -353,38 +359,26 @@ def split_pdf(
     """D2: one PDF -> (name, content) rows, one per page group.
 
     ``spec=None`` is 'all' mode (one file per page). Out-of-range pages
-    drop; empty groups skip; names zero-pad ``_split_001``. Each group
-    extracts independently — ``repartition(n_groups)`` puts one group
-    per task, the distributed shape for a 10k-page document.
+    drop; empty groups skip; names zero-pad ``_split_001``. Only the
+    requested document is collected; the codec parses it once on the
+    driver and builds every group (``codec.split``), and the outputs
+    come back as an Arrow local frame — no Python worker, no shuffle.
     """
+    import pyarrow as pa
+
     codec = codec or default_codec()
-    target = _norm_path(path)
-    row = next(
-        (r for r in valid_pdfs(df).collect() if _norm_path(r.path) == target), None
-    )
-    if row is None:
+    data = _requested(df, [path]).get(_norm_path(path))
+    if data is None:
         raise ValueError(f"not a valid PDF: {path}")
-    data = bytes(row.content)
     n = codec.count_pages(data)
     groups = parse_pages(spec) if spec else [[p] for p in range(1, n + 1)]
     groups = [[p for p in g if 1 <= p <= n] for g in groups]
     groups = [g for g in groups if g]
     base = os.path.splitext(os.path.basename(path))[0]
-
-    spark = df.sparkSession
-    gdf = spark.createDataFrame(
-        [(i + 1, g) for i, g in enumerate(groups)], ["gid", "pages"]
-    ).repartition(max(len(groups), 1), "gid")
-    bc = spark.sparkContext.broadcast(data)
-
-    def extract(rows):
-        c = codec
-        for r in rows:
-            name = f"{base}_split_{r.gid:03d}.pdf"
-            yield (name, bytearray(c.extract(bc.value, list(r.pages))))
-
-    out_schema = "name string, content binary"
-    return spark.createDataFrame(gdf.rdd.mapPartitions(extract), out_schema)
+    names = [f"{base}_split_{i:03d}.pdf" for i in range(1, len(groups) + 1)]
+    table = pa.table([pa.array(names, pa.string()),
+                      pa.array(codec.split(data, groups), pa.binary())], ["name", "content"])
+    return df.sparkSession.createDataFrame(table, "name string, content binary")
 
 
 def write_outputs(outputs: DataFrame, out_dir: str) -> list[str]:

@@ -7,8 +7,11 @@ reference file:line for the judge's parity check):
   escape, cells trimmed (compare/page.tsx:134-178). Spark's csv reader
   covers all of it natively (quote='"', escape='"', whitespace opts).
 - S3 delimiter sniffing: count ``,`` vs ``\\t`` vs ``;`` in the first
-  2000 chars, pick the max (compare/page.tsx:181-189). Driver-side on a
-  head sample; never scans the full file.
+  2000 chars, pick the max (compare/page.tsx:181-189). One bounded
+  driver-side head read of the first data file (Hadoop FileSystem API,
+  no Spark job, never the whole file) feeds both the sniff and the
+  header names, which build an explicit all-string schema under Spark's
+  own naming rules — so a csv frame builds with no Spark job at all.
 - S5 TXT-as-lines: one line -> one row {value}; blank lines dropped
   (FileUploader.tsx:56-62).
 - S6 JSON: if the document is not an array, use the first array-valued
@@ -20,8 +23,10 @@ reference file:line for the judge's parity check):
   ``flatMap`` over whole-file rows — files are the unit of parallelism
   (XML is not splittable without a record-aware reader), which matches
   how a 100 TB corpus of many XML files distributes.
-- S7 Excel: pandas bridge (openpyxl), gated behind import-try — Excel
-  is an inherently single-file convenience format; parquet is the
+- S7 Excel: pandas bridge (openpyxl), gated behind import-try, else
+  the stdlib ``xlsx_lite`` codec; either way the sheets parse on the
+  driver and reach Spark as Arrow local frames (no Python worker).
+  Excel is an inherently single-file convenience format; parquet is the
   at-scale substrate (SURVEY §7.3.5).
 - S11 encodings: utf-8 / euc-kr / shift_jis / iso-8859-1
   (FileUploader.tsx:233,312-314) via the reader ``encoding`` option;
@@ -33,7 +38,9 @@ contract is applied by writers, not here (SURVEY §1.4).
 
 from __future__ import annotations
 
+import codecs
 import re
+from collections import Counter
 
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
@@ -51,26 +58,11 @@ _SPARK_CHARSETS = {
 def detect_delimiter(spark: SparkSession, path: str, encoding: str = "utf-8") -> str:
     """S3: sniff the delimiter from the first 2000 chars of the file.
 
-    Driver-side constant-size read (never a full scan); feeds the
-    ``sep`` option of the distributed csv reader.
+    Reads a bounded head of the first data file on the driver (never a
+    full scan, never a Spark job); feeds the ``sep`` option of the
+    distributed csv reader.
     """
-    if encoding.lower() in _SPARK_CHARSETS:
-        head = (
-            spark.read.format("text")
-            .option("wholetext", "false")
-            .option("encoding", encoding)
-            .load(path)
-            .limit(50)
-        )
-        sample = "\n".join(r[0] for r in head.collect())[:2000]
-    else:
-        raw = (
-            spark.read.format("binaryFile").load(path).select("content").head()
-        )
-        sample = bytes(raw.content)[:4000].decode(encoding, errors="replace")[:2000]
-    counts = {d: sample.count(d) for d in DELIMITERS}
-    best = max(counts, key=counts.get)
-    return best if counts[best] > 0 else ","
+    return _sniff(_head_text(spark, path, encoding))
 
 
 def read_csv(
@@ -88,10 +80,30 @@ def read_csv(
     per-line input splitting — each file becomes one parse unit, so
     keep it off for large splittable CSVs unless the data needs it.
     """
+    return _read_csv(spark, path, sep, encoding, header, multiline, head=None)
+
+
+def _read_csv(
+    spark: SparkSession,
+    path: str,
+    sep: str,
+    encoding: str,
+    header: bool,
+    multiline: bool,
+    head: str | None,
+) -> DataFrame:
+    """The csv scan with an explicit all-string schema whose names come
+    from ``head`` (read here when None), so building the frame runs no
+    header-inference job."""
     if encoding.lower() not in _SPARK_CHARSETS:
         return _read_csv_python(spark, path, sep=sep, encoding=encoding, header=header)
+    if head is None:
+        head = _head_text(spark, path, encoding)
+    case_sensitive = spark.conf.get("spark.sql.caseSensitive") == "true"
+    names = _csv_names(head, sep, header, multiline, case_sensitive)
     return (
-        spark.read.option("header", header)
+        spark.read.schema(_string_schema(names))
+        .option("header", header)
         .option("multiLine", multiline)
         .option("sep", sep)
         .option("quote", '"')
@@ -102,6 +114,143 @@ def read_csv(
         .option("mode", "PERMISSIVE")
         .csv(path)
     )
+
+
+# The head is read in chunks until it holds the sniff sample (4000
+# chars: 2000 after CRLF line ends collapse) and a whole header line.
+# A py4j reply carrying a byte array above ~6 KB stalls ~40 ms (8 KB:
+# 45 ms, 6 KB: 2 ms on a 4-core Linux VM), so chunks stay small.
+_HEAD_BYTES = 4096
+_SNIFF_LINES, _SNIFF_CHARS = 50, 2000
+# Spark's csv parser trims characters <= U+0020, not Unicode
+# whitespace: a no-break space stays part of a column name.
+_WS = "".join(map(chr, range(33)))
+_LINE_END = re.compile(r"\r\n|\r|\n")
+_LINE_DONE = re.compile(r"[^\x00-\x20][^\r\n]*[\r\n]")
+
+
+def _hidden(name: str) -> bool:
+    """Spark's file index skips these (``_SUCCESS``, ``.crc``, ...)."""
+    return (name.startswith("_") and "=" not in name) or name.startswith(".")
+
+
+def _head_text(spark: SparkSession, path: str, encoding: str) -> str:
+    """Decoded head of the first non-empty data file under ``path`` (a
+    file, a directory or a glob), read on the driver through the Hadoop
+    FileSystem API: no Spark job, and a bounded read whatever the file
+    size. Hidden files and empty parts are skipped and the largest file
+    comes first, the order Spark's file index and partition planning
+    give the scan, so the header is the one Spark's inference picks.
+    ``""`` when every file is empty."""
+    jvm = spark._jvm
+    conf = spark._jsc.hadoopConfiguration()
+    root = jvm.org.apache.hadoop.fs.Path(path)
+    fs = root.getFileSystem(conf)
+    pending = list(fs.globStatus(root) or [])
+    files = []
+    while pending:
+        status = pending.pop()
+        if status.isDirectory():
+            pending.extend(
+                s for s in fs.listStatus(status.getPath())
+                if not _hidden(s.getPath().getName())
+            )
+        else:
+            files.append((-status.getLen(), status.getPath().toString(), status))
+    if not files:
+        raise FileNotFoundError(f"no data files at {path}")
+    size, _, first = min(files, key=lambda t: t[:2])
+    if not size:
+        return ""
+    first = first.getPath()
+    codec = jvm.org.apache.hadoop.io.compress.CompressionCodecFactory(conf).getCodec(first)
+    stream = fs.open(first)
+    try:
+        if codec is not None:
+            stream = codec.createInputStream(stream)
+        decoder = codecs.getincrementaldecoder(encoding)(errors="replace")
+        text = ""
+        while True:
+            chunk = bytes(stream.readNBytes(_HEAD_BYTES))
+            eof = len(chunk) < _HEAD_BYTES
+            text += decoder.decode(chunk, final=eof)
+            if eof or (len(text) >= 2 * _SNIFF_CHARS and _LINE_DONE.search(text)):
+                break
+    finally:
+        stream.close()
+    return text.removeprefix("\ufeff")
+
+
+def _sniff(head: str) -> str:
+    """S3: the most frequent of ``DELIMITERS`` in the first 2000 chars
+    of the first 50 lines; ``,`` when none occurs."""
+    sample = "\n".join(_LINE_END.split(head)[:_SNIFF_LINES])[:_SNIFF_CHARS]
+    counts = {d: sample.count(d) for d in DELIMITERS}
+    best = max(counts, key=counts.get)
+    return best if counts[best] > 0 else ","
+
+
+def _first_record(text: str, sep: str) -> list[str]:
+    """Cells of the first record of ``text`` as Spark's csv parser splits
+    it: cells trimmed of chars <= U+0020, ``"`` quotes with ``""``
+    escapes, the record ends at an unquoted line break. A quoted cell
+    with text after its closing quote is kept raw, quotes included."""
+    stops = sep + "\r\n"
+    cells: list[str] = []
+    i, n = 0, len(text)
+    while True:
+        while i < n and text[i] in _WS and text[i] not in stops:
+            i += 1
+        start, quoted = i, []
+        if i < n and text[i] == '"':
+            i += 1
+            while i < n:
+                if text[i] == '"':
+                    if text[i + 1:i + 2] != '"':
+                        i += 1
+                        break
+                    i += 1
+                quoted.append(text[i])
+                i += 1
+        end = i
+        while end < n and text[end] not in stops:
+            end += 1
+        if text[start:start + 1] == '"':
+            after = text[i:end].strip(_WS)
+            cells.append(text[start:end].strip(_WS) if after else "".join(quoted))
+        else:
+            cells.append(text[start:end].strip(_WS))
+        i = end
+        if i < n and text[i] == sep:
+            i += 1
+            continue
+        return cells
+
+
+def _csv_names(
+    head: str, sep: str, header: bool, multiline: bool, case_sensitive: bool
+) -> list[str]:
+    """Column names Spark's csv reader infers from the first non-blank
+    record (CSVUtils.makeSafeHeader): empty names become ``_c{i}`` and
+    duplicates (case-insensitive unless ``spark.sql.caseSensitive``) get
+    their index as a suffix; without a header every column is ``_c{i}``.
+    Outside multiLine mode the record is the first non-blank line."""
+    line = next((ln for ln in _LINE_END.split(head) if ln.strip(_WS)), None)
+    if line is None:
+        return []
+    cells = _first_record(head[head.find(line):] if multiline else line, sep)
+    if not header:
+        return [f"_c{i}" for i in range(len(cells))]
+    key = (lambda c: c) if case_sensitive else str.lower
+    seen = Counter(key(c) for c in cells if c)
+    return [
+        f"_c{i}" if not c else f"{c}{i}" if seen[key(c)] > 1 else c
+        for i, c in enumerate(cells)
+    ]
+
+
+def _string_schema(names: list[str]) -> T.StructType:
+    return T.StructType([T.StructField(n, T.StringType(), True) for n in names])
 
 
 def _read_csv_python(
@@ -147,7 +296,7 @@ def _read_csv_python(
 
     dicts = _persisted(binary.rdd.mapPartitions(parse))
     keys = _ordered_union_keys(dicts)
-    schema = T.StructType([T.StructField(k, T.StringType(), True) for k in keys])
+    schema = _string_schema(keys)
     return spark.createDataFrame(
         dicts.map(lambda d: tuple(d.get(k, "") for k in keys)), schema
     )
@@ -188,12 +337,11 @@ def _ordered_union_keys(dicts_rdd) -> list[str]:
 
 
 def read_table_auto(spark: SparkSession, path: str, encoding: str = "utf-8") -> DataFrame:
-    """S4: .tsv forces tab; .txt/.csv go through delimiter sniffing."""
-    if path.endswith(".tsv"):
-        sep = "\t"
-    else:
-        sep = detect_delimiter(spark, path, encoding=encoding)
-    return read_csv(spark, path, sep=sep, encoding=encoding)
+    """S4: .tsv forces tab; .txt/.csv go through delimiter sniffing.
+    One head read feeds both the sniff and the header names."""
+    head = _head_text(spark, path, encoding)
+    sep = "\t" if path.endswith(".tsv") else _sniff(head)
+    return _read_csv(spark, path, sep, encoding, True, False, head)
 
 
 def read_txt_lines(spark: SparkSession, path: str, encoding: str = "utf-8") -> DataFrame:
@@ -521,7 +669,7 @@ def read_xml(
     # the ragged-row schema (S9), then the typed-row projection.
     dicts = _persisted(binary.select("path", "content").rdd.mapPartitions(parse))
     keys = _ordered_union_keys(dicts)
-    schema = T.StructType([T.StructField(k, T.StringType(), True) for k in keys])
+    schema = _string_schema(keys)
     return spark.createDataFrame(
         dicts.map(lambda d: tuple(d.get(k) for k in keys)), schema
     )
@@ -566,7 +714,7 @@ def read_xml_tables(
     for name in names:
         sub = parsed.filter(lambda t, n=name: t[0] == n).map(lambda t: t[1])
         keys = _ordered_union_keys(sub)
-        schema = T.StructType([T.StructField(k, T.StringType(), True) for k in keys])
+        schema = _string_schema(keys)
         out[name] = spark.createDataFrame(
             sub.map(lambda d, ks=tuple(keys): tuple(d.get(k) for k in ks)), schema
         )
@@ -581,27 +729,34 @@ def read_excel(spark: SparkSession, path: str) -> dict[str, DataFrame]:
     Excel is a convenience edge format with a documented size cap
     (SURVEY §7.3.5) — at scale, land the data as parquet instead.
     """
+    import pyarrow as pa
+
     try:
         import pandas as pd
 
-        sheets = pd.read_excel(path, sheet_name=None, dtype=str)
-        return {
-            name: spark.createDataFrame(frame.fillna(""))
-            for name, frame in sheets.items()
-            if len(frame.columns)
+        tables = {
+            name: pa.Table.from_pandas(
+                frame.fillna("").rename(columns=str), preserve_index=False
+            )
+            for name, frame in pd.read_excel(path, sheet_name=None, dtype=str).items()
         }
     except ImportError:
         from . import xlsx_lite
 
-        out: dict[str, DataFrame] = {}
-        for name, (cols, rows) in xlsx_lite.read_workbook(path).items():
-            if not cols:
-                continue
-            schema = T.StructType(
-                [T.StructField(c, T.StringType(), True) for c in cols]
+        tables = {
+            name: pa.Table.from_arrays(
+                [pa.array([r[i] for r in rows], pa.string()) for i in range(len(cols))],
+                names=cols,
             )
-            out[name] = spark.createDataFrame([tuple(r) for r in rows], schema)
-        return out
+            for name, (cols, rows) in xlsx_lite.read_workbook(path).items()
+        }
+    # Spark turns the Arrow batches into a local relation in the JVM: no
+    # Python worker runs and building the frame submits no job.
+    return {
+        name: spark.createDataFrame(table, _string_schema(table.column_names))
+        for name, table in tables.items()
+        if table.num_columns
+    }
 
 
 _SHEET_FORBIDDEN = re.compile(r"[\\/?*:\[\]]")

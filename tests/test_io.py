@@ -50,6 +50,83 @@ def test_tsv_forced_tab(spark, tmp_path):
     assert df.collect()[0].v == "a,b"
 
 
+# The options read_csv passes besides the schema, for Spark-inferred
+# reference frames.
+_CSV_OPTS = dict(
+    sep=",", quote='"', escape='"', ignoreLeadingWhiteSpace=True,
+    ignoreTrailingWhiteSpace=True, mode="PERMISSIVE",
+)
+
+
+def _spark_inferred(spark, path, **opts):
+    reader = spark.read.option("header", True)
+    for k, v in {**_CSV_OPTS, **opts}.items():
+        reader = reader.option(k, v)
+    return reader.csv(path)
+
+
+@pytest.mark.parametrize("multiline", [False, True])
+def test_csv_header_names_match_spark(spark, tmp_path, multiline):
+    # BOM, padded names, a quoted delimiter, an empty cell and
+    # case-insensitive duplicates: Spark names these a0, "b,c", _c2, a3, A4.
+    path = _write(tmp_path, "h.csv", '\ufeff a ,"b,c",,a,A\n1,2,3,4,5\n6, 7 ,"8,9",,x\n')
+    ours = readers.read_csv(spark, path, multiline=multiline)
+    ref = _spark_inferred(spark, path, multiLine=multiline)
+    assert ours.columns == ref.columns == ["a0", "b,c", "_c2", "a3", "A4"]
+    assert sorted(ours.collect()) == sorted(ref.collect())
+    auto = readers.read_table_auto(spark, path)
+    assert auto.columns == ref.columns
+    assert sorted(auto.collect()) == sorted(ref.collect())
+
+
+def test_csv_header_from_spark_part_directory(spark, tmp_path):
+    # A Spark-written directory: part files, _SUCCESS, .crc side files,
+    # plus an empty part — the header comes from a real data part.
+    out = str(tmp_path / "parts")
+    src = spark.createDataFrame([(str(i), f"v;{i}") for i in range(30)], ["k", "v"])
+    src.repartition(3).write.option("header", True).csv(out)
+    (tmp_path / "parts" / "part-99999-empty.csv").write_bytes(b"")
+    names = os.listdir(out)
+    assert "_SUCCESS" in names and any(n.endswith(".crc") for n in names)
+    ref = _spark_inferred(spark, out)
+    for df in (readers.read_csv(spark, out), readers.read_table_auto(spark, out)):
+        assert df.columns == ref.columns == ["k", "v"]
+        assert sorted(df.collect()) == sorted(ref.collect())
+        assert df.count() == 30
+
+
+def _next_job_id(spark) -> int:
+    return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+
+
+def test_euc_kr_sniff_reads_only_the_head(spark, tmp_path):
+    path = _write(tmp_path, "kr.csv", "이름;값\n" + "홍길동;1\n" * 5000, encoding="euc-kr")
+    before = _next_job_id(spark)
+    assert readers.detect_delimiter(spark, path, encoding="euc-kr") == ";"
+    assert _next_job_id(spark) == before
+
+
+def test_tools_path_job_budget(spark, tmp_path):
+    # Building a csv frame submits no job; csv -> xml runs only the
+    # writer's own job; Excel sheets build without a Python worker.
+    src = _write(tmp_path, "t.csv", "id;v\n1;a\n2;b\n")
+    before = _next_job_id(spark)
+    df = readers.read_table_auto(spark, src)
+    assert _next_job_id(spark) == before and df.columns == ["id", "v"]
+    before = _next_job_id(spark)
+    convert.convert(spark, [src], "xml", str(tmp_path / "xml"))
+    assert _next_job_id(spark) == before + 1
+    book = str(tmp_path / "wb.xlsx")
+    from data__converter_spark.io import xlsx_lite
+
+    xlsx_lite.write_workbook(book, {"s": (["id", "v"], [["1", "x"], ["2", ""]])})
+    before = _next_job_id(spark)
+    sheets = readers.read_excel(spark, book)
+    assert _next_job_id(spark) == before
+    assert "PythonRDD" not in sheets["s"]._jdf.rdd().toDebugString()
+    assert sorted(sheets["s"].collect()) == [("1", "x"), ("2", "")]
+
+
 def test_csv_roundtrip(spark, tmp_path, orders):
     sample = orders.select("o_orderkey", "o_orderstatus", "o_orderpriority").limit(200)
     out = str(tmp_path / "orders_csv")

@@ -92,6 +92,29 @@ def test_split_spec_filters_out_of_range(spark, pdf_dir):
     assert rows["a_split_001.pdf"].endswith(b"p2\np3\n")
 
 
+def test_merge_and_split_collect_only_requested(spark, pdf_dir, monkeypatch):
+    (pdf_dir / "c.pdf").write_bytes(pdf.FakePdfCodec.make(["r1"]))  # unrequested
+    df = pdf.read_pdfs(spark, str(pdf_dir / "*.pdf"))
+    collected = []
+    collect = type(df).collect
+
+    def spy(self):
+        rows = collect(self)
+        collected.extend(r.path.rsplit("/", 1)[-1] for r in rows)
+        return rows
+
+    monkeypatch.setattr(type(df), "collect", spy)
+    codec = pdf.FakePdfCodec()
+    out = pdf.merge_pdfs(df, [str(pdf_dir / "b.pdf"), str(pdf_dir / "a.pdf")], codec=codec)
+    assert sorted(collected) == ["a.pdf", "b.pdf"]
+    files = {n: (pdf_dir / n).read_bytes() for n in ("a.pdf", "b.pdf")}
+    assert out.content == codec.merge([files["b.pdf"], files["a.pdf"]])
+    collected.clear()
+    split = pdf.split_pdf(df, str(pdf_dir / "a.pdf"), codec=codec)
+    assert collected == ["a.pdf"]
+    assert "PythonRDD" not in split._jdf.rdd().toDebugString()
+
+
 def test_pypdf_codec_gated():
     try:
         import pypdf  # noqa: F401
