@@ -384,11 +384,13 @@ def split_pdf(
 def write_outputs(outputs: DataFrame, out_dir: str) -> list[str]:
     """K8: persist (name, content) rows as files under ``out_dir``.
 
-    Streams via toLocalIterator — one output file at a time on the
-    driver (PDF outputs are user-facing downloads, not a data path)."""
+    The rows are collected to the driver: PDF outputs are user-facing
+    downloads, not a data path, and :func:`split_pdf`'s frame is a
+    local relation that ``collect`` returns without a Spark job
+    (``toLocalIterator`` would run one job per partition)."""
     os.makedirs(out_dir, exist_ok=True)
     written = []
-    for r in outputs.toLocalIterator():
+    for r in outputs.collect():
         path = os.path.join(out_dir, r.name)
         with open(path, "wb") as fh:
             fh.write(bytes(r.content))

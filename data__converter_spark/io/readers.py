@@ -46,6 +46,8 @@ from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .. import commit
+
 DELIMITERS = [",", "\t", ";"]
 ENCODINGS = {"utf-8", "euc-kr", "cp949", "shift_jis", "iso-8859-1"}
 # Charsets Spark's native csv/text readers accept; anything else (the
@@ -142,11 +144,8 @@ def _head_text(spark: SparkSession, path: str, encoding: str) -> str:
     comes first, the order Spark's file index and partition planning
     give the scan, so the header is the one Spark's inference picks.
     ``""`` when every file is empty."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    root = jvm.org.apache.hadoop.fs.Path(path)
-    fs = root.getFileSystem(conf)
-    pending = list(fs.globStatus(root) or [])
+    fs, P = commit.filesystem(spark, path)
+    pending = list(fs.globStatus(P(path)) or [])
     files = []
     while pending:
         status = pending.pop()
@@ -163,7 +162,8 @@ def _head_text(spark: SparkSession, path: str, encoding: str) -> str:
     if not size:
         return ""
     first = first.getPath()
-    codec = jvm.org.apache.hadoop.io.compress.CompressionCodecFactory(conf).getCodec(first)
+    factory = spark._jvm.org.apache.hadoop.io.compress.CompressionCodecFactory
+    codec = factory(spark._jsc.hadoopConfiguration()).getCodec(first)
     stream = fs.open(first)
     try:
         if codec is not None:

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import commit
 from .textstats import quality_score_col, sample_hash_col, scrub_pii_col
 
 
@@ -298,9 +299,9 @@ def _verify_pairs(
 
 
 # Tables of the standing ingest state that are mutated through
-# _staged_swap (and therefore need the entry-time recovery probe at
-# EVERY entry point, not just the compactor's — ADVICE r12: a compactor
-# crash between renames leaves the live table demoted until repaired).
+# commit.swap (and therefore need commit.recover at EVERY entry point,
+# not just the compactor's — ADVICE r12: a compactor crash between
+# renames leaves the live table demoted until repaired).
 _STATE_TABLES = (
     "digests", "bloom", "front", "buckets", "pairs",
     "assign", "assign_delta", "params",
@@ -426,9 +427,7 @@ def _acquire_lease(
     import time
     import uuid
 
-    from .similarity import _hadoop_fs
-
-    fs, P = _hadoop_fs(spark, path)
+    fs, P = commit.filesystem(spark, path)
     lease = P(f"{path}/_LEASE")
     token = f"{owner or spark.sparkContext.applicationId}:{uuid.uuid4().hex}"
     if fs.exists(lease):
@@ -467,9 +466,7 @@ def _release_lease(spark, path: str, token: str | None = None) -> None:
     """Delete the lease — only if still held by ``token`` (a stealer
     that legitimately took an expired lease must not lose it to the
     dead writer's belated ``finally``)."""
-    from .similarity import _hadoop_fs
-
-    fs, P = _hadoop_fs(spark, path)
+    fs, P = commit.filesystem(spark, path)
     lease = P(f"{path}/_LEASE")
     if not fs.exists(lease):
         return
@@ -881,7 +878,7 @@ def ingest_pipeline_incremental(
     from ..scale import persisted, run_jobs
     from .dedup import _band_frame, _minhash_front, cluster_split
     from .sketches import bloom_build, bloom_maybe_keys
-    from .similarity import _staged_swap_recover, _tf_of
+    from .similarity import _tf_of
 
     spark = batch.sparkSession
     rows_per_band = num_hashes // bands
@@ -890,7 +887,7 @@ def ingest_pipeline_incremental(
     # demoted until SOMEONE probes — the ingest must not be the caller
     # that dies on a missing directory the contract says it repairs.
     for t in _STATE_TABLES:
-        _staged_swap_recover(spark, f"{path}/{t}")
+        commit.recover(spark, f"{path}/{t}")
     prm = _check_params(
         spark, path, k=k, num_hashes=num_hashes, bands=bands, seed=seed,
         threshold=threshold, train_permille=train_permille,
@@ -1223,9 +1220,8 @@ def ingest_state_compact(
     edges don't change connected components; duplicate postings only
     duplicate candidates that dedup away) but accumulates dead weight.
     This folds each table back to its canonical form with the same
-    staged-``_SUCCESS``-then-rename swap as the index compactors
-    (:func:`~.similarity._staged_swap`), entry recovery probe
-    included:
+    :func:`~data__converter_spark.commit.swap` as the index
+    compactors, ``commit.recover`` at entry included:
 
     - ``front``: one row per id (duplicates are bit-identical — the
       Arrow kernel is deterministic — so any one survives);
@@ -1257,10 +1253,9 @@ def ingest_state_compact(
     from pyspark.sql import functions as F
 
     from .sketches import bloom_build
-    from .similarity import _staged_swap, _staged_swap_recover
 
     for t in _STATE_TABLES:
-        _staged_swap_recover(spark, f"{path}/{t}")
+        commit.recover(spark, f"{path}/{t}")
     prm = (
         spark.read.schema(_PARAMS_SCHEMA)
         .parquet(f"{path}/params")
@@ -1287,6 +1282,11 @@ def ingest_state_compact(
 
         from ..scale import persisted, run_jobs
 
+        def _fold(t: str, df) -> None:
+            commit.swap(
+                spark, f"{path}/{t}", df.write.mode("overwrite").parquet
+            )
+
         front = spark.read.parquet(f"{path}/front")
         id_field = front.schema.fields[0]
         id_col = id_field.name
@@ -1296,11 +1296,9 @@ def ingest_state_compact(
             # Arrow kernel is deterministic), so the hash-aggregate
             # dedup (r15) picks the same row the old per-key
             # row_number window did, without the window's sort
-            lambda: _staged_swap(
-                front.dropDuplicates([id_col]),
-                f"{path}/front",
-            ),
-            lambda: _staged_swap(
+            lambda: _fold("front", front.dropDuplicates([id_col])),
+            lambda: _fold(
+                "buckets",
                 spark.read.schema(
                     T.StructType([
                         id_field,
@@ -1308,9 +1306,9 @@ def ingest_state_compact(
                         T.StructField("bucket", T.LongType()),
                     ])
                 ).parquet(f"{path}/buckets").distinct(),
-                f"{path}/buckets",
             ),
-            lambda: _staged_swap(
+            lambda: _fold(
+                "pairs",
                 spark.read.schema(
                     T.StructType([
                         T.StructField("id_a", id_field.dataType),
@@ -1318,23 +1316,22 @@ def ingest_state_compact(
                         T.StructField("jaccard", T.DoubleType()),
                     ])
                 ).parquet(f"{path}/pairs").distinct(),
-                f"{path}/pairs",
             ),
-            lambda: _staged_swap(
+            lambda: _fold(
+                "assign",
                 _current_assign(spark, path, id_field=id_field),
-                f"{path}/assign",
             ),
         )
         run_jobs(
-            lambda: _staged_swap(
+            lambda: _fold(
+                "digests",
                 spark.read.schema(_digests_schema(id_field))
                 .parquet(f"{path}/digests").distinct(),
-                f"{path}/digests",
             ),
-            lambda: _staged_swap(
+            lambda: _fold(
+                "assign_delta",
                 spark.read.schema(_delta_schema(id_field))
                 .parquet(f"{path}/assign_delta").limit(0),
-                f"{path}/assign_delta",
             ),
         )
         digests = spark.read.schema(_digests_schema(id_field)).parquet(
@@ -1351,15 +1348,16 @@ def ingest_state_compact(
             m_bits = max(
                 cur_m, 1 << max(10, math.ceil(math.log2(max(16 * n, 2))))
             )
-        _staged_swap(
+        _fold(
+            "bloom",
             bloom_build(dgd, "dg", m_bits, cur_k)
             .withColumn("m_bits", F.lit(int(m_bits)))
             .withColumn("k_hashes", F.lit(int(cur_k))),
-            f"{path}/bloom",
         )
         dgd.unpersist()
         prm["m_bits"] = int(m_bits)
-        _staged_swap(
+        _fold(
+            "params",
             spark.createDataFrame(
                 [tuple(prm[c] for c in (
                     "k", "num_hashes", "bands", "seed", "threshold",
@@ -1367,7 +1365,6 @@ def ingest_state_compact(
                 ))],
                 _PARAMS_SCHEMA,
             ),
-            f"{path}/params",
         )
     finally:
         _release_lease(spark, path, token)

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import commit
 from .dedup import cosine_col
 
 # All three entry points broadcast the probe set from the driver — the
@@ -1241,78 +1242,6 @@ def ann_index_delete(doc_ids: DataFrame, path: str) -> None:
     )
 
 
-def _hadoop_fs(spark, path: str):
-    """(fs, Path-class) pair for ``path``'s filesystem through the
-    Hadoop FS API (local, HDFS, s3a, ... — whatever the artifact
-    lives on)."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(spark._jsc.hadoopConfiguration()), jvm.org.apache.hadoop.fs.Path
-
-
-def _hadoop_path_exists(spark, path: str) -> bool:
-    """Filesystem-agnostic existence probe through the Hadoop FS API
-    (local, HDFS, s3a, ... — whatever the artifact lives on), instead
-    of read-and-catch, which logs an alarming analyzer stack for the
-    perfectly normal no-tombstones case."""
-    fs, P = _hadoop_fs(spark, path)
-    return fs.exists(P(path))
-
-
-def _staged_swap_recover(spark, table_path: str) -> None:
-    """Crash-recovery probe for :func:`_staged_swap`'s rename
-    sequence, run at the entry of every maintenance op that uses it.
-    Exactly one of these states can exist after a crash:
-
-    - staged COMPLETE (``_SUCCESS`` present) and live table missing
-      → the crash fell between the two renames: promote the staged
-      table (it is the committed new generation);
-    - backup present and live table missing (staged incomplete or
-      absent) → the crash fell after demoting the old table but the
-      new one never committed: restore the backup;
-    - backup present and live table present → the crash fell before
-      backup cleanup: delete the backup;
-    - staged present but INCOMPLETE (no ``_SUCCESS``) → a write died
-      mid-flight: delete the partial staging dir so a path glob can
-      never read it.
-    """
-    fs, P = _hadoop_fs(spark, table_path)
-    staged, bak = f"{table_path}__staged", f"{table_path}__bak"
-    has_live = fs.exists(P(table_path))
-    staged_done = fs.exists(P(f"{staged}/_SUCCESS"))
-    if staged_done and not has_live:
-        fs.rename(P(staged), P(table_path))
-        has_live = True
-    if fs.exists(P(bak)):
-        if has_live:
-            fs.delete(P(bak), True)
-        else:
-            fs.rename(P(bak), P(table_path))
-    if fs.exists(P(staged)):
-        fs.delete(P(staged), True)
-
-
-def _staged_swap(df: DataFrame, table_path: str) -> None:
-    """Atomically replace the parquet table at ``table_path`` with
-    ``df`` (which may READ from that same table — parquet can't
-    overwrite a table mid-scan): write to ``{table}__staged`` (the
-    ``_SUCCESS`` marker commits it), rename live → ``__bak``, rename
-    staged → live, delete the backup.  One data write (not the
-    write-then-rewrite double), and every intermediate crash state is
-    repaired by :func:`_staged_swap_recover` — callers must probe at
-    entry.  Renames go through the Hadoop FS API so the sequence
-    holds on whatever filesystem the artifact lives on."""
-    spark = df.sparkSession
-    fs, P = _hadoop_fs(spark, table_path)
-    staged, bak = f"{table_path}__staged", f"{table_path}__bak"
-    df.write.mode("overwrite").parquet(staged)
-    if fs.exists(P(table_path)):
-        fs.rename(P(table_path), P(bak))
-    fs.rename(P(staged), P(table_path))
-    if fs.exists(P(bak)):
-        fs.delete(P(bak), True)
-
-
 def ann_index_compact(spark, path: str) -> None:
     """Fold the tombstones into the cells/codes tables: rewrite both
     minus the deleted vids and clear the tombstone table.  The
@@ -1320,19 +1249,18 @@ def ann_index_compact(spark, path: str) -> None:
     tombstone fraction makes the query-time anti-join's broadcast
     side noticeable; until then deletes stay O(1).
 
-    Each table rewrite is a staged-``_SUCCESS``-then-rename swap
-    (:func:`_staged_swap`, the sequence ``compact_text_index_state``
-    established): one data write per table, no staging residue, and a
-    crash at any point leaves a state the entry-time recovery probe
-    repairs — never a partially-written live table.  The tombstone
+    Each table rewrite is a :func:`~data__converter_spark.commit.swap`:
+    one data write per table, no staging residue, and a crash at any
+    point leaves a state the entry-time ``commit.recover`` repairs —
+    never a partially-written live table.  The tombstone
     table is cleared only after BOTH swaps commit; a crash between
     the cells and codes swaps re-runs to completion on the next call
     because the surviving tombstones re-fold as a no-op anti-join
     against the already-compacted table."""
     tomb_path = f"{path}/tombstones"
     for t in ("cells", "codes"):
-        _staged_swap_recover(spark, f"{path}/{t}")
-    if not _hadoop_path_exists(spark, tomb_path):
+        commit.recover(spark, f"{path}/{t}")
+    if not commit.exists(spark, tomb_path):
         return  # nothing to fold
     from ..scale import run_jobs
 
@@ -1343,46 +1271,15 @@ def ann_index_compact(spark, path: str) -> None:
             spark.read.parquet(f"{path}/{t}")
             .join(F.broadcast(tomb), "vid", "left_anti")
         )
-        _staged_swap(kept, f"{path}/{t}")
+        commit.swap(
+            spark, f"{path}/{t}", kept.write.mode("overwrite").parquet
+        )
 
     # the two folds touch disjoint tables — overlap them (guide §2.6)
     run_jobs(lambda: _fold("cells"), lambda: _fold("codes"))
     spark.createDataFrame([], "vid bigint").write.mode(
         "overwrite"
     ).parquet(tomb_path)
-
-
-def _generation_swap_recover(spark, path: str) -> None:
-    """:func:`_staged_swap_recover`'s logic lifted to a whole ARTIFACT
-    DIRECTORY (all of an index's tables as one unit), committed by a
-    root-level ``_COMMIT`` marker written only after every table in
-    the new generation is complete — table-level ``_SUCCESS`` markers
-    can't commit a multi-table swap (a crash between table swaps
-    would mix generations: new books ranking old codes is silently
-    wrong, not just stale).  Crash states and their repairs:
-
-    - staged generation COMMITTED (root ``_COMMIT``) + live missing →
-      promote it;
-    - backup present + live missing, staged uncommitted → restore the
-      backup (the migration re-runs from scratch — recovery restores
-      a consistent artifact, it does not finish the migration);
-    - backup present + live present → drop the backup;
-    - staged present in any remaining case → drop it (uncommitted, or
-      committed-but-live-exists: the swap never started, rebuilding
-      is cheaper than reasoning about which is newer)."""
-    fs, P = _hadoop_fs(spark, path)
-    staged, bak = f"{path}__retrain", f"{path}__bak"
-    has_live = fs.exists(P(path))
-    if fs.exists(P(f"{staged}/_COMMIT")) and not has_live:
-        fs.rename(P(staged), P(path))
-        has_live = True
-    if fs.exists(P(bak)):
-        if has_live:
-            fs.delete(P(bak), True)
-        else:
-            fs.rename(P(bak), P(path))
-    if fs.exists(P(staged)):
-        fs.delete(P(staged), True)
 
 
 def ann_index_retrain(
@@ -1411,43 +1308,34 @@ def ann_index_retrain(
     and its sampling/encode arithmetic is byte-identical to the flat
     form, so either layout migrates to itself).
 
-    The swap is generation-atomic: the new index builds under
-    ``{path}__retrain``, a root ``_COMMIT`` marker lands only after
-    every table is written, then old → ``__bak`` → new → live →
-    backup dropped.  A crash anywhere leaves a state
-    :func:`_generation_swap_recover` (run at entry) repairs to a
-    CONSISTENT artifact — never mixed generations, because the four
-    tables move as one directory.  Determinism: same corpus + same
-    seed ⇒ the retrained books equal a fresh
-    :func:`ann_index_build` over the live set, so
+    The swap is generation-atomic: the whole artifact directory is one
+    :func:`~data__converter_spark.commit.swap` — the new index builds
+    in the staged directory, whose root ``_SUCCESS`` lands only after
+    every table is written, and the directory replaces live as one
+    unit.  A crash anywhere leaves a state ``commit.recover`` (run at
+    entry) repairs to a CONSISTENT artifact — never mixed
+    generations, because the four tables move as one directory.
+    Determinism: same corpus + same seed ⇒ the retrained books equal a
+    fresh :func:`ann_index_build` over the live set, so
     migrated-artifact queries == fresh-build queries exactly (the
     ``ann_retrain_query`` oracle pins this against the flat IVF-PQ
     SQL verbatim)."""
     spark = corpus.sparkSession
-    _generation_swap_recover(spark, path)
-    fs, P = _hadoop_fs(spark, path)
+    commit.recover(spark, path)
     live = corpus
-    if _hadoop_path_exists(spark, f"{path}/tombstones"):
+    if commit.exists(spark, f"{path}/tombstones"):
         tomb = spark.read.parquet(f"{path}/tombstones")
         live = corpus.join(
             F.broadcast(tomb),
             corpus[id_col] == tomb["vid"],
             "left_anti",
         )
-    partitioned = _hadoop_path_exists(spark, f"{path}/index")
-    staged = f"{path}__retrain"
+    partitioned = commit.exists(spark, f"{path}/index")
     build = ann_index_build_partitioned if partitioned else ann_index_build
-    build(
+    commit.swap(spark, path, lambda staged: build(
         live, staged, vec_col=vec_col, id_col=id_col,
         n_cells=n_cells, m=m, n_codes=n_codes, seed=seed,
-    )
-    fs.create(P(f"{staged}/_COMMIT")).close()
-    bak = f"{path}__bak"
-    if fs.exists(P(path)):
-        fs.rename(P(path), P(bak))
-    fs.rename(P(staged), P(path))
-    if fs.exists(P(bak)):
-        fs.delete(P(bak), True)
+    ))
 
 
 def ivf_pq_from_index(
@@ -1472,7 +1360,7 @@ def ivf_pq_from_index(
     :func:`_ivf_pq_rank`)."""
     cell_ids, cell_q, code_ids, Cs, _d0 = _read_ann_books(spark, path, m)
     cells = spark.read.parquet(f"{path}/cells")
-    if _hadoop_path_exists(spark, f"{path}/tombstones"):
+    if commit.exists(spark, f"{path}/tombstones"):
         tomb = spark.read.parquet(f"{path}/tombstones")
         cells = cells.join(F.broadcast(tomb), "vid", "left_anti")
     codes = spark.read.parquet(f"{path}/codes")
@@ -1612,7 +1500,7 @@ def ivf_pq_from_partitioned_index(
     idx = spark.read.parquet(f"{path}/index").filter(
         F.col("cell").isin(sorted(probed))
     )
-    if _hadoop_path_exists(spark, f"{path}/tombstones"):
+    if commit.exists(spark, f"{path}/tombstones"):
         tomb = spark.read.parquet(f"{path}/tombstones")
         idx = idx.join(F.broadcast(tomb), "vid", "left_anti")
     cells = idx.select("vid", "cell").distinct()

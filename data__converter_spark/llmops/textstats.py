@@ -129,21 +129,6 @@ def _stopword_hits(col: str = "text") -> Column:
     )
 
 
-def lang_scores(col: str = "text") -> dict[str, Column]:
-    """Per-language stopword-hit counts (the language-ID signal) as
-    separate columns — the diagnostic/convenience form. Each selected
-    column embeds its own copy of the hit-list expression, so a
-    projection of all languages re-tokenizes once per language (HOFs
-    are codegen-fallback; cross-column subexpression elimination is not
-    guaranteed). The hot path is :func:`lang_id_col`, which binds the
-    hit list once per row."""
-    hits = _stopword_hits(col)
-    return {
-        lang: F.size(F.filter(hits, lambda x: x == F.lit(lang)))
-        for lang in STOPWORDS
-    }
-
-
 def lang_id_col(col: str = "text", default: str = "und") -> Column:
     """Predicted language = argmax of stopword hits; ties broken by
     language-code order; zero hits -> ``default``.

@@ -22,10 +22,13 @@ knobs that need cooperation from the data layout or the query author:
 
 from __future__ import annotations
 
+import os
 import threading as _threading
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from . import commit
 
 
 #: Frames/RDDs cached via :func:`persisted`, awaiting release. Long-lived
@@ -128,6 +131,10 @@ def run_jobs(*thunks, max_workers: int | None = None) -> list:
     a thunk caches register on the CALLER's innermost scope, not the
     module-global list, so an enclosing scope still owns and releases
     them.  Results return in thunk order.
+
+    The pool holds ``max_workers`` threads, by default one per thunk up
+    to the host's CPU count — one thunk per OPTIMIZE bin must not mean
+    one driver thread per bin.
     """
     if len(thunks) == 1:
         return [thunks[0]()]
@@ -150,7 +157,8 @@ def run_jobs(*thunks, max_workers: int | None = None) -> list:
 
         return run
 
-    with ThreadPoolExecutor(max_workers or len(thunks)) as pool:
+    workers = max_workers or min(len(thunks), os.cpu_count() or 1)
+    with ThreadPoolExecutor(workers) as pool:
         futures = [pool.submit(_scoped(t)) for t in thunks]
         return [f.result() for f in futures]
 
@@ -330,11 +338,8 @@ def compact_parquet(
 
     Returns the number of output files requested.
     """
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(in_path)
-    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    summary = fs.getContentSummary(hpath)
-    total_bytes = summary.getLength()
+    fs, P = commit.filesystem(spark, in_path)
+    total_bytes = fs.getContentSummary(P(in_path)).getLength()
     n = max(1, -(-total_bytes // (target_mb * 1024 * 1024)))
 
     df = spark.read.parquet(in_path)
@@ -801,8 +806,6 @@ def optimize_incremental(
     ``(file, rows, bin_id, n_files_in_bin, action)`` with action in
     {'rewritten', 'kept'}.
     """
-    import os
-
     import pyarrow.parquet as pq
 
     if target_rows < 1:
@@ -909,30 +912,22 @@ def optimize_incremental(
         # Bins read disjoint member files and write disjoint staging
         # dirs — stage them OVERLAPPED (guide §2.6), then swap each in
         # serially: every new file is fully staged and moved live
-        # before any member dies, same crash contract as before (an
-        # interruption can leave a duplicate bin or a dead _staging
-        # dir — both ignored by the next run's inventory — never a
-        # missing row).
+        # before any member dies (an interruption can leave a
+        # duplicate bin or a dead _staging dir — both ignored by the
+        # next run's inventory — never a missing row).  Moves and
+        # deletes go through the commit module, so each file's Hadoop
+        # checksum file moves or dies with it.
         run_jobs(*[lambda b=b, m=m: _stage(b, m) for b, m in multi.items()])
-        import shutil
-
         for b, members in multi.items():
-            staging = os.path.join(table_path, f"_staging_bin_{b}")
-            part = [
-                p
-                for p in os.listdir(staging)
-                if p.endswith(".parquet") and not p.startswith((".", "_"))
-            ]
-            assert len(part) == 1, f"expected one staged file, got {part}"
-            os.replace(
-                os.path.join(staging, part[0]),
+            commit.publish_file(
+                spark,
+                os.path.join(table_path, f"_staging_bin_{b}"),
                 os.path.join(
                     table_path, f"optimized-g{gen:03d}-{b:05d}.parquet"
                 ),
             )
             for m in members:  # new file is live before any member dies
-                os.remove(os.path.join(table_path, m))
-            shutil.rmtree(staging)
+                commit.delete(spark, os.path.join(table_path, m))
 
     report = [
         (

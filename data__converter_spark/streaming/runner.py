@@ -13,6 +13,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .. import commit
+
 
 def read_events_stream(
     spark: SparkSession,
@@ -89,13 +91,11 @@ def run_to_parquet(
 def _crash_safe_merge(table_path: str, combine, epoch_aware: bool | None = None):
     """foreachBatch body factory: read the parquet table (None when it
     does not exist yet), compute ``combine(base, batch)``, and swap the
-    result in crash-safely.  The swap is safe at every interruption
-    point: the old table is renamed aside (never deleted) only AFTER
-    the staging write fully commits (``_SUCCESS``), and the body first
-    recovers any half-finished swap — a complete staging dir with no
-    live table is the committed merge of the epoch being replayed, so
-    it is promoted before the base read rather than discarded (which
-    would silently drop every previously merged key).  Exactly-once =
+    result in with :func:`~data__converter_spark.commit.swap`.  The
+    body first runs ``commit.recover`` — a committed staged copy with
+    no live table is the merge of the epoch being replayed, so it is
+    promoted before the base read rather than discarded (which would
+    silently drop every previously merged key).  Exactly-once =
     this idempotent body × the checkpoint WAL: a replayed epoch
     re-merges and must be a no-op for the caller's ``combine``.
 
@@ -110,11 +110,7 @@ def _crash_safe_merge(table_path: str, combine, epoch_aware: bool | None = None)
     table swap entirely, so a duplicate delivery costs no I/O.
     """
     import inspect
-    import os
-    import shutil
 
-    tmp = f"{table_path}.__staging__"
-    bak = f"{table_path}.__bak__"
     if epoch_aware is None:
         params = list(inspect.signature(combine).parameters.values())
         if any(p.kind == inspect.Parameter.VAR_POSITIONAL for p in params):
@@ -149,17 +145,10 @@ def _crash_safe_merge(table_path: str, combine, epoch_aware: bool | None = None)
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        # -- crash recovery: finish or discard a half-done swap --------
-        if not os.path.isdir(table_path) and os.path.exists(
-            os.path.join(tmp, "_SUCCESS")
-        ):
-            os.replace(tmp, table_path)
-        if os.path.isdir(bak):
-            shutil.rmtree(bak)  # completed swap whose cleanup didn't run
-        # -- merge ----------------------------------------------------
+        commit.recover(spark, table_path)
         base = (
             spark.read.parquet(table_path)
-            if os.path.isdir(table_path)
+            if commit.exists(spark, table_path)
             else None
         )
         merged = (
@@ -169,14 +158,7 @@ def _crash_safe_merge(table_path: str, combine, epoch_aware: bool | None = None)
         )
         if merged is None:
             return  # epoch-aware combine declared a replay: free no-op
-        merged.write.mode("overwrite").parquet(tmp)
-        # staging is durable (_SUCCESS) before the old table moves; the
-        # no-live-table window is covered by the recovery above.
-        if os.path.isdir(table_path):
-            os.replace(table_path, bak)
-        os.replace(tmp, table_path)
-        if os.path.isdir(bak):
-            shutil.rmtree(bak)
+        commit.swap(spark, table_path, merged.write.mode("overwrite").parquet)
 
     return merge
 
@@ -588,33 +570,20 @@ def compact_text_index_state(spark: SparkSession, table_path: str) -> None:
     between stream runs when the retraction fraction makes the
     read-time netting aggregate noticeable; a takedown-heavy state
     otherwise accumulates one signed row per deleted (doc, term)
-    forever.  The rewrite uses the same staged-``_SUCCESS``-then-swap
-    sequence as the micro-batch sink, and an entry-time recovery
-    probe repairs every crash state of a previous run — including
-    the window between the two ``os.replace`` calls, which leaves NO
-    table at ``table_path`` but a COMPLETE staged copy beside it
-    (ADVICE r11: without the probe, re-invocation silently returned
-    on the missing dir and a direct reader failed).  After the probe,
-    a crash at any point leaves either the old or the new table."""
-    import os
-    import shutil
-
+    forever.  The rewrite is the same
+    :func:`~data__converter_spark.commit.swap` as the micro-batch
+    sink, and ``commit.recover`` at entry repairs every crash state of
+    a previous run — including the one between demote and promote,
+    which leaves NO table at ``table_path`` but a committed staged
+    copy beside it (ADVICE r11: without the probe, re-invocation
+    silently returned on the missing dir and a direct reader failed).
+    ``table_path`` may be any Hadoop path or URI (``file://``,
+    ``hdfs://``, ...).  After the probe, a crash at any point leaves
+    either the old or the new table."""
     from pyspark.sql import functions as F
 
-    # recovery probe: promote a committed staged table if the crash
-    # fell between the renames; restore the backup if the staged copy
-    # never committed; clear leftovers either way.
-    tmp, bak = f"{table_path}.__staging__", f"{table_path}.__bak__"
-    if not os.path.isdir(table_path):
-        if os.path.exists(os.path.join(tmp, "_SUCCESS")):
-            os.replace(tmp, table_path)
-        elif os.path.isdir(bak):
-            os.replace(bak, table_path)
-    if os.path.isdir(bak):
-        shutil.rmtree(bak)
-    if os.path.isdir(tmp):
-        shutil.rmtree(tmp)
-    if not os.path.isdir(table_path):
+    commit.recover(spark, table_path)
+    if not commit.exists(spark, table_path):
         return
     base = spark.read.parquet(table_path)
     epoch = base.agg(F.max("__epoch__")).collect()[0][0]
@@ -624,10 +593,7 @@ def compact_text_index_state(spark: SparkSession, table_path: str) -> None:
         .filter(F.col("tf") > 0)
         .withColumn("__epoch__", F.lit(epoch).cast("bigint"))
     )
-    netted.write.mode("overwrite").parquet(tmp)
-    os.replace(table_path, bak)
-    os.replace(tmp, table_path)
-    shutil.rmtree(bak)
+    commit.swap(spark, table_path, netted.write.mode("overwrite").parquet)
 
 
 def run_ingest_update(
@@ -682,7 +648,6 @@ def run_ingest_update(
     from pyspark.sql import functions as F
 
     from ..llmops.pipeline import ingest_pipeline_incremental
-    from ..llmops.similarity import _hadoop_path_exists
 
     receipts = f"{path}/receipts"
     last_batch = f"{path}/last_batch"
@@ -691,13 +656,13 @@ def run_ingest_update(
     # stream) from "feed not created because epoch 0 crashed in the
     # commit-vs-append window" (heal from last_batch): the checkpoint
     # exists iff a prior run of this stream wrote offsets.
-    fresh_start = not _hadoop_path_exists(
+    fresh_start = not commit.exists(
         stream_df.sparkSession, f"{checkpoint}/offsets"
     )
 
     def body(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        have_receipts = _hadoop_path_exists(spark, receipts)
+        have_receipts = commit.exists(spark, receipts)
         if have_receipts:
             applied = (
                 spark.read.parquet(receipts)
@@ -713,7 +678,7 @@ def run_ingest_update(
                     "checkpoint. Resume with the original checkpoint, or "
                     "point the fresh checkpoint at a fresh state path."
                 )
-        if (have_receipts or not fresh_start) and _hadoop_path_exists(
+        if (have_receipts or not fresh_start) and commit.exists(
             spark, last_batch
         ):
             lb = spark.read.parquet(last_batch)

@@ -3397,9 +3397,9 @@ def q_ann_retrain_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     against them — the exact staleness ann_recall_after_append
     audits — and then the books RETRAIN on the full current corpus,
     re-encoding everything into a new artifact generation that swaps
-    in atomically (root _COMMIT marker, old generation demoted then
-    dropped — never mixed books/codes).  Oracle: the
-    similarity_ivf_pq_topk SQL VERBATIM — retrain-on-current-corpus
+    in atomically (one commit.swap of the whole artifact directory,
+    old generation demoted then dropped — never mixed books/codes).
+    Oracle: the similarity_ivf_pq_topk SQL VERBATIM — retrain-on-current-corpus
     == fresh-build-on-current-corpus, so the migrated artifact must
     reproduce the full-corpus-books rankings bit for bit."""
     from .llmops.similarity import (
@@ -10497,6 +10497,7 @@ def q_optimize_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyarrow.parquet as pq
     from pyspark.sql import Observation
 
+    from . import commit
     from .compare import fingerprint_exprs, table_fingerprint
     from .scale import optimize_incremental
 
@@ -10534,18 +10535,12 @@ def q_optimize_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         if not d.startswith("__pl__="):
             continue
         lang = urllib.parse.unquote(d[len("__pl__=") :])
-        pdir = os.path.join(staging, d)
-        part = [
-            p
-            for p in os.listdir(pdir)
-            if p.endswith(".parquet") and not p.startswith((".", "_"))
-        ]
-        assert len(part) == 1, f"expected one file per lang, got {part}"
-        os.replace(
-            os.path.join(pdir, part[0]),
+        commit.publish_file(
+            spark,
+            os.path.join(staging, d),
             os.path.join(table, f"{lang}.parquet"),
         )
-    shutil.rmtree(staging)
+    commit.delete(spark, staging)
     fp_before = obs.get
     # total row count from the freshly written footers — driver-side
     # metadata, no Spark job (the table holds exactly docs' rows)

@@ -2505,7 +2505,7 @@ def test_ann_index_retrain_migration_lifecycle(spark, tmp_path):
         assert got_book == want_book
     assert recall(retrained) >= recall(drifted)
     # no residue, no tombstones, no mixed generations
-    assert not os.path.isdir(f"{path}__retrain")
+    assert not os.path.isdir(f"{path}__staged")
     assert not os.path.isdir(f"{path}__bak")
 
     # tombstones fold: delete some ids, retrain, they are gone from
@@ -2526,8 +2526,8 @@ def test_ann_index_retrain_migration_lifecycle(spark, tmp_path):
     want = key(
         ivf_pq_from_index(spark, path, probes, k=5, nprobe=2, m=2).collect()
     )
-    shutil.copytree(path, f"{path}__retrain")
-    open(f"{path}__retrain/_COMMIT", "w").close()
+    shutil.copytree(path, f"{path}__staged")
+    open(f"{path}__staged/_SUCCESS", "w").close()
     shutil.rmtree(path)
     ann_index_retrain(full, path, n_cells=4, m=2, n_codes=8, seed=42)
     assert key(
@@ -2537,7 +2537,7 @@ def test_ann_index_retrain_migration_lifecycle(spark, tmp_path):
     # injected crash 2: backup only (staged uncommitted) → restored
     shutil.copytree(path, f"{path}__bak")
     shutil.rmtree(path)
-    os.makedirs(f"{path}__retrain")  # uncommitted partial
+    os.makedirs(f"{path}__staged")  # uncommitted partial
     ann_index_retrain(full, path, n_cells=4, m=2, n_codes=8, seed=42)
     assert key(
         ivf_pq_from_index(spark, path, probes, k=5, nprobe=2, m=2).collect()

@@ -201,6 +201,22 @@ def test_write_outputs_and_timestamp_name(spark, pdf_dir, tmp_path):
     assert re.fullmatch(r"doc_\d{4}-\d{2}-\d{2}_\d{4}\.pdf", name)
 
 
+def test_write_outputs_of_split_runs_no_job(spark, pdf_dir, tmp_path):
+    """split_pdf's outputs are a driver-side local relation: writing
+    them submits no Spark job, and each file holds its row's bytes."""
+    df = pdf.read_pdfs(spark, str(pdf_dir / "*.pdf"))
+    out = pdf.split_pdf(
+        df, str(pdf_dir / "a.pdf"), "1,2-3", codec=pdf.FakePdfCodec()
+    )
+    want = {r.name: bytes(r.content) for r in out.collect()}
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    before = sched.nextJobId()
+    paths = pdf.write_outputs(out, str(tmp_path / "outs"))
+    assert sched.nextJobId() - before == 0
+    got = {p.rsplit("/", 1)[-1]: open(p, "rb").read() for p in paths}
+    assert got == want and len(got) == 2
+
+
 def test_media_from_documents_matches_stub_decode(spark):
     import hashlib
 

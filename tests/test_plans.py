@@ -391,6 +391,29 @@ def test_no_bare_persist_in_package():
     assert not offenders, f"bare persist/cache outside scale.persisted: {offenders}"
 
 
+def test_swap_protocol_lives_only_in_commit_module():
+    """Every stage/backup/swap goes through commit.py: no other module
+    renames with os.replace/os.rename/fs.rename or spells the staged or
+    backup suffix itself."""
+    import pathlib
+
+    import data__converter_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    banned = (
+        "os.replace(", "os.rename(", "fs.rename(", '"__bak"', '"__staged"'
+    )
+    offenders = [
+        f"{py.relative_to(root)}:{i}: {b}"
+        for py in root.rglob("*.py")
+        if py.name != "commit.py"
+        for i, line in enumerate(py.read_text().splitlines(), 1)
+        for b in banned
+        if b in line
+    ]
+    assert not offenders, f"swap protocol outside commit.py: {offenders}"
+
+
 def test_no_query_uses_rowwise_python_or_cartesian(spark):
     """Blanket net over EVERY registered query: no row-at-a-time Python
     eval (BatchEvalPython — Arrow/mapInPandas nodes are fine) and no

@@ -203,6 +203,30 @@ def test_run_jobs_thunks_inherit_callers_persist_scope(spark, orders):
     assert not holder["df"].storageLevel.useMemory
 
 
+def test_run_jobs_default_pool_is_bounded_by_cpu_count(monkeypatch):
+    """One thunk per OPTIMIZE bin must not mean one driver thread per
+    bin: by default at most os.cpu_count() thunks run at once."""
+    import os
+    import threading
+    import time
+
+    cap = 2
+    monkeypatch.setattr(os, "cpu_count", lambda: cap)
+    lock = threading.Lock()
+    live = {"now": 0, "max": 0}
+
+    def thunk():
+        with lock:
+            live["now"] += 1
+            live["max"] = max(live["max"], live["now"])
+        time.sleep(0.05)
+        with lock:
+            live["now"] -= 1
+
+    scale.run_jobs(*[thunk] * (2 * cap + 1))
+    assert live["max"] == cap
+
+
 def test_zonemap_prune_is_conservative(spark, orders):
     """Pruned scan == direct filter, on BOTH a clustered shard key
     (skips most shards) and an uncorrelated one (skips none) — the
@@ -614,6 +638,30 @@ def test_optimize_incremental_rewrites_only_planned_bins(spark, tmp_path):
     }
     zs = [keyed[i] for i in range(len(a_vals))]
     assert zs == sorted(zs)
+
+
+def test_optimize_incremental_leaves_no_orphan_checksums(spark, tmp_path):
+    """OPTIMIZE of a Spark-written multi-file table: members die with
+    their Hadoop .crc files, the new file's .crc moves in with it, and
+    the row multiset is unchanged."""
+    import os
+
+    table = str(tmp_path / "t")
+    spark.range(0, 400).select(
+        F.col("id").alias("a"), (F.col("id") % 7).alias("b")
+    ).repartition(4).write.parquet(table)
+    before = sorted(map(tuple, spark.read.parquet(table).collect()))
+    assert sum(n.endswith(".parquet") for n in os.listdir(table)) == 4
+
+    scale.optimize_incremental(spark, table, ["a"], 10_000).collect()
+    names = set(os.listdir(table))
+    assert sum(n.endswith(".parquet") for n in names) == 1
+    orphans = [
+        n for n in names
+        if n.startswith(".") and n.endswith(".crc") and n[1:-4] not in names
+    ]
+    assert orphans == []
+    assert sorted(map(tuple, spark.read.parquet(table).collect())) == before
 
 
 def test_optimize_incremental_is_idempotent_and_validates(spark, tmp_path):

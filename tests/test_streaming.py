@@ -364,9 +364,9 @@ def test_cdc_upsert_recovers_half_finished_swap(spark, tmp_path):
 
     # simulate the mid-swap crash: staging fully committed (_SUCCESS),
     # old table renamed aside, promotion never happened
-    os.rename(table, f"{table}.__staging__")
-    os.makedirs(f"{table}.__bak__")
-    assert os.path.exists(f"{table}.__staging__/_SUCCESS")
+    os.rename(table, f"{table}__staged")
+    os.makedirs(f"{table}__bak")
+    assert os.path.exists(f"{table}__staged/_SUCCESS")
 
     run_cdc_upsert(
         read_events_stream(spark, SF), table, str(tmp_path / "ckpt2"),
@@ -377,13 +377,15 @@ def test_cdc_upsert_recovers_half_finished_swap(spark, tmp_path):
     assert out_ids - kept == {
         r["event_id"] for r in batch.select("event_id").distinct().collect()
     }
-    assert not os.path.exists(f"{table}.__bak__")
-    assert not os.path.exists(f"{table}.__staging__")
+    assert not os.path.exists(f"{table}__bak")
+    assert not os.path.exists(f"{table}__staged")
     shutil.rmtree(table, ignore_errors=True)
 
 
-def test_cdc_upsert_kill_between_renames_recovers(spark, tmp_path):
-    """Kill-point drive of the swap itself: os.replace is patched to
+def test_cdc_upsert_kill_between_renames_recovers(
+    spark, tmp_path, monkeypatch
+):
+    """Kill-point drive of the swap itself: commit.rename is patched to
     die BETWEEN the rename-aside and the staging promotion (the window
     the round-5 recovery code covers but no test exercised). The killed
     run leaves no live table; the rerun over the same checkpoint must
@@ -393,6 +395,7 @@ def test_cdc_upsert_kill_between_renames_recovers(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
+    from data__converter_spark import commit
     from data__converter_spark.streaming.runner import (
         read_events_stream,
         run_cdc_upsert,
@@ -410,27 +413,25 @@ def test_cdc_upsert_kill_between_renames_recovers(spark, tmp_path):
     kept = {r["event_id"] for r in spark.read.parquet(table).collect()}
     assert kept and all(k < 0 for k in kept)
 
-    real_replace = os.replace
+    real_rename = commit.rename
     calls = {"n": 0}
 
-    def dying_replace(src, dst):
+    def dying_rename(spark, src, dst):
         calls["n"] += 1
         if calls["n"] == 2:
             raise RuntimeError("simulated crash between the two renames")
-        real_replace(src, dst)
+        real_rename(spark, src, dst)
 
-    os.replace = dying_replace
-    try:
+    with monkeypatch.context() as m:
+        m.setattr(commit, "rename", dying_rename)
         with pytest.raises(Exception, match="simulated crash"):
             run_cdc_upsert(
                 read_events_stream(spark, SF), table, ckpt,
                 key="event_id", order_col="event_id",
             )
-    finally:
-        os.replace = real_replace
     # the crash window: old table renamed aside, staging committed
     assert not os.path.isdir(table)
-    assert os.path.exists(f"{table}.__staging__/_SUCCESS")
+    assert os.path.exists(f"{table}__staged/_SUCCESS")
 
     run_cdc_upsert(
         read_events_stream(spark, SF), table, ckpt,
@@ -441,19 +442,22 @@ def test_cdc_upsert_kill_between_renames_recovers(spark, tmp_path):
     assert out_ids - kept == {
         r["event_id"] for r in batch.select("event_id").distinct().collect()
     }
-    assert not os.path.exists(f"{table}.__bak__")
-    assert not os.path.exists(f"{table}.__staging__")
+    assert not os.path.exists(f"{table}__bak")
+    assert not os.path.exists(f"{table}__staged")
     shutil.rmtree(table, ignore_errors=True)
 
 
-def test_cdc_upsert_kill_before_bak_cleanup_recovers(spark, tmp_path):
+def test_cdc_upsert_kill_before_bak_cleanup_recovers(
+    spark, tmp_path, monkeypatch
+):
     """The second interruption window: both renames completed, the
     crash hits before the old-table cleanup. The table is already live,
-    so the rerun must just sweep the leftover .__bak__ and replay the
+    so the rerun must just sweep the leftover __bak and replay the
     epoch without duplicating or losing rows."""
     import os
     import shutil
 
+    from data__converter_spark import commit
     from data__converter_spark.streaming.runner import (
         read_events_stream,
         run_cdc_upsert,
@@ -464,24 +468,22 @@ def test_cdc_upsert_kill_before_bak_cleanup_recovers(spark, tmp_path):
     batch = spark.read.parquet(f"{SF}/events.parquet")
     spark.read.parquet(f"{SF}/events.parquet").limit(3).write.parquet(table)
 
-    real_rmtree = shutil.rmtree
+    real_delete = commit.delete
 
-    def dying_rmtree(path, *a, **kw):
-        if path == f"{table}.__bak__":
+    def dying_delete(spark, path):
+        if path == f"{table}__bak":
             raise RuntimeError("simulated crash before bak cleanup")
-        real_rmtree(path, *a, **kw)
+        real_delete(spark, path)
 
-    shutil.rmtree = dying_rmtree
-    try:
+    with monkeypatch.context() as m:
+        m.setattr(commit, "delete", dying_delete)
         with pytest.raises(Exception, match="simulated crash"):
             run_cdc_upsert(
                 read_events_stream(spark, SF), table, ckpt,
                 key="event_id", order_col="event_id",
             )
-    finally:
-        shutil.rmtree = real_rmtree
     # the crash window: swap done (table live), bak not yet swept
-    assert os.path.isdir(table) and os.path.isdir(f"{table}.__bak__")
+    assert os.path.isdir(table) and os.path.isdir(f"{table}__bak")
 
     run_cdc_upsert(
         read_events_stream(spark, SF), table, ckpt,
@@ -489,7 +491,7 @@ def test_cdc_upsert_kill_before_bak_cleanup_recovers(spark, tmp_path):
     )
     out = spark.read.parquet(table)
     assert out.count() == batch.select("event_id").distinct().count()
-    assert not os.path.exists(f"{table}.__bak__")
+    assert not os.path.exists(f"{table}__bak")
     shutil.rmtree(table, ignore_errors=True)
 
 
@@ -1420,9 +1422,34 @@ def test_compact_text_index_state_preserves_index_and_epoch_guard(spark, tmp_pat
     assert s3.filter(F.col("match_id") == 3).count() == 1
 
 
+def test_compact_text_index_state_on_file_uri(spark, tmp_path):
+    """The compactor works on any Hadoop path, not only a bare local
+    one: a ``file://`` URI table compacts in place."""
+    from pyspark.sql import functions as F
+
+    from data__converter_spark.streaming.runner import (
+        _text_index_combine,
+        compact_text_index_state,
+    )
+
+    combine = _text_index_combine("text", "doc_id", sign_col="sign")
+    schema = "doc_id long, text string, sign long"
+    b0 = spark.createDataFrame([(1, "cat mat", 1), (2, "dog", 1)], schema)
+    b1 = spark.createDataFrame([(1, None, -1)], schema)
+    uri = (tmp_path / "tf_state").as_uri()
+    assert uri.startswith("file:///")
+    combine(combine(None, b0, 0), b1, 1).write.parquet(uri)
+    n_before = spark.read.parquet(uri).count()
+    compact_text_index_state(spark, uri)
+    after = spark.read.parquet(uri)
+    assert after.count() < n_before
+    assert after.filter(F.col("match_id") == 1).count() == 0
+    assert sorted(r.name for r in tmp_path.iterdir()) == ["tf_state"]
+
+
 def test_compact_text_index_state_crash_recovery_probe(spark, tmp_path):
     """r12 (ADVICE r11): a crash between compact_text_index_state's
-    two os.replace calls leaves NO table but a committed staged copy;
+    demote and promote renames leaves NO table but a committed staged copy;
     re-invoking the compactor must promote it (previously it silently
     returned on the missing dir).  A backup-only state restores; a
     partial staging dir is dropped."""
@@ -1453,7 +1480,7 @@ def test_compact_text_index_state_crash_recovery_probe(spark, tmp_path):
         assert s.collect() == ws
 
     # crash between the replaces: table gone, staged committed
-    tmp = f"{table}.__staging__"
+    tmp = f"{table}__staged"
     shutil.copytree(table, tmp)
     shutil.rmtree(table)
     assert os.path.exists(f"{tmp}/_SUCCESS")
@@ -1462,7 +1489,7 @@ def test_compact_text_index_state_crash_recovery_probe(spark, tmp_path):
     check()
 
     # backup-only (staged never committed): restore the backup
-    bak = f"{table}.__bak__"
+    bak = f"{table}__bak"
     shutil.copytree(table, bak)
     shutil.rmtree(table)
     compact_text_index_state(spark, table)

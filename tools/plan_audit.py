@@ -125,7 +125,7 @@ SHOWCASE = [
     ("ingest_incremental", "steady-state ingest: batch text is the ONLY text read (one Arrow pass over the batch front); batch-vs-corpus candidates come from a bucket join against the standing postings table (batch side broadcast); corpus-internal pairs read pre-verified from the state; the CC relabel runs over a BATCH-SIZED graph (new pairs + touched clusters' star edges from the standing assign table) — the standing pair graph is never rescanned; since r14 every per-batch state write is batch-sized too (the bloom OR-in is an append of the batch's positions, not a rewrite of the corpus-sized table)"),
     ("ingest_reassign", "merge-shaped ingest receipts: the standing assign table reads as base ∪ latest-per-doc delta with an r14 digest-membership filter hiding uncommitted-batch survivor rows (delta ids broadcast against the scanned digests table — every probe broadcasts the batch-sized side, the corpus-scale base/digests are scanned, never shuffled); reassignments were computed on the batch-sized star graph and appended, so the returned plan is exactly that base+delta read"),
     ("ingest_compact_resize", "bloom lifecycle: the compactor folds every state table through the staged swap and rebuilds the membership sketch at auto-sized geometry carried in the table's own columns; the post-resize ingest receipt plan is a bare FileScan of the durable batch receipt"),
-    ("ann_retrain_query", "the drift-alarm response: retrain = ann_index_build's two Arrow passes over the current corpus (books ride the task closure, vectors never shuffle) into a staged generation, then a root-_COMMIT-marked directory swap — the query side is the standard stored-artifact scan + broadcast probe→cell pruning, identical to the fresh-build plan"),
+    ("ann_retrain_query", "the drift-alarm response: retrain = ann_index_build's two Arrow passes over the current corpus (books ride the task closure, vectors never shuffle) into a staged generation, then one commit.swap of the whole generation directory (root _SUCCESS marks it committed) — the query side is the standard stored-artifact scan + broadcast probe→cell pruning, identical to the fresh-build plan"),
 ]
 
 
