@@ -25,11 +25,18 @@ from __future__ import annotations
 from collections.abc import Callable
 
 _STAGED, _BAK = "__staged", "__bak"
+# py4j gateway -> org.apache.hadoop.fs.Path. Each step of the walk
+# ``spark._jvm.org.apache.hadoop.fs.Path`` is a py4j round trip, so the
+# class resolves once per gateway; a relaunched gateway resolves anew.
+_PATH_CLASS: dict = {}
 
 
 def filesystem(spark, path: str):
     """(fs, Path class) for ``path``'s Hadoop filesystem."""
-    P = spark._jvm.org.apache.hadoop.fs.Path
+    gateway = spark.sparkContext._gateway
+    P = _PATH_CLASS.get(gateway)
+    if P is None:
+        P = _PATH_CLASS[gateway] = spark._jvm.org.apache.hadoop.fs.Path
     return P(path).getFileSystem(spark._jsc.hadoopConfiguration()), P
 
 

@@ -19,10 +19,10 @@ reference file:line for the judge's parity check):
 - S8/S9/S10 XML: element -> row, attributes as ``@name`` columns,
   nested single children flattened to dotted paths; auto-detection
   finds any tag with >=2 same-named children (FileUploader.tsx:65-120,
-  random/page.tsx:143-172). Implemented with stdlib etree inside
-  ``flatMap`` over whole-file rows — files are the unit of parallelism
-  (XML is not splittable without a record-aware reader), which matches
-  how a 100 TB corpus of many XML files distributes.
+  random/page.tsx:143-172). XML is not splittable without a
+  record-aware reader, so each file parses whole in one process: one
+  ``binaryFile`` scan collects the bytes and stdlib etree parses them
+  on the driver into an Arrow local frame (no Python worker).
 - S7 Excel: pandas bridge (openpyxl), gated behind import-try, else
   the stdlib ``xlsx_lite`` codec; either way the sheets parse on the
   driver and reach Spark as Arrow local frames (no Python worker).
@@ -30,7 +30,7 @@ reference file:line for the judge's parity check):
   at-scale substrate (SURVEY §7.3.5).
 - S11 encodings: utf-8 / euc-kr / shift_jis / iso-8859-1
   (FileUploader.tsx:233,312-314) via the reader ``encoding`` option;
-  for XML, decoded from binaryFile bytes.
+  charsets Spark lacks (and XML) decode on the driver with Python codecs.
 
 All readers return typed DataFrames; the missing-field -> ``''``
 contract is applied by writers, not here (SURVEY §1.4).
@@ -42,7 +42,7 @@ import codecs
 import re
 from collections import Counter
 
-from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -265,75 +265,70 @@ def _read_csv_python(
 
     Also reproduces the reference's exact ragged-row contract
     (compare/page.tsx:139-150): short rows pad with ``''``, extra cells
-    become ``col{n}`` columns. One task per file (the parallel unit is
-    the file — same distribution story as XML).
+    become ``col{n}`` columns, and a column another file lacks reads
+    ``''``. Each file decodes and parses whole on the driver (see
+    :func:`_whole_files`), so the input is bounded by
+    ``spark.driver.maxResultSize``; at scale, re-encode to utf-8 and use
+    the splittable native reader.
     """
     import csv as _csv
     import io as _io
 
-    binary = spark.read.format("binaryFile").load(path).select("path", "content")
+    rows: list[dict] = []
+    for text in _whole_files(spark, path, encoding, "strict"):
+        rdr = _csv.reader(_io.StringIO(text), delimiter=sep, quotechar='"')
+        lines = [cells for cells in rdr if any(c.strip() for c in cells)]
+        if not lines:
+            continue
+        if header:
+            cols, body = [c.strip() for c in lines[0]], lines[1:]
+        else:
+            cols = [f"col{i}" for i in range(len(lines[0]))]
+            body = lines
+        for cells in body:
+            d: dict = {}
+            for i, c in enumerate(cells):
+                name = cols[i] if i < len(cols) else f"col{i}"
+                d[name] = c.strip()
+            for name in cols[len(cells):]:
+                d[name] = ""
+            rows.append(d)
+    return _frame(spark, rows, "")
 
-    def parse(rows):
-        for r in rows:
-            text = bytes(r.content).decode(encoding)
-            rdr = _csv.reader(_io.StringIO(text), delimiter=sep, quotechar='"')
-            lines = [cells for cells in rdr if any(c.strip() for c in cells)]
-            if not lines:
-                continue
-            if header:
-                cols, body = [c.strip() for c in lines[0]], lines[1:]
-            else:
-                cols = [f"col{i}" for i in range(len(lines[0]))]
-                body = lines
-            for cells in body:
-                d: dict = {}
-                for i, c in enumerate(cells):
-                    name = cols[i] if i < len(cols) else f"col{i}"
-                    d[name] = c.strip()
-                for name in cols[len(cells):]:
-                    d[name] = ""
-                yield d
 
-    dicts = _persisted(binary.rdd.mapPartitions(parse))
-    keys = _ordered_union_keys(dicts)
-    schema = _string_schema(keys)
-    return spark.createDataFrame(
-        dicts.map(lambda d: tuple(d.get(k, "") for k in keys)), schema
+def _whole_files(
+    spark: SparkSession, path: str, encoding: str, errors: str
+) -> list[str]:
+    """Decoded contents of every data file under ``path`` (a file, a
+    directory or a glob, listed by Spark's own file index through one
+    ``binaryFile`` scan), largest first with the path breaking ties —
+    the order Spark's partition planning gives a scan, so multi-file
+    column and row order follow the scan. The bytes reach the driver
+    through ``collect``'s socket, so ``spark.driver.maxResultSize``
+    bounds the input. For formats parsed whole by one process (XML, a
+    Python-codec CSV) this costs only the parallelism across the files
+    of a glob; the convert tool passes single files."""
+    scan = spark.read.format("binaryFile").load(path)
+    files = sorted(
+        scan.select("path", "length", "content").collect(),
+        key=lambda r: (-r.length, r.path),
     )
+    return [bytes(r.content).decode(encoding, errors) for r in files]
 
 
-def _persisted(rdd):
-    """Cache a parsed RDD that feeds two passes (schema + data) so the
-    input decodes once, spilling to disk rather than recomputing."""
-    from ..scale import persisted
+def _frame(spark: SparkSession, rows: list[dict], missing: str | None) -> DataFrame:
+    """All-string frame over ``rows``: the columns are the first-seen
+    union of their keys and a key a row lacks reads ``missing``. Spark
+    turns the Arrow table into a local relation in the JVM: no Python
+    worker runs and building the frame submits no job."""
+    import pyarrow as pa
 
-    return persisted(rdd)
-
-
-def _ordered_union_keys(dicts_rdd) -> list[str]:
-    """First-seen-ordered union of dict keys, computed executor-side.
-
-    Each partition reduces its rows to one ordered distinct key list, so
-    the driver receives O(partitions x schema_width) small lists — never
-    one object per row (the anti-pattern that OOMs a driver at 100 TB).
-    """
-
-    def part_keys(idx, it):
-        seen: dict = {}
-        for d in it:
-            for k in d:
-                if k not in seen:
-                    seen[k] = None
-        yield (idx, list(seen))
-
-    keys: list[str] = []
-    for _, ks in sorted(
-        dicts_rdd.mapPartitionsWithIndex(part_keys).collect(), key=lambda t: t[0]
-    ):
-        for k in ks:
-            if k not in keys:
-                keys.append(k)
-    return keys
+    keys = list(dict.fromkeys(k for row in rows for k in row))
+    table = pa.Table.from_arrays(
+        [pa.array([row.get(k, missing) for row in rows], pa.string()) for k in keys],
+        names=keys,
+    )
+    return spark.createDataFrame(table, _string_schema(keys))
 
 
 def read_table_auto(spark: SparkSession, path: str, encoding: str = "utf-8") -> DataFrame:
@@ -510,7 +505,7 @@ def read_json(spark: SparkSession, path: str, encoding: str = "utf-8") -> DataFr
 
 
 # ---------------------------------------------------------------------------
-# XML (S8/S9/S10) — stdlib etree over whole-file rows; no external jar.
+# XML (S8/S9/S10) — stdlib etree over whole files; no external jar.
 # ---------------------------------------------------------------------------
 
 
@@ -607,26 +602,15 @@ def _parse_xml_rows(xml_text: str, row_tag: str | None) -> list[dict]:
     if row_tag:
         nodes = _select_nodes(root, row_tag)
     else:
-        tables = detect_xml_tables(xml_text)
-        if tables:
-            _, nodes = tables[0]
-        else:
-            nodes = [root]
+        tables = _detect_tables_from_root(root)
+        nodes = tables[0][1] if tables else [root]
     return [_element_to_row(n) for n in nodes]
 
 
-def detect_xml_tables(xml_text: str):
+def _detect_tables_from_root(root):
     """S9: recursive walk; any tag with >=2 same-named children is a
     table named ``{path}_{tag}`` (FileUploader.tsx:95-120). Returns
     [(table_name, [elements])] in document order."""
-    import xml.etree.ElementTree as ET
-
-    return _detect_tables_from_root(ET.fromstring(xml_text))
-
-
-def _detect_tables_from_root(root):
-    from collections import Counter
-
     tables: list = []
 
     def visit(node, path: str) -> None:
@@ -654,71 +638,49 @@ def read_xml(
     (FileUploader.tsx:65-93): a bare tag name, or a selector path with
     ``>`` (child) / whitespace (descendant) combinators — e.g.
     ``"items > item"`` will not over-match an ``item`` nested elsewhere.
-    When None, per-file auto-detection picks the first table (S9). Each
-    file parses in one task — the parallel unit is the file, which is
-    how an XML corpus shards at scale.
+    When None, per-file auto-detection picks the first table (S9).
+
+    Every file parses whole on the driver (:func:`_whole_files`: one
+    ``binaryFile`` scan, bounded by ``spark.driver.maxResultSize``) and
+    the rows become an Arrow local frame whose columns are the
+    first-seen key union; a field a row lacks is null. For an XML corpus
+    at scale, convert it to JSON lines or parquet first.
     """
-    binary = spark.read.format("binaryFile").load(path)
-
-    def parse(rows):
-        for r in rows:
-            text = bytes(r.content).decode(encoding, errors="replace")
-            yield from _parse_xml_rows(text, row_tag)
-
-    # Parse once, persist, then two passes: executor-side key union for
-    # the ragged-row schema (S9), then the typed-row projection.
-    dicts = _persisted(binary.select("path", "content").rdd.mapPartitions(parse))
-    keys = _ordered_union_keys(dicts)
-    schema = _string_schema(keys)
-    return spark.createDataFrame(
-        dicts.map(lambda d: tuple(d.get(k) for k in keys)), schema
-    )
+    rows = [
+        row
+        for text in _whole_files(spark, path, encoding, "replace")
+        for row in _parse_xml_rows(text, row_tag)
+    ]
+    return _frame(spark, rows, None)
 
 
 def read_xml_tables(
     spark: SparkSession, path: str, encoding: str = "utf-8"
 ) -> dict[str, DataFrame]:
-    """S9 full surface: auto-detect all tables across an XML corpus.
+    """S9 full surface: auto-detect all tables across XML files.
 
-    One distributed parse emits (table_name, row_dict) pairs and is
-    persisted; table names are a tiny ``distinct`` (bounded by schema
-    variety, not corpus size) and each table's schema comes from the
-    executor-side key union. The driver never holds file contents —
-    ``path`` can be a glob over millions of documents.
+    Same-named tables union across files; each table's columns are its
+    first-seen key union and a field a row lacks is null. Every file
+    parses whole on the driver, as in :func:`read_xml`, so the input is
+    bounded by ``spark.driver.maxResultSize``.
     """
-    binary = spark.read.format("binaryFile").load(path).select("path", "content")
+    import xml.etree.ElementTree as ET
 
-    def parse(rows):
-        import xml.etree.ElementTree as ET
-
-        for r in rows:
-            text = bytes(r.content).decode(encoding, errors="replace")
-            root = ET.fromstring(text)  # parse once; detect + extract share it
-            tables = _detect_tables_from_root(root)
-            if tables:
-                for name, nodes in tables:
-                    for n in nodes:
-                        yield (name, _element_to_row(n))
-            else:
-                d = _element_to_row(root)
-                yield ("#text", {"#text": d.get("#text", "")})
-
-    parsed = _persisted(binary.rdd.mapPartitions(parse))
-    names = sorted(parsed.map(lambda t: t[0]).distinct().collect())
+    tables: dict[str, list[dict]] = {}
+    for text in _whole_files(spark, path, encoding, "replace"):
+        root = ET.fromstring(text)
+        found = _detect_tables_from_root(root)
+        for name, nodes in found:
+            tables.setdefault(name, []).extend(_element_to_row(n) for n in nodes)
+        if not found:
+            text_row = {"#text": _element_to_row(root).get("#text", "")}
+            tables.setdefault("#text", []).append(text_row)
     # Reference fallback contract: the '#text' pseudo-table exists only
     # when NO file in the corpus has a detectable table; in a mixed
     # corpus the table-less files drop (round-1 behavior).
-    if "#text" in names and len(names) > 1:
-        names.remove("#text")
-    out: dict[str, DataFrame] = {}
-    for name in names:
-        sub = parsed.filter(lambda t, n=name: t[0] == n).map(lambda t: t[1])
-        keys = _ordered_union_keys(sub)
-        schema = _string_schema(keys)
-        out[name] = spark.createDataFrame(
-            sub.map(lambda d, ks=tuple(keys): tuple(d.get(k) for k in ks)), schema
-        )
-    return out
+    if "#text" in tables and len(tables) > 1:
+        del tables["#text"]
+    return {name: _frame(spark, tables[name], None) for name in sorted(tables)}
 
 
 def read_excel(spark: SparkSession, path: str) -> dict[str, DataFrame]:

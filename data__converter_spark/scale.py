@@ -130,7 +130,10 @@ def run_jobs(*thunks, max_workers: int | None = None) -> list:
     in each pool thread for the thunk's duration (ADVICE r14): frames
     a thunk caches register on the CALLER's innermost scope, not the
     module-global list, so an enclosing scope still owns and releases
-    them.  Results return in thunk order.
+    them.  Each thunk also runs under the caller's Spark job group,
+    local properties and session tags
+    (``pyspark.util.inheritable_thread_target``), so the jobs it submits
+    are attributed to the caller.  Results return in thunk order.
 
     The pool holds ``max_workers`` threads, by default one per thunk up
     to the host's CPU count — one thunk per OPTIMIZE bin must not mean
@@ -140,7 +143,13 @@ def run_jobs(*thunks, max_workers: int | None = None) -> list:
         return [thunks[0]()]
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import SparkContext
+    from pyspark.util import inheritable_thread_target
+
     caller_stack = getattr(_SCOPES, "stack", None)
+    session = (
+        SparkSession.active() if SparkContext._active_spark_context is not None else None
+    )
 
     def _scoped(t):
         def run():
@@ -155,7 +164,10 @@ def run_jobs(*thunks, max_workers: int | None = None) -> list:
                 else:
                     del _SCOPES.stack
 
-        return run
+        # Wrapped here, in the caller's thread: each thunk gets its own
+        # copy of the caller's local properties, so a thunk's SQL
+        # execution id never leaks into a sibling's.
+        return inheritable_thread_target(session)(run) if session else run
 
     workers = max_workers or min(len(thunks), os.cpu_count() or 1)
     with ThreadPoolExecutor(workers) as pool:

@@ -106,9 +106,15 @@ def test_euc_kr_sniff_reads_only_the_head(spark, tmp_path):
     assert _next_job_id(spark) == before
 
 
+def _python_free(df) -> bool:
+    return "PythonRDD" not in df._jdf.rdd().toDebugString()
+
+
 def test_tools_path_job_budget(spark, tmp_path):
     # Building a csv frame submits no job; csv -> xml runs only the
-    # writer's own job; Excel sheets build without a Python worker.
+    # writer's own job; Excel sheets, XML and legacy-charset csv frames
+    # build without a Python worker; xml -> csv runs the scan and the
+    # writer.
     src = _write(tmp_path, "t.csv", "id;v\n1;a\n2;b\n")
     before = _next_job_id(spark)
     df = readers.read_table_auto(spark, src)
@@ -123,8 +129,17 @@ def test_tools_path_job_budget(spark, tmp_path):
     before = _next_job_id(spark)
     sheets = readers.read_excel(spark, book)
     assert _next_job_id(spark) == before
-    assert "PythonRDD" not in sheets["s"]._jdf.rdd().toDebugString()
+    assert _python_free(sheets["s"])
     assert sorted(sheets["s"].collect()) == [("1", "x"), ("2", "")]
+    xml = _write(tmp_path, "x.xml", "<r><row><id>1</id></row><row><id>2</id></row></r>")
+    assert _python_free(readers.read_xml(spark, xml, row_tag="row"))
+    assert all(_python_free(t) for t in readers.read_xml_tables(spark, xml).values())
+    kr = _write(tmp_path, "kr.csv", "이름,값\n홍길동,1\n", encoding="euc-kr")
+    assert _python_free(readers.read_csv(spark, kr, encoding="euc-kr"))
+    for row_tag in ("row", None):
+        before = _next_job_id(spark)
+        convert.convert(spark, [xml], "csv", str(tmp_path / "csv"), xml_row_tag=row_tag)
+        assert _next_job_id(spark) == before + 2
 
 
 def test_csv_roundtrip(spark, tmp_path, orders):
@@ -359,34 +374,45 @@ def test_xml_selector_path_child_combinator(spark, tmp_path):
     # descendant combinator: "root item" matches all three
     desc = readers.read_xml(spark, path, row_tag="root item")
     assert desc.count() == 3
+    # a selector matching nothing: no columns, no rows
+    none = readers.read_xml(spark, path, row_tag="items > related")
+    assert none.columns == [] and none.collect() == []
 
 
 def test_multifile_ragged_key_union(spark, tmp_path):
-    # Executor-side key union across files with differing columns (the
-    # Python-codec path, where the ragged contract lives): the schema is
-    # the first-seen-ordered union and missing cells are ''.
+    # Key union across files with differing columns (the Python-codec
+    # path, where the ragged contract lives): the larger file's columns
+    # and rows come first, as in Spark's scan order, and missing cells
+    # are ''.
     _write(tmp_path, "p1.csv", "a,b\n1,2\n", encoding="euc-kr")
-    _write(tmp_path, "p2.csv", "a,c\n3,4\n", encoding="euc-kr")
+    _write(tmp_path, "p2.csv", "a,c\n3,4\n5,6\n", encoding="euc-kr")
     df = readers.read_csv(spark, str(tmp_path / "*.csv"), encoding="euc-kr")
-    assert set(df.columns) == {"a", "b", "c"}
-    rows = {r.a: r.asDict() for r in df.collect()}
-    assert rows["1"]["c"] == "" and rows["3"]["b"] == ""
+    assert df.columns == ["a", "c", "b"]
+    assert [tuple(r) for r in df.collect()] == [
+        ("3", "4", ""), ("5", "6", ""), ("1", "", "2")
+    ]
 
 
 def test_xml_tables_multifile_corpus(spark, tmp_path):
     # read_xml_tables over a glob: same-named tables union across files.
+    # f1 is larger, so its keys and rows come first although f0 sorts
+    # first by name; a field a row lacks is null.
     for i, doc in enumerate(
         [
             "<r><t><x>1</x></t><t><x>2</x></t></r>",
-            "<r><t><x>3</x><y>9</y></t><t><x>4</x></t></r>",
+            "<r><t><y>9</y><x>3</x></t><t><x>4</x></t></r>",
         ]
     ):
         _write(tmp_path, f"f{i}.xml", doc)
     tables = readers.read_xml_tables(spark, str(tmp_path / "*.xml"))
-    (name,) = [k for k in tables if k.endswith("t")]
-    df = tables[name]
-    assert df.count() == 4
-    assert set(df.columns) == {"x", "y"}
+    assert list(tables) == ["r_t"]
+    df = tables["r_t"]
+    assert df.columns == ["y", "x"]
+    assert [tuple(r) for r in df.collect()] == [
+        ("9", "3"), (None, "4"), (None, "1"), (None, "2")
+    ]
+    rows = readers.read_xml(spark, str(tmp_path / "*.xml"), row_tag="t")
+    assert rows.columns == df.columns and rows.collect() == df.collect()
 
 
 def test_xml_writer_golden_template(spark, tmp_path):

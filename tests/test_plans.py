@@ -414,6 +414,23 @@ def test_swap_protocol_lives_only_in_commit_module():
     assert not offenders, f"swap protocol outside commit.py: {offenders}"
 
 
+def test_converter_readers_use_no_rdd():
+    """The converter's readers build frames from JVM scans or Arrow
+    local relations: no ``.rdd`` in io/readers.py, so no Python worker
+    creeps back onto the read path."""
+    import pathlib
+
+    import data__converter_spark as pkg
+
+    src = pathlib.Path(pkg.__file__).parent / "io" / "readers.py"
+    offenders = [
+        f"readers.py:{i}"
+        for i, line in enumerate(src.read_text().splitlines(), 1)
+        if ".rdd" in line
+    ]
+    assert not offenders, f".rdd on the converter's read path: {offenders}"
+
+
 def test_no_query_uses_rowwise_python_or_cartesian(spark):
     """Blanket net over EVERY registered query: no row-at-a-time Python
     eval (BatchEvalPython — Arrow/mapInPandas nodes are fine) and no

@@ -227,6 +227,21 @@ def test_run_jobs_default_pool_is_bounded_by_cpu_count(monkeypatch):
     assert live["max"] == cap
 
 
+def test_run_jobs_thunks_keep_callers_job_group(spark, orders):
+    """Jobs submitted from run_jobs pool threads carry the caller's job
+    group, so status-store reads attribute them to the caller."""
+    sc = spark.sparkContext
+    sc.setJobGroup("run-jobs-attribution", "pool threads inherit it")
+    try:
+        scale.run_jobs(
+            lambda: orders.limit(1).count(), lambda: orders.limit(2).count()
+        )
+    finally:
+        sc._jsc.clearJobGroup()
+    jobs = sc.statusTracker().getJobIdsForGroup("run-jobs-attribution")
+    assert len(jobs) >= 2
+
+
 def test_zonemap_prune_is_conservative(spark, orders):
     """Pruned scan == direct filter, on BOTH a clustered shard key
     (skips most shards) and an uncorrelated one (skips none) — the
