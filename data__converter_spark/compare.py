@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .scale import local_frame
 from .schema import printable_col
 
 DIFF_STATUS_COL = "status"
@@ -237,7 +238,9 @@ def schema_diff(a: DataFrame, b: DataFrame) -> DataFrame:
     a million stringified mismatches there.
 
     Plan-time only: schemas come from the analyzed plans, no job runs
-    on either input; the result is a literal ``createDataFrame``.
+    on either input; the result is a local frame
+    (:func:`~data__converter_spark.scale.local_frame`), so collecting it
+    runs no job either.
     """
     ta = {f.name: f.dataType.simpleString() for f in a.schema.fields}
     tb = {f.name: f.dataType.simpleString() for f in b.schema.fields}
@@ -253,8 +256,10 @@ def schema_diff(a: DataFrame, b: DataFrame) -> DataFrame:
         else:
             status = "same"
         rows.append((name, status, ta.get(name), tb.get(name)))
-    return a.sparkSession.createDataFrame(
-        rows, "column string, status string, type_a string, type_b string"
+    return local_frame(
+        a.sparkSession,
+        rows,
+        "column string, status string, type_a string, type_b string",
     )
 
 

@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .scale import local_frame
+
 #: one full rank unit in micro-units
 RANK_SCALE = 1_000_000
 # Cap on the adaptive probe window: each lazily-chained superstep
@@ -404,8 +406,8 @@ def bfs_hops(
         F.col(dst_col).cast("long").alias("dst"),
     )
     e = persisted(e)
-    dist = spark.createDataFrame(
-        [(int(source), 0)], "node long, hop int"
+    dist = local_frame(
+        spark, [(int(source), 0)], "node long, hop int"
     ).localCheckpoint()
     frontier = dist.select("node")
     for h in range(1, max_hops + 1):

@@ -39,6 +39,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..scale import local_frame
+
 PDF_MAGIC = b"%PDF-"
 
 
@@ -364,8 +366,6 @@ def split_pdf(
     driver and builds every group (``codec.split``), and the outputs
     come back as an Arrow local frame — no Python worker, no shuffle.
     """
-    import pyarrow as pa
-
     codec = codec or default_codec()
     data = _requested(df, [path]).get(_norm_path(path))
     if data is None:
@@ -376,9 +376,11 @@ def split_pdf(
     groups = [g for g in groups if g]
     base = os.path.splitext(os.path.basename(path))[0]
     names = [f"{base}_split_{i:03d}.pdf" for i in range(1, len(groups) + 1)]
-    table = pa.table([pa.array(names, pa.string()),
-                      pa.array(codec.split(data, groups), pa.binary())], ["name", "content"])
-    return df.sparkSession.createDataFrame(table, "name string, content binary")
+    return local_frame(
+        df.sparkSession,
+        list(zip(names, codec.split(data, groups))),
+        "name string, content binary",
+    )
 
 
 def write_outputs(outputs: DataFrame, out_dir: str) -> list[str]:

@@ -47,6 +47,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import commit
+from ..scale import local_frame
 
 DELIMITERS = [",", "\t", ";"]
 ENCODINGS = {"utf-8", "euc-kr", "cp949", "shift_jis", "iso-8859-1"}
@@ -129,6 +130,10 @@ _SNIFF_LINES, _SNIFF_CHARS = 50, 2000
 _WS = "".join(map(chr, range(33)))
 _LINE_END = re.compile(r"\r\n|\r|\n")
 _LINE_DONE = re.compile(r"[^\x00-\x20][^\r\n]*[\r\n]")
+# py4j gateway -> Hadoop's CompressionCodecFactory class, resolved once
+# per gateway as ``commit`` resolves ``Path``: each step of the package
+# walk is a py4j round trip.
+_CODEC_FACTORY: dict = {}
 
 
 def _hidden(name: str) -> bool:
@@ -162,7 +167,12 @@ def _head_text(spark: SparkSession, path: str, encoding: str) -> str:
     if not size:
         return ""
     first = first.getPath()
-    factory = spark._jvm.org.apache.hadoop.io.compress.CompressionCodecFactory
+    gateway = spark.sparkContext._gateway
+    factory = _CODEC_FACTORY.get(gateway)
+    if factory is None:
+        factory = _CODEC_FACTORY[gateway] = (
+            spark._jvm.org.apache.hadoop.io.compress.CompressionCodecFactory
+        )
     codec = factory(spark._jsc.hadoopConfiguration()).getCodec(first)
     stream = fs.open(first)
     try:
@@ -318,17 +328,16 @@ def _whole_files(
 
 def _frame(spark: SparkSession, rows: list[dict], missing: str | None) -> DataFrame:
     """All-string frame over ``rows``: the columns are the first-seen
-    union of their keys and a key a row lacks reads ``missing``. Spark
-    turns the Arrow table into a local relation in the JVM: no Python
-    worker runs and building the frame submits no job."""
-    import pyarrow as pa
-
+    union of their keys and a key a row lacks reads ``missing``. A local
+    relation (:func:`~data__converter_spark.scale.local_frame`): no
+    Python worker runs and building the frame submits no job. It is one
+    partition, so converting one file writes one part file."""
     keys = list(dict.fromkeys(k for row in rows for k in row))
-    table = pa.Table.from_arrays(
-        [pa.array([row.get(k, missing) for row in rows], pa.string()) for k in keys],
-        names=keys,
-    )
-    return spark.createDataFrame(table, _string_schema(keys))
+    return local_frame(
+        spark,
+        [tuple(row.get(k, missing) for k in keys) for row in rows],
+        _string_schema(keys),
+    ).coalesce(1)
 
 
 def read_table_auto(spark: SparkSession, path: str, encoding: str = "utf-8") -> DataFrame:
@@ -712,10 +721,10 @@ def read_excel(spark: SparkSession, path: str) -> dict[str, DataFrame]:
             )
             for name, (cols, rows) in xlsx_lite.read_workbook(path).items()
         }
-    # Spark turns the Arrow batches into a local relation in the JVM: no
-    # Python worker runs and building the frame submits no job.
+    # Local relations: no Python worker runs, building a frame submits
+    # no job, and each sheet is one partition, so one part file.
     return {
-        name: spark.createDataFrame(table, _string_schema(table.column_names))
+        name: local_frame(spark, table, _string_schema(table.column_names)).coalesce(1)
         for name, table in tables.items()
         if table.num_columns
     }

@@ -175,6 +175,29 @@ def refresh_join_view(
     return new_view, new_fact_state
 
 
+def _signed_measures(
+    measures: dict[str, tuple[str, Column | str | None]],
+    sign_col: str | Column,
+) -> dict[str, Column]:
+    """Each retractable measure's per-row signed contribution: ``sum``
+    contributes ``sign * value`` and ``count`` contributes ``sign``."""
+    s = F.col(sign_col) if isinstance(sign_col, str) else sign_col
+    out = {}
+    for name, (fn, col) in measures.items():
+        if fn == "sum":
+            out[name] = s * (F.col(col) if isinstance(col, str) else col)
+        elif fn == "count":
+            out[name] = s
+        else:
+            raise ValueError(
+                f"measure {name!r} ({fn}) is not retractable — min/max "
+                "have no inverse; use the insert-only path or the "
+                "bounded top-k state (topk_state / "
+                "refresh_topk_with_retractions)"
+            )
+    return out
+
+
 def signed_state(
     df: DataFrame,
     keys: list[str],
@@ -191,22 +214,8 @@ def signed_state(
     current max needs the full group re-scanned; keep those in the
     insert-only path or a sketch).
     """
-    s = F.col(sign_col) if isinstance(sign_col, str) else sign_col
-    aggs = []
-    for name, (fn, col) in measures.items():
-        if fn == "sum":
-            c = F.col(col) if isinstance(col, str) else col
-            aggs.append(F.sum(s * c).alias(name))
-        elif fn == "count":
-            aggs.append(F.sum(s).alias(name))
-        else:
-            raise ValueError(
-                f"measure {name!r} ({fn}) is not retractable — min/max "
-                "have no inverse; use the insert-only path or the "
-                "bounded top-k state (topk_state / "
-                "refresh_topk_with_retractions)"
-            )
-    return df.groupBy(*keys).agg(*aggs)
+    signed = _signed_measures(measures, sign_col)
+    return df.groupBy(*keys).agg(*[F.sum(v).alias(n) for n, v in signed.items()])
 
 
 def refresh_with_retractions(
@@ -218,7 +227,7 @@ def refresh_with_retractions(
     count_measure: str,
 ) -> DataFrame:
     """One maintenance step under inserts AND deletes: merge the
-    signed delta state into the standing state, then DROP keys whose
+    signed delta rows into the standing state, then DROP keys whose
     ``count_measure`` reaches exactly zero — a fully-retracted key
     must leave the view entirely (count 0 is 'absent', not 'present
     with zeros'; the full-recompute oracle has no such row, and
@@ -232,12 +241,21 @@ def refresh_with_retractions(
     that must not see debt rows filter ``count_measure > 0``
     explicitly at the edge.
 
-    Same cost shape as :func:`refresh_incremental`: one union + one
-    hash exchange over key-sized frames; the base is never rescanned.
-    Equivalence to the full rebuild over (base rows minus retracted
-    rows) is pinned by pytest and the ``ivm_retract_orders`` oracle.
+    One hash exchange: the delta rows are projected to their signed
+    contributions (:func:`signed_state`'s algebra, cast to the state's
+    measure types so the output schema is the state's) and unioned
+    with the standing state, and ONE :func:`merge_states` aggregate
+    folds both — sum is associative, so pre-aggregating the delta
+    behind its own exchange bought nothing.  The base is never
+    rescanned.  Equivalence to the full rebuild over (base rows minus
+    retracted rows) is pinned by pytest and the
+    ``ivm_retract_orders`` oracle.
     """
-    delta = signed_state(delta_rows, keys, measures, sign_col)
+    types = {f.name: f.dataType for f in state.schema.fields}
+    signed = _signed_measures(measures, sign_col)
+    delta = delta_rows.select(
+        *keys, *[v.cast(types[n]).alias(n) for n, v in signed.items()]
+    )
     merged = merge_states([state, delta], keys, measures)
     return merged.filter(F.col(count_measure) != 0)
 

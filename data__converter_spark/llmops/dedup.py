@@ -28,6 +28,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..scale import local_frame
 from .textstats import shingles_col
 
 
@@ -829,7 +830,7 @@ def connected_components(
         schema = T.StructType(
             [T.StructField("id", id_type), T.StructField("component", id_type)]
         )
-        out = pairs.sparkSession.createDataFrame(data, schema)
+        out = local_frame(pairs.sparkSession, data, schema)
         edges.unpersist()
         return out
 
@@ -1133,7 +1134,8 @@ def embedding_pairs(
         F.col(vec_col).alias("vec"),
         F.pmod(F.xxhash64(F.col(id_col)), F.lit(num_blocks)).alias("bid"),
     )
-    block_pairs = spark.createDataFrame(
+    block_pairs = local_frame(
+        spark,
         [(i, j) for i in range(num_blocks) for j in range(i, num_blocks)],
         "ba int, bb int",
     )

@@ -33,6 +33,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..scale import local_frame
+
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType()),
@@ -373,7 +375,7 @@ def synthetic_media(spark, n: int = 64) -> DataFrame:
                 (64 + i % 8, 48 + i % 6, 1000 * (1 + i % 7), f"x/{kind}"),
             )
         )
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
+    return local_frame(spark, rows, MEDIA_SCHEMA)
 
 
 def media_from_documents(

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import commit
+from ..scale import local_frame
 from .textstats import quality_score_col, sample_hash_col, scrub_pii_col
 
 
@@ -769,7 +770,8 @@ def ingest_state_build(
     # ingest/compact entry passes only when it exists, so a rebuild that
     # crashes mid-chain can never leave a NEW manifest validating tables
     # still holding OLD-parameter artifacts.  Negligible cost (1 row).
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [
             (
                 int(k), int(num_hashes), int(bands), int(seed),
@@ -1358,7 +1360,8 @@ def ingest_state_compact(
         prm["m_bits"] = int(m_bits)
         _fold(
             "params",
-            spark.createDataFrame(
+            local_frame(
+                spark,
                 [tuple(prm[c] for c in (
                     "k", "num_hashes", "bands", "seed", "threshold",
                     "train_permille", "val_permille", "m_bits", "k_hashes",

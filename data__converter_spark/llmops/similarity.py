@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .. import commit
+from ..scale import local_frame
 from .dedup import cosine_col
 
 # All three entry points broadcast the probe set from the driver — the
@@ -50,7 +51,7 @@ def _collect_probes(probes: DataFrame, id_col: str, vec_col: str) -> list:
 
 
 def _empty_topk(spark) -> DataFrame:
-    return spark.createDataFrame([], _TOPK_SCHEMA)
+    return local_frame(spark, [], _TOPK_SCHEMA)
 
 
 def brute_force_topk(
@@ -190,7 +191,8 @@ def ivf_topk(
     pm = np.stack([np.asarray(r[1], dtype=np.float64) for r in p_rows])
     pm = pm / np.linalg.norm(pm, axis=1, keepdims=True)
     cell_rank = np.argsort(-(pm @ C.T), axis=1)[:, :nprobe]
-    probe_cells = spark.createDataFrame(
+    probe_cells = local_frame(
+        spark,
         [
             (int(r[0]), [float(x) for x in np.asarray(r[1], dtype=np.float64)], int(c))
             for r, cells in zip(p_rows, cell_rank)
@@ -567,7 +569,7 @@ def kmeans_train(
     # the final iteration was just materialized for the collect — build
     # the result from those rows instead of re-executing the heaviest
     # stage (assignment over the full corpus) a second time
-    return df.sparkSession.createDataFrame(rows, cent.schema).select(
+    return local_frame(df.sparkSession, rows, cent.schema).select(
         F.col("label").alias("cluster"), "pos", "n_vecs", "mean_val"
     )
 
@@ -844,7 +846,7 @@ def pq_train(
     # same convention as kmeans_train: the final update was already
     # materialized for the codebook pull — return THOSE rows rather
     # than re-running the assignment pass
-    return corpus.sparkSession.createDataFrame(rows, cent.schema)
+    return local_frame(corpus.sparkSession, rows, cent.schema)
 
 
 def pq_topk(
@@ -903,8 +905,8 @@ def pq_topk(
 
     p_rows = _collect_probes(probes, id_col, vec_col)
     if not p_rows:
-        return spark.createDataFrame(
-            [], "probe_id long, neighbor_id long, adc_dist long, rank int"
+        return local_frame(
+            spark, [], "probe_id long, neighbor_id long, adc_dist long, rank int"
         )
     lut_rows = []
     for r in p_rows:
@@ -920,8 +922,8 @@ def pq_topk(
             )
             for j in range(n_codes):
                 lut_rows.append((int(r[0]), s, int(cids[j]), int(d[j])))
-    lut = spark.createDataFrame(
-        lut_rows, "probe_id long, s int, code long, d long"
+    lut = local_frame(
+        spark, lut_rows, "probe_id long, s int, code long, d long"
     )
 
     adc = (
@@ -1037,8 +1039,8 @@ def _ivf_pq_rank(
     n_codes = len(code_ids)
     p_rows = _collect_probes(probes, id_col, vec_col)
     if not p_rows:
-        return spark.createDataFrame(
-            [], "probe_id long, neighbor_id long, adc_dist long, rank int"
+        return local_frame(
+            spark, [], "probe_id long, neighbor_id long, adc_dist long, rank int"
         )
     # probe -> nprobe nearest cells by the same exact grid cosine
     cell_norm = np.sqrt(np.einsum("ij,ij->i", cell_q, cell_q).astype(np.float64))
@@ -1059,8 +1061,8 @@ def _ivf_pq_rank(
             )
             for j in range(n_codes):
                 lut_rows.append((int(r[0]), s, int(code_ids[j]), int(d[j])))
-    probe_cells = spark.createDataFrame(pc_rows, "probe_id long, cell long")
-    lut = spark.createDataFrame(lut_rows, "probe_id long, s int, code long, d long")
+    probe_cells = local_frame(spark, pc_rows, "probe_id long, cell long")
+    lut = local_frame(spark, lut_rows, "probe_id long, s int, code long, d long")
 
     cand = cells.join(F.broadcast(probe_cells), "cell").select("probe_id", "vid")
     adc = (
@@ -1154,11 +1156,11 @@ def ann_index_build(
     cids_s = [code_ids for _ in range(m)]
     book_schema = "cid long, pos int, val_q long"
     run_jobs(
-        lambda: spark.createDataFrame(
-            _ann_books_to_rows(cell_ids, cell_q), book_schema
+        lambda: local_frame(
+            spark, _ann_books_to_rows(cell_ids, cell_q), book_schema
         ).write.mode("overwrite").parquet(f"{path}/cellbook"),
-        lambda: spark.createDataFrame(
-            _ann_books_to_rows(code_ids, code_q), book_schema
+        lambda: local_frame(
+            spark, _ann_books_to_rows(code_ids, code_q), book_schema
         ).write.mode("overwrite").parquet(f"{path}/codebook"),
         lambda: _assign_to_grid(corpus, cell_ids, cell_q, vec_col, id_col)
         .select(F.col(id_col).alias("vid"), F.col("cluster").alias("cell"))
@@ -1277,7 +1279,7 @@ def ann_index_compact(spark, path: str) -> None:
 
     # the two folds touch disjoint tables — overlap them (guide §2.6)
     run_jobs(lambda: _fold("cells"), lambda: _fold("codes"))
-    spark.createDataFrame([], "vid bigint").write.mode(
+    local_frame(spark, [], "vid bigint").write.mode(
         "overwrite"
     ).parquet(tomb_path)
 
@@ -1417,11 +1419,11 @@ def ann_index_build_partitioned(
         corpus, Cs, [code_ids for _ in Cs], d0, vec_col, id_col
     )
     run_jobs(
-        lambda: spark.createDataFrame(
-            _ann_books_to_rows(cell_ids, cell_q), book_schema
+        lambda: local_frame(
+            spark, _ann_books_to_rows(cell_ids, cell_q), book_schema
         ).write.mode("overwrite").parquet(f"{path}/cellbook"),
-        lambda: spark.createDataFrame(
-            _ann_books_to_rows(code_ids, code_q), book_schema
+        lambda: local_frame(
+            spark, _ann_books_to_rows(code_ids, code_q), book_schema
         ).write.mode("overwrite").parquet(f"{path}/codebook"),
         lambda: codes.join(cells, "vid")
         .select("vid", "s", "code", "cell")
@@ -1479,8 +1481,8 @@ def ivf_pq_from_partitioned_index(
     cell_ids, cell_q, code_ids, Cs, _d0 = _read_ann_books(spark, path, m)
     p_rows = _collect_probes(probes, id_col, vec_col)
     if not p_rows:
-        return spark.createDataFrame(
-            [], "probe_id long, neighbor_id long, adc_dist long, rank int"
+        return local_frame(
+            spark, [], "probe_id long, neighbor_id long, adc_dist long, rank int"
         )
     cell_norm = np.sqrt(
         np.einsum("ij,ij->i", cell_q, cell_q).astype(np.float64)
@@ -1627,7 +1629,7 @@ def build_text_index(
         # write THAT row back (r14, guide §1.2: don't compute things
         # twice) instead of re-running the corpus-scale aggregate, and
         # overlap it with the postings write (guide §2.6)
-        stats_local = spark.createDataFrame([stats_row], stats.schema)
+        stats_local = local_frame(spark, [stats_row], stats.schema)
         if bucket_table is not None:
             from ..scale import run_jobs, write_bucketed
 

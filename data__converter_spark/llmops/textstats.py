@@ -16,6 +16,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..scale import local_frame
+
 # Whitespace-token split pattern: explicit class, no bare \s (engine parity).
 WS = "[ \\t\\r\\n]+"
 
@@ -1709,7 +1711,7 @@ def bpe_train(
         "merge_rank int, left_sym string, right_sym string,"
         " pair_count bigint"
     )
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 def bpe_tokenize(

@@ -27,6 +27,7 @@ import threading as _threading
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from . import commit
 
@@ -173,6 +174,32 @@ def run_jobs(*thunks, max_workers: int | None = None) -> list:
     with ThreadPoolExecutor(workers) as pool:
         futures = [pool.submit(_scoped(t)) for t in thunks]
         return [f.result() for f in futures]
+
+
+def local_frame(spark, rows, schema: T.StructType | str) -> DataFrame:
+    """Frame over rows the driver already holds: a list of row tuples
+    (positional against ``schema``, a StructType or DDL string), or a
+    ``pyarrow.Table`` built column-wise.
+
+    The rows travel as one Arrow table, which Spark turns into a local
+    relation in the JVM: collecting, counting or broadcasting the frame
+    submits no job and no Python worker ever runs, where a list-based
+    ``createDataFrame`` plans a PythonRDD that costs a job (and a
+    worker) every time the frame is consumed.  The one
+    ``createDataFrame`` call in the package lives here."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    if not isinstance(rows, pa.Table):
+        arrow = to_arrow_schema(schema)
+        cols = list(zip(*rows)) or [()] * len(arrow)
+        rows = pa.Table.from_arrays(
+            [pa.array(list(c), f.type) for c, f in zip(cols, arrow)],
+            schema=arrow,
+        )
+    return spark.createDataFrame(rows, schema)
 
 
 def write_bucketed(
@@ -775,6 +802,31 @@ def bucket_pairs(
     return grouped.select(*bucket_cols, pair).select(*bucket_cols, "__p__.*")
 
 
+def _footer_envelope(meta, cols: list[str]) -> dict:
+    """``{col: (min, max)}`` over one parquet footer's row-group column
+    statistics, cast to long as ``F.min(c).cast("long")`` would be.
+    ``(None, None)`` when the column holds only NULLs or is absent
+    (``F.min``/``F.max`` skip NULLs); ``None`` when it holds values the
+    footer records no min/max for, so nothing bounds them."""
+    paths = [meta.schema.column(j).path for j in range(meta.num_columns)]
+    env: dict = {}
+    for c in cols:
+        los, his = [], []
+        groups = range(meta.num_row_groups) if c in paths else ()
+        for rg in map(meta.row_group, groups):
+            st = rg.column(paths.index(c)).statistics
+            if st is not None and st.has_min_max:
+                los.append(int(st.min))
+                his.append(int(st.max))
+            elif st is None or st.null_count != rg.num_rows:
+                break  # values with no recorded bounds
+        else:
+            env[c] = (min(los), max(his)) if los else (None, None)
+            continue
+        env[c] = None
+    return env
+
+
 def optimize_incremental(
     spark,
     table_path: str,
@@ -782,23 +834,29 @@ def optimize_incremental(
     target_rows: int,
     bits_per_dim: int = 4,
 ) -> DataFrame:
-    """Incremental OPTIMIZE — the composition of :func:`compaction_plan`
-    and the z-order write, in place: plan bins over the table's FILE
-    INVENTORY (row counts from parquet footers, name order — the
-    metadata-scale input compaction_plan was built for), rewrite ONLY
-    the multi-file bins into z-clustered files, and leave every
-    already-compacted (singleton-bin) file physically untouched — the
-    Delta/Iceberg incremental-OPTIMIZE shape, where repeated runs cost
-    proportional to NEW small files, not to the table.
+    """Incremental OPTIMIZE — bins planned from the parquet footers, then
+    the z-order write, in place: plan bins over the table's FILE
+    INVENTORY (name order, :func:`compaction_plan`'s running-sum rule
+    applied on the driver — the metadata-scale input that rule was
+    built for), rewrite ONLY the multi-file bins into z-clustered files,
+    and leave every already-compacted (singleton-bin) file physically
+    untouched — the Delta/Iceberg incremental-OPTIMIZE shape, where
+    repeated runs cost proportional to NEW small files, not to the
+    table.
 
-    Per rewritten bin: its members read as one DataFrame, get the
-    Morton key over ``cols`` (envelope from one slim aggregate over
-    just those members), and write as ONE z-sorted file.  The swap
-    order is crash-safe for data (stage the new file fully, move it
-    in, THEN delete the members — an interruption can leave a
-    duplicate bin visible, never a missing one; a real lakehouse
-    makes the swap atomic in the table log, which is out of scope for
-    a directory of bare parquet).
+    The plan comes from the footers the inventory already opens: row
+    counts from the file metadata, and each rewritten bin's Morton
+    envelope over ``cols`` from the row-group min/max statistics (the
+    zone maps :func:`zorder_key` names as a valid source; a NULL-only
+    column contributes nothing, as ``F.min``/``F.max`` skip NULLs).  So
+    no planning or envelope job runs: per rewritten bin, its members
+    read as one DataFrame under one shared schema inference, get the
+    Morton key and write as ONE z-sorted file — one job per bin.  The
+    swap order is crash-safe for data (stage the new file fully, move
+    it in, THEN delete the members — an interruption can leave a
+    duplicate bin visible, never a missing one; a real lakehouse makes
+    the swap atomic in the table log, which is out of scope for a
+    directory of bare parquet).
 
     Output names carry a GENERATION counter
     (``optimized-g{gen:03d}-{bin:05d}.parquet``, gen = 1 + the highest
@@ -809,15 +867,18 @@ def optimize_incremental(
     participate as ordinary inventory members, and name order stays
     deterministic.
 
-    Driver-side work touches METADATA only: the file listing, footer
-    row counts, and the collected bin plan (one row per file — ~10⁶
-    rows for 100 TB of 100 MB files).  Each bin's rewrite is its own
-    distributed job, exactly how Delta schedules OPTIMIZE bins.
+    Driver-side work touches METADATA only: the file listing and the
+    footers (one per file — ~10⁶ for 100 TB of 100 MB files).  The
+    inventory is read from a local directory with pyarrow.  Each bin's
+    rewrite is its own distributed job, exactly how Delta schedules
+    OPTIMIZE bins (Armbrust et al., VLDB 2020).
 
-    Returns the action report, one row per ORIGINAL file:
-    ``(file, rows, bin_id, n_files_in_bin, action)`` with action in
-    {'rewritten', 'kept'}.
+    Returns the action report as a local frame, one row per ORIGINAL
+    file: ``(file, rows, bin_id, n_files_in_bin, action)`` with action
+    in {'rewritten', 'kept'}.
     """
+    import re as _re
+
     import pyarrow.parquet as pq
 
     if target_rows < 1:
@@ -829,8 +890,6 @@ def optimize_incremental(
     )
     if not names:
         raise ValueError(f"optimize_incremental: no parquet files in {table_path}")
-    import re as _re
-
     gens = [
         int(m.group(1))
         for n in names
@@ -838,15 +897,14 @@ def optimize_incremental(
         if m
     ]
     gen = (max(gens) if gens else 0) + 1
-    inv_rows = [
-        (n, int(pq.ParquetFile(os.path.join(table_path, n)).metadata.num_rows))
-        for n in names
-    ]
-    inv = spark.createDataFrame(inv_rows, "file string, rows bigint")
-    plan = compaction_plan(inv, "rows", int(target_rows), "file")
-    planned = sorted(
-        ((r["file"], int(r["rows"]), int(r["bin_id"])) for r in plan.collect())
-    )
+    metas = {n: pq.read_metadata(os.path.join(table_path, n)) for n in names}
+    # compaction_plan's bin rule: bin_id = (running rows before the file)
+    # div target, in name order
+    planned, before = [], 0
+    for n in names:
+        rows = int(metas[n].num_rows)
+        planned.append((n, rows, before // int(target_rows)))
+        before += rows
     by_bin: dict[int, list[str]] = {}
     for fname, _rows, b in planned:
         by_bin.setdefault(b, []).append(fname)
@@ -857,46 +915,23 @@ def optimize_incremental(
         if len(members) >= 2  # singleton bins stay physically untouched
     }
     if multi:
-        import urllib.parse
-
-        # ONE slim aggregate job computes every rewritten bin's
-        # envelope (r15, guide §2.6/§1.2): the old loop paid one
-        # min/max collect per bin back-to-back; grouping by source
-        # file and folding files → bins on the driver (metadata-scale,
-        # one row per file) gets all envelopes in a single pass.
-        all_paths = [
-            os.path.join(table_path, m)
+        envs = {
+            m: _footer_envelope(metas[m], cols)
             for members in multi.values()
             for m in members
-        ]
-        file_env = {
-            urllib.parse.unquote(os.path.basename(r["__f__"])): r
-            for r in (
-                spark.read.parquet(*all_paths)
-                .groupBy(F.input_file_name().alias("__f__"))
-                .agg(
-                    *[F.min(c).cast("long").alias(f"lo_{c}") for c in cols],
-                    *[F.max(c).cast("long").alias(f"hi_{c}") for c in cols],
-                )
-                .collect()
-            )
         }
+        first = next(iter(multi.values()))[0]
+        schema = spark.read.parquet(os.path.join(table_path, first)).schema
 
         def _envelope(b: int, members: list[str]):
             mins, maxs = {}, {}
             for c in cols:
-                los = [
-                    file_env[m][f"lo_{c}"]
-                    for m in members
-                    if m in file_env and file_env[m][f"lo_{c}"] is not None
-                ]
-                his = [
-                    file_env[m][f"hi_{c}"]
-                    for m in members
-                    if m in file_env and file_env[m][f"hi_{c}"] is not None
-                ]
-                mins[c] = min(los) if los else None
-                maxs[c] = max(his) if his else None
+                found = [envs[m][c] for m in members]
+                los = [e[0] for e in found if e and e[0] is not None]
+                his = [e[1] for e in found if e and e[1] is not None]
+                unknown = None in found
+                mins[c] = min(los) if los and not unknown else None
+                maxs[c] = max(his) if his and not unknown else None
             missing = [c for c in cols if mins[c] is None or maxs[c] is None]
             if missing:
                 raise ValueError(
@@ -911,7 +946,8 @@ def optimize_incremental(
             staging = os.path.join(table_path, f"_staging_bin_{b}")
             (
                 zorder_key(
-                    spark.read.parquet(*paths), cols, mins, maxs, bits_per_dim
+                    spark.read.schema(schema).parquet(*paths),
+                    cols, mins, maxs, bits_per_dim,
                 )
                 .drop(*[f"bin_{c}" for c in cols])
                 .coalesce(1)
@@ -951,7 +987,8 @@ def optimize_incremental(
         )
         for fname, rows, b in planned
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         report,
         "file string, rows bigint, bin_id bigint, n_files_in_bin int,"
         " action string",

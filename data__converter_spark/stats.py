@@ -18,6 +18,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .scale import local_frame
+
 
 def group_quantiles_disc(
     df: DataFrame,
@@ -49,8 +51,8 @@ def group_quantiles_disc(
         F.row_number().over(w).alias("__rn__"),
         F.count(F.lit(1)).over(Window.partitionBy(key)).alias("__n__"),
     )
-    qdf = df.sparkSession.createDataFrame(
-        [(float(q),) for q in qs], schema="q double"
+    qdf = local_frame(
+        df.sparkSession, [(float(q),) for q in qs], schema="q double"
     )
     picked = ranked.join(F.broadcast(qdf)).filter(
         F.col("__rn__") == F.ceil(F.col("q") * F.col("__n__"))

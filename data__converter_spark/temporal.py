@@ -155,8 +155,13 @@ def scd2_apply(
     dimension-sized — flow through the scd2 rebuild windows.  At
     100 TB the nightly cost is proportional to the night's changes,
     while a full rebuild would re-window years of history.
+
+    The touched keys are NOT de-duplicated: they feed only broadcast
+    semi/anti joins, which ignore duplicate build keys, and the
+    broadcast side is bounded by the batch's key column — a
+    ``distinct`` would only add an exchange ahead of the broadcast.
     """
-    touched = changes.select(key).distinct()
+    touched = changes.select(key)
     untouched = dim.join(F.broadcast(touched), key, "left_anti")
     # cur feeds three consumers and the lazy plan duplicates the dim
     # subtree per branch — MEASURED faster than persisting anyway

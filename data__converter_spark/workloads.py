@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import compare
-from .scale import maybe_broadcast
+from .scale import local_frame, maybe_broadcast
 
 # ---------------------------------------------------------------------------
 # engine-portable money arithmetic
@@ -3101,8 +3101,8 @@ def q_pagerank_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
         _trade_edges(spark, sf_dir), max_iterations=4, tol_micro=0,
         probe_every=2, adaptive_cadence=True,
     )
-    return spark.createDataFrame(
-        history, "iteration int, max_delta_micro bigint, changed_nodes bigint"
+    return local_frame(
+        spark, history, "iteration int, max_delta_micro bigint, changed_nodes bigint"
     )
 
 

@@ -142,6 +142,34 @@ def test_tools_path_job_budget(spark, tmp_path):
         assert _next_job_id(spark) == before + 2
 
 
+def test_small_conversions_write_one_part_file(spark, tmp_path):
+    """A converted file is one part file: frames parsed on the driver
+    (XML, Excel sheets, legacy-charset csv) are one partition each,
+    whatever the row count and the session's cores."""
+    import os
+
+    from data__converter_spark.io import xlsx_lite
+
+    def part_files(out):
+        return [n for n in os.listdir(out) if n.startswith("part-")]
+
+    rows = "".join(f"<row><id>{i}</id><v>x{i}</v></row>" for i in range(100))
+    xml = _write(tmp_path, "big.xml", f"<r>{rows}</r>")
+    kr = _write(tmp_path, "kr.csv", "이름,값\n" + "홍길동,1\n" * 50, encoding="euc-kr")
+    book = str(tmp_path / "two.xlsx")
+    xlsx_lite.write_workbook(book, {
+        "s1": (["id", "v"], [[str(i), "a"] for i in range(30)]),
+        "s2": (["id"], [[str(i)] for i in range(20)]),
+    })
+    for src, kw in ((xml, {"xml_row_tag": "row"}), (kr, {"encoding": "euc-kr"}), (book, {})):
+        outputs = convert.convert(spark, [src], "csv", str(tmp_path / "out"), **kw)
+        assert outputs
+        for out in outputs.values():
+            assert len(part_files(out)) == 1, (src, out)
+    back = readers.read_csv(spark, outputs["two_s1"])
+    assert back.count() == 30
+
+
 def test_csv_roundtrip(spark, tmp_path, orders):
     sample = orders.select("o_orderkey", "o_orderstatus", "o_orderpriority").limit(200)
     out = str(tmp_path / "orders_csv")

@@ -11,6 +11,7 @@ regress them at scale while staying correct on test rows.
 
 from __future__ import annotations
 
+import re
 from contextlib import contextmanager
 
 from pyspark.sql import functions as F
@@ -429,6 +430,104 @@ def test_converter_readers_use_no_rdd():
         if ".rdd" in line
     ]
     assert not offenders, f".rdd on the converter's read path: {offenders}"
+
+
+# The createDataFrame calls the package may make: local_frame's own, and
+# the sites whose types Arrow cannot carry exactly, each with its reason.
+_CREATE_DATAFRAME_SITES = {
+    "scale.py": ("spark.createDataFrame(rows, schema)",),
+    "io/readers.py": (
+        # read_json's object-root fallback: Spark infers the column types
+        # (and their widening across rows) from the parsed JSON values;
+        # an explicit Arrow schema would have to re-implement inference.
+        'spark.createDataFrame([(v,) for v in doc], ["value"])',
+        "spark.createDataFrame(doc)",
+    ),
+}
+
+
+def test_driver_rows_become_local_relations():
+    """Rows the driver holds reach Spark through scale.local_frame, an
+    Arrow local relation, never a list-based createDataFrame whose
+    PythonRDD costs a job and a Python worker each time the frame is
+    consumed. Only the named schema-inferring sites are exempt."""
+    import pathlib
+
+    import data__converter_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    offenders = [
+        f"{py.relative_to(root)}:{i}"
+        for py in root.rglob("*.py")
+        for i, line in enumerate(py.read_text().splitlines(), 1)
+        if "createDataFrame(" in line.split("#", 1)[0]
+        and not any(
+            site in line
+            for site in _CREATE_DATAFRAME_SITES.get(str(py.relative_to(root)), ())
+        )
+    ]
+    assert not offenders, f"list-based createDataFrame: {offenders}"
+
+
+def test_ivm_retraction_refresh_is_one_exchange(spark, tmp_path):
+    """refresh_with_retractions aggregates once: the delta rows reach
+    the union as a signed projection, not a pre-aggregate, so over a
+    stored state the refresh is ONE hash exchange; the output keeps
+    the state's schema. In ivm_retract_orders the only other keyed
+    exchange builds the state from orders."""
+    from data__converter_spark.ivm import aggregate_state, refresh_with_retractions
+    from data__converter_spark.workloads import QUERIES
+
+    measures = {"n": ("count", None), "s": ("sum", "v"), "d": ("sum", "w")}
+    rows = spark.createDataFrame(
+        [("a", 3, 1.5, 1), ("b", 4, 2.0, 1), ("a", 3, 1.5, -1)],
+        "k string, v int, w double, sign int",
+    )
+    aggregate_state(rows.filter("sign > 0"), ["k"], measures).write.parquet(
+        str(tmp_path / "state")
+    )
+    state = spark.read.parquet(str(tmp_path / "state"))
+    out = refresh_with_retractions(state, rows, ["k"], measures, "sign", "n")
+    assert plan_of(out).count("Exchange hashpartitioning") == 1
+    assert out.schema == state.schema
+    assert sorted(map(tuple, out.collect())) == [("a", 1, 3, 1.5), ("b", 2, 8, 4.0)]
+
+    p = plan_of(QUERIES["ivm_retract_orders"](spark, SF_DIR))
+    assert p.count("Exchange hashpartitioning") == 2
+    # partial + final for the state build and for the one merge
+    assert p.count("HashAggregate") == 4
+
+
+def _subtrees(plan: str, node: str) -> list[str]:
+    """The text of every subtree rooted at a line naming ``node``."""
+    lines = plan.splitlines()
+    out = []
+    for i, line in enumerate(lines):
+        at = line.find(node)
+        if at == -1:
+            continue
+        sub = [line]
+        for nxt in lines[i + 1:]:
+            # a child's "+- "/":- " marker sits under its parent's name
+            marker = re.search(r"[+:]- ", nxt)
+            if marker is None or marker.start() < at:
+                break
+            sub.append(nxt)
+        out.append("\n".join(sub))
+    return out
+
+
+def test_scd2_apply_broadcasts_touched_keys_without_a_shuffle(spark):
+    """scd2_apply: the touched keys feed only broadcast semi/anti joins,
+    which ignore duplicate build keys, so no aggregate and exchange
+    de-duplicate them ahead of the broadcast; the keyed exchanges left
+    are the scd2 windows'."""
+    from data__converter_spark.workloads import QUERIES
+
+    p = plan_of(QUERIES["scd2_apply_events"](spark, SF_DIR))
+    builds = _subtrees(p, "BroadcastExchange")
+    assert builds and not any("HashAggregate" in b for b in builds)
+    assert p.count("Exchange hashpartitioning") == 5
 
 
 def test_no_query_uses_rowwise_python_or_cartesian(spark):

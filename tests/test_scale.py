@@ -750,3 +750,127 @@ def test_optimize_incremental_repeat_run_never_clobbers_prior_output(spark, tmp_
     back = spark.read.parquet(str(table))
     assert back.count() == 160
     assert back.agg(F.sum("a")).collect()[0][0] == sum(range(160))
+
+
+def _next_job_id(spark) -> int:
+    return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+
+
+def test_local_frame_matches_list_path_with_no_job(spark):
+    """Every type the driver-held frames carry (long, int, double,
+    string, binary, array, struct, timestamp, null, and the empty list)
+    comes back from local_frame with the values and schema a list-based
+    createDataFrame gives, collects with no job, and has no PythonRDD
+    in its lineage."""
+    import datetime
+
+    cases = [
+        (
+            [
+                (1, 2, 1.5, "a", bytearray(b"xy"), [1.0, -2.0], (3, "s"),
+                 datetime.datetime(2020, 1, 2, 3, 4, 5, 6), None),
+                (None,) * 9,
+            ],
+            "a long, b int, c double, d string, e binary, f array<double>,"
+            " g struct<x:int,y:string>, h timestamp, n void",
+        ),
+        ([(7, [(1, "q"), (2, None)])], "a long, b array<struct<x:long,y:string>>"),
+        ([], "a long, b string"),
+    ]
+    for rows, schema in cases:
+        want = spark.createDataFrame(rows, schema)
+        got = scale.local_frame(spark, rows, schema)
+        assert got.schema == want.schema
+        before = _next_job_id(spark)
+        rows_got = got.collect()
+        assert _next_job_id(spark) - before == 0
+        assert rows_got == want.collect()
+        assert "PythonRDD" not in got._jdf.queryExecution().toRdd().toDebugString()
+
+
+def _parquet_file(spark, tmp_path, path: str, df) -> None:
+    """Land ``df`` as the single parquet file ``path``."""
+    import os
+    import shutil
+
+    staging = str(tmp_path / "_one")
+    df.coalesce(1).write.mode("overwrite").parquet(staging)
+    part = [p for p in os.listdir(staging) if p.endswith(".parquet")][0]
+    shutil.move(os.path.join(staging, part), path)
+
+
+def test_optimize_incremental_two_file_table_job_budget(spark, tmp_path):
+    """The plan comes from the footers: compacting a two-file table runs
+    the bin's write and nothing else — no planning, envelope or report
+    job (the report is a local frame)."""
+    table = tmp_path / "t"
+    table.mkdir()
+    for name, lo, hi in (("a.parquet", 0, 100), ("b.parquet", 100, 150)):
+        _parquet_file(spark, tmp_path, str(table / name),
+                      spark.range(lo, hi).select(F.col("id").alias("k")))
+    before = _next_job_id(spark)
+    report = scale.optimize_incremental(spark, str(table), ["k"], 1000).collect()
+    assert _next_job_id(spark) - before <= 2
+    assert [(r.file, r.rows, r.action) for r in report] == [
+        ("a.parquet", 100, "rewritten"), ("b.parquet", 50, "rewritten")
+    ]
+    assert spark.read.parquet(str(table)).count() == 150
+
+
+def test_footer_envelope_equals_min_max_over_row_groups(spark, tmp_path):
+    """The footer envelope of a file with several row groups, negative
+    keys and NULLs equals F.min/F.max over the file; a NULL-only or
+    absent column contributes nothing."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    n = 1000
+    path = str(tmp_path / "rg.parquet")
+    pq.write_table(
+        pa.table({
+            "k": pa.array([(i * 7919) % 2003 - 1500 for i in range(n)], pa.int64()),
+            "s": pa.array([None if i % 3 else -i for i in range(n)], pa.int32()),
+            "z": pa.array([None] * n, pa.int64()),
+        }),
+        path,
+        row_group_size=128,
+    )
+    meta = pq.read_metadata(path)
+    assert meta.num_row_groups > 1
+    want = spark.read.parquet(path).agg(
+        *[f(c).cast("long") for c in ("k", "s") for f in (F.min, F.max)]
+    ).collect()[0]
+    env = scale._footer_envelope(meta, ["k", "s", "z", "absent"])
+    assert env == {
+        "k": (want[0], want[1]), "s": (want[2], want[3]),
+        "z": (None, None), "absent": (None, None),
+    }
+    assert want[0] < 0
+
+
+def test_optimize_incremental_unbounded_member_raises_null_envelope(spark, tmp_path):
+    """A bin whose z column has no footer min/max to plan from raises
+    the NULL-envelope error before anything is written: a member that
+    holds values but no statistics, or members that are all NULL."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    def table_of(name, files):
+        t = tmp_path / name
+        t.mkdir()
+        for fname, values, stats in files:
+            pq.write_table(pa.table({"k": pa.array(values, pa.int64())}),
+                           str(t / fname), write_statistics=stats)
+        return t
+
+    no_stats = table_of("no_stats", [("a.parquet", [1, 2], False),
+                                     ("b.parquet", [3, 4], True)])
+    all_null = table_of("all_null", [("a.parquet", [None, None], True),
+                                     ("b.parquet", [None], True)])
+    for t in (no_stats, all_null):
+        before = sorted(os.listdir(t))
+        with pytest.raises(ValueError, match="NULL envelope"):
+            scale.optimize_incremental(spark, str(t), ["k"], 100)
+        assert sorted(n for n in os.listdir(t) if not n.startswith("_")) == before

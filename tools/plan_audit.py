@@ -97,7 +97,7 @@ SHOWCASE = [
     ("bm25_indexed", "corpus side is ONE parquet scan of the written postings artifact — no tokenizer, no corpus aggregate in the plan; stats is a broadcast 1-row scalar; the ranking is a single term-keyed equi-join + per-query bounded window"),
     ("sparse_indexed", "postings artifact scan + term equi-join + (query,doc) partial-sum aggregate; the max_df cap is a pushed-down filter on the stored df column, not a df-aggregate + semi-join"),
     ("skew_key_events", "one map-side-combining count aggregate on the key; TakeOrderedAndProject for the top-20 (never a global sort — the rank window runs over the already-limited rows); totals scalar broadcast-hinted"),
-    ("scd2_apply_events", "closed history and untouched keys pass through semi/anti joins WITHOUT entering any window; only (touched current rows ∪ change batch) — batch-sized — flows through the two shared-exchange scd2 windows"),
+    ("scd2_apply_events", "closed history and untouched keys pass through semi/anti joins WITHOUT entering any window; the touched keys broadcast straight from the batch scan (no distinct aggregate or exchange — semi/anti joins ignore duplicate build keys); only (touched current rows ∪ change batch) — batch-sized — flows through the two shared-exchange scd2 windows"),
     ("resample_user_daily", "sequence()+explode generates each key's own day spine — no calendar table, no driver loop; day-last is a max_by hash aggregate (no window); ONE keyed window does the carry-forward"),
     ("k_anonymity_audit", "one hash aggregate to class granularity (count + two-phase distinct inside the same key exchange), persisted; the risk total is a 1-row broadcast over the cached CLASS table — exactly one customer scan in the plan"),
     ("ewma_nation_daily", "sort-free EWMA: explode(sequence) scatters each daily point into its 8 decay targets, one (key, day) hash aggregate folds them — no per-key ORDER BY window anywhere; the daily frame is persisted for its two consumers (scatter + last-day bound)"),
@@ -109,9 +109,9 @@ SHOWCASE = [
     ("fk_orphan_audit", "three independent one-pass branches in one union: key projection -> LEFT join on the dimension's distinct keys (hit marker, broadcast when dim-sized) -> ONE conditional aggregate — the fact is never re-scanned per count"),
     ("typo_pairs_names", "FastSS deletion index: ONE exchange on the variant; candidate pairs form INSIDE each <=cap posting list (sorted structs, id_a < id_b by construction) — no freq-count join, no variant self-join; JVM levenshtein verifies candidates only"),
     ("ivm_join_nation", "delta-join IVM over states: new-fact aggregate joins the full dimension, new dims join the standing per-key fact state (late-arriving dimension rows surface here), both merge with COMBINE fns — the base fact appears once (building the initial state), never in the maintenance terms"),
-    ("ivm_retract_orders", "signed-state IVM: the retraction batch aggregates with sign-weighted sum/count, merges as a plain state union (deletes are additive), and a count>0 filter drops fully-retracted keys — one union + one key exchange, base never rescanned"),
+    ("ivm_retract_orders", "signed-state IVM: the retraction rows project to sign-weighted sum/count (cast to the state's types) and union with the standing state; ONE merge aggregate folds both (deletes are additive) and a count≠0 filter drops fully-retracted keys — one key exchange over the union (the other builds the state from orders), base never rescanned"),
     ("ivm_minmax_orders", "retractable extrema: per-key bounded top-4 window state; maintenance splits touched/untouched keys via semi/anti joins, per-key windows run over distinct-value cells filtered to k before any array builds, and repair scopes the base rescan to flagged keys by semi-join — never a full base scan, no unbounded collect"),
-    ("optimize_incremental", "incremental OPTIMIZE: bin planning runs over the FILE INVENTORY (footer row counts, metadata-scale), only multi-file bins rewrite (one distributed z-sort job per bin, Delta's own schedule), singleton-bin files stay byte-identical on disk; the report plan is inventory-sized"),
+    ("optimize_incremental", "incremental OPTIMIZE: bins and each bin's z envelope are planned on the driver from the parquet footers (row counts, row-group min/max) — no planning or envelope job; only multi-file bins rewrite (one distributed z-sort job per bin, Delta's own schedule), singleton-bin files stay byte-identical on disk; the report is an inventory-sized local relation (LocalTableScan)"),
     ("cluster_split", "leakage-safe split: the near-dup pair graph (LSH-verified, tiny next to the corpus) labels via the hybrid CC path; the corpus touches ONE left join against the label table plus a narrow md5 projection — no corpus self-join, no window"),
     ("segment_diversity", "one scan to (group, label) cells, one grid-sized re-aggregate; Gini and inverse-Simpson are rational in the counts, so both are cross-multiplied BIGINTs — no log, no float"),
     ("image_dhash_pairs", "one Arrow mapInPandas pass emits 2 longs per image; 16-bit band posting lists generate pairs in ONE exchange (hot-bucket cap); Hamming verification is JVM bit_count(xor) — all-pairs never in the plan"),
