@@ -70,7 +70,6 @@ def pagerank(
     damping_permille: int = 850,
     src_col: str = "src",
     dst_col: str = "dst",
-    persist_invariants: bool = False,
 ) -> DataFrame:
     """Fixed-iteration PageRank over a directed edge list, exact
     integer micro-units.
@@ -95,8 +94,6 @@ def pagerank(
     """
     if iterations < 0:
         raise ValueError(f"iterations must be >= 0, got {iterations}")
-    from .scale import persisted
-
     e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
     nodes = (
         e.select(F.col("src").alias("node"))
@@ -110,14 +107,10 @@ def pagerank(
     # reuse dedups them physically (the executed plan shows
     # ReusedExchange, not repeated scans) — measured at sf0.1, forcing
     # a persist only adds materialization barriers (3.1 s lazy vs
-    # 4.0 s persisted steady-state).  ``persist_invariants`` exists for
-    # the multi-ACTION form (e.g. convergence loops that inspect ranks
-    # between supersteps), where each action re-plans and exchange
-    # reuse can no longer see across jobs.
+    # 4.0 s persisted steady-state).  The multi-ACTION form
+    # (:func:`pagerank_until`) persists them, because each action
+    # re-plans and exchange reuse cannot see across jobs.
     e_deg = e.join(out_deg, "src")
-    if persist_invariants and iterations > 0:
-        e_deg = persisted(e_deg)
-        nodes = persisted(nodes)
     ranks = nodes.select(
         "node", F.lit(RANK_SCALE).cast("bigint").alias("rank_micro")
     )
@@ -170,14 +163,14 @@ def pagerank_until(
     cadence-invariant by construction; the long-run probe thinning is
     pinned in tests/test_graph.py).
 
-    This is the multi-ACTION form :func:`pagerank` documents behind
-    ``persist_invariants``: the loop persists the invariant
-    degree-annotated edge frame and each probe's (node, rank) state
-    (every cache routes through ``scale.persisted`` so a long session
-    can free them); the inter-probe update chain stays lazy.  The
-    probe needs NO self-join — the chain carries the previous probe's
-    rank in-row, so the probe is a plain aggregate over the state it
-    just materialized.  Update arithmetic is identical to
+    This is the multi-ACTION form :func:`pagerank` documents: the
+    loop persists the invariant degree-annotated edge frame and pins
+    each probe's (node, rank) state, releasing the previous one once
+    the probe has read it (both go through ``scale``'s registry, so a
+    long session can free them); the inter-probe update chain stays
+    lazy.  The probe needs NO self-join — the chain carries the
+    previous probe's rank in-row, so the probe is a plain aggregate
+    over the state it just materialized.  Update arithmetic is identical to
     :func:`pagerank`; with ``tol_micro=0`` the loop runs exactly
     ``max_iterations`` supersteps (a max-|Δ| of 0 would need
     bit-identical consecutive iterations, which teleport-floor
@@ -189,7 +182,7 @@ def pagerank_until(
         raise ValueError(f"max_iterations must be >= 1, got {max_iterations}")
     if probe_every < 1:
         raise ValueError(f"probe_every must be >= 1, got {probe_every}")
-    from .scale import persisted
+    from .scale import persisted, pinned, release
 
     # the raw edge projection persists too (r14): nodes references it
     # twice (both union legs) and the degree join once more, and in
@@ -239,8 +232,8 @@ def pagerank_until(
                 _pr_damped(damping_permille).alias("rank_micro"),
             )
         done += steps
-        # localCheckpoint (the connected_components per-round idiom)
-        # rather than persist: caching keeps the full logical lineage,
+        # pinned (the connected_components per-round idiom) rather
+        # than persisted: caching keeps the full logical lineage,
         # which grows ~2^window PER PROBE (each superstep references
         # the previous state twice) — a long adaptive run OOMs the
         # driver just BUILDING plan strings. Checkpointing stores the
@@ -250,7 +243,7 @@ def pagerank_until(
         # — safe ONLY because that aggregate scans every partition
         # immediately below; a partial first action (e.g. limit(1))
         # must keep the eager default.
-        ranks = cur.localCheckpoint(eager=False)
+        prev, ranks = ranks, pinned(cur, eager=False)
         probe = ranks.agg(
             F.max(
                 F.abs(F.col("rank_micro") - F.col("prev_micro"))
@@ -259,6 +252,7 @@ def pagerank_until(
                 (F.col("rank_micro") != F.col("prev_micro")).cast("bigint")
             ).alias("changed"),
         ).collect()[0]
+        release(prev)
         max_delta = int(probe["max_delta"] or 0)
         history.append((done, max_delta, int(probe["changed"] or 0)))
         if max_delta <= tol_micro:
@@ -373,7 +367,7 @@ def bfs_hops(
     CURRENT FRONTIER (not the whole distance table) against the edge
     frame, dedupes the successor set, and anti-joins the visited set —
     so a level's cost is frontier-sized, and the visited table is
-    node-sized (never edge-sized).  ``localCheckpoint`` per level
+    node-sized (never edge-sized).  A pinned frontier per level
     truncates the superstep lineage exactly as in
     :func:`connected_components` / :func:`pagerank_until`; the
     empty-frontier early exit is a bounded O(1)-row aggregate probe.
@@ -398,7 +392,7 @@ def bfs_hops(
         raise ValueError(f"max_hops must be >= 0, got {max_hops}")
     if probe_every < 1:
         raise ValueError(f"probe_every must be >= 1, got {probe_every}")
-    from .scale import persisted
+    from .scale import persisted, pinned
 
     spark = edges.sparkSession
     e = edges.select(
@@ -406,9 +400,8 @@ def bfs_hops(
         F.col(dst_col).cast("long").alias("dst"),
     )
     e = persisted(e)
-    dist = local_frame(
-        spark, [(int(source), 0)], "node long, hop int"
-    ).localCheckpoint()
+    # a local relation: no lineage to cut, so no checkpoint job
+    dist = local_frame(spark, [(int(source), 0)], "node long, hop int")
     frontier = dist.select("node")
     for h in range(1, max_hops + 1):
         succ = (
@@ -427,7 +420,7 @@ def bfs_hops(
             dist = dist.unionByName(new)
             break
         if h % probe_every == 0:
-            new = new.localCheckpoint()
+            new = pinned(new)
             if new.limit(1).count() == 0:
                 break
         dist = dist.unionByName(new)

@@ -251,7 +251,8 @@ def _postings_pair_counts(sets, id_col: str, max_freq: int | None):
     # immaterial next to the score filters). Persisted because the
     # plan reads it three ways (a-side, b-side, sizes); without it the
     # element generation recomputes per branch. Routed through
-    # scale.persisted so release_persisted() frees it with the rest.
+    # scale.persisted, which registers it for release with every other
+    # held frame.
     postings = persisted(
         sets.select(F.col(id_col), F.explode("sh").alias("s")).select(
             F.col(id_col), F.xxhash64("s").alias("s")
@@ -779,14 +780,15 @@ def connected_components(
     on the edge key.
 
     Distributed-path scale notes: the iterating frames hold only
-    (id, label) pairs. ``localCheckpoint`` truncates lineage each round
-    so plan depth stays O(1); on a real cluster with unreliable
-    executors prefer ``setCheckpointDir`` + ``checkpoint()``. The
+    (id, label) pairs. :func:`~..scale.pinned` truncates lineage each
+    round so plan depth stays O(1) (its reliable-checkpoint escape
+    hatch covers clusters with unreliable executors), and the previous
+    round's labels are released once the probe has read them. The
     per-round convergence probe is a ``limit(1).count()`` on the
     changed-label join — an O(1) action, not a collect. Raises on
     non-convergence rather than returning silently-partial labels.
     """
-    from ..scale import persisted
+    from ..scale import persisted, pinned, release
 
     edges = persisted(
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst")).union(
@@ -831,14 +833,13 @@ def connected_components(
             [T.StructField("id", id_type), T.StructField("component", id_type)]
         )
         out = local_frame(pairs.sparkSession, data, schema)
-        edges.unpersist()
+        release(edges)
         return out
 
-    labels = (
+    labels = pinned(
         edges.select(F.col("src").alias("id"))
         .distinct()
         .select("id", F.col("id").alias("component"))
-        .localCheckpoint()
     )
     changed = 0
     for _ in range(max_iter):
@@ -853,12 +854,12 @@ def connected_components(
             .agg(F.min("scomp").alias("ncomp"))
             .select(F.col("dst").alias("id"), "ncomp")
         )
-        new_labels = labels.join(neighbor_min, "id", "left").select(
+        new_labels = pinned(labels.join(neighbor_min, "id", "left").select(
             "id",
             F.least(
                 F.col("component"), F.coalesce(F.col("ncomp"), F.col("component"))
             ).alias("component"),
-        ).localCheckpoint()
+        ))
         changed = (
             new_labels.alias("n")
             .join(labels.alias("o"), "id")
@@ -866,10 +867,11 @@ def connected_components(
             .limit(1)
             .count()
         )
+        release(labels)
         labels = new_labels
         if changed == 0:
             break
-    edges.unpersist()
+    release(edges)
     if changed != 0:
         # Partial labels are silently WRONG (extra components), so fail
         # loudly: callers advertising exact transitive closure

@@ -19,32 +19,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import commit
-from ..scale import local_frame
+from ..scale import local_frame, pinned, release
 from .textstats import quality_score_col, sample_hash_col, scrub_pii_col
-
-
-def _pin(df: DataFrame) -> DataFrame:
-    """Eagerly materialize a small intermediate frame and SEVER its
-    lineage — the ingest paths' pin for frames referenced by several
-    consumers (each lineage reference would otherwise re-embed, and
-    under AQE re-execute, the whole upstream subtree; guide §2.4/§7.2).
-
-    Failure-tolerance trade (VERDICT r14): the default
-    ``localCheckpoint(eager=True)`` stores blocks on executors ONLY —
-    on a real cluster an executor loss mid-call fails the job
-    unrecoverably (lineage is gone, so nothing can recompute), unlike
-    a persist (recompute) or a reliable checkpoint (replicated
-    storage).  That is deliberate here: every pinned frame is
-    batch-sized and every commit below it is replay-safe, so the
-    recovery story is "re-run the batch", not "recover the blocks".
-    Escape hatch for clusters where executor loss is routine: set a
-    reliable checkpoint dir (``spark.sparkContext.setCheckpointDir``)
-    and these frames checkpoint to fault-tolerant storage instead —
-    same values, same lineage cut, durable blocks."""
-    sc = df.sparkSession.sparkContext
-    if sc.getCheckpointDir() is not None:
-        return df.checkpoint(eager=True)
-    return df.localCheckpoint(eager=True)
 
 
 def pretraining_pipeline(
@@ -249,20 +225,22 @@ def _verify_pairs(
     by a broadcast semi-join on the candidate ids before the shingle
     arrays attach — the corpus-scale front is scanned, never
     shuffled, and the equi-joins that follow run over batch-sized
-    frames only.  r14 (guide §2.3/§7.2): the candidate frame is
-    eagerly localCheckpointed first — it was referenced three times
+    frames only.  r14 (guide §2.3/§7.2): the candidate frame is pinned
+    first — it was referenced three times
     (both id-prune legs + the verify join), each reference EMBEDDING
     the whole band-join subtree by value, which tripled the executed
     AQE stage count — and the front is pruned ONCE on the union of
     both id columns (one corpus scan instead of two), with both
     shingle legs derived from the checkpointed batch-sized pruned
     frame; ids appearing on only one side add rows the inner
-    equi-join drops, so the pair set is unchanged.  The build path
-    leaves it False: there the candidate set is
+    equi-join drops, so the pair set is unchanged.  In this shape the
+    verified pairs are pinned too, and the two pinned inputs are
+    released as soon as that pin lands.  The build path leaves it
+    False: there the candidate set is
     corpus-bucket-co-occupancy-sized — collecting it to a checkpoint
     or broadcasting its ids would be wrong."""
     if broadcast_cand:
-        cand = cand.transform(_pin)
+        cand = pinned(cand)
         # no .distinct() (r15): the broadcast semi-join prune is
         # set-shaped regardless; the distinct paid an exchange only to
         # shrink a batch-co-occupancy-sized broadcast
@@ -270,15 +248,14 @@ def _verify_pairs(
             cand.select(F.col("id_a").alias(id_col))
             .unionByName(cand.select(F.col("id_b").alias(id_col)))
         )
-        pruned = front.join(
-            F.broadcast(ids), id_col, "left_semi"
-        ).transform(_pin)
+        pruned = pinned(front.join(F.broadcast(ids), id_col, "left_semi"))
         sh_a = pruned.select(
             F.col(id_col).alias("id_a"), F.col("hs").alias("hs_a")
         )
         sh_b = pruned.select(
             F.col(id_col).alias("id_b"), F.col("hs").alias("hs_b")
         )
+        held = (cand, pruned)
         cand = F.broadcast(cand)
     else:
         sh_a = front.select(
@@ -291,12 +268,17 @@ def _verify_pairs(
     # integer as array_union's size at half the per-candidate work
     inter = F.size(F.array_intersect("hs_a", "hs_b")).cast("double")
     union = (F.size("hs_a") + F.size("hs_b")).cast("double") - inter
-    return (
+    verified = (
         cand.join(sh_a, "id_a")
         .join(sh_b, "id_b")
         .select("id_a", "id_b", (inter / union).alias("jaccard"))
         .filter(F.col("jaccard") >= F.lit(float(threshold)))
     )
+    if not broadcast_cand:
+        return verified
+    verified = pinned(verified)
+    release(*held)
+    return verified
 
 
 # Tables of the standing ingest state that are mutated through
@@ -527,6 +509,7 @@ def _current_assign(
     id_field=None,
     digests: DataFrame | None = None,
     base: DataFrame | None = None,
+    held: list | None = None,
 ):
     """The CURRENT standing assignment table — base ∪ latest-per-doc
     delta overrides.  The base is written once (build) and folded by
@@ -552,13 +535,15 @@ def _current_assign(
     Scale shape: the delta between compactions is batches-sized, so
     every probe here broadcasts the delta side; the corpus-scale base
     and digests tables are scanned, never shuffled.  The folded
-    ``latest`` frame is eagerly localCheckpointed (r14, guide §7.2):
+    ``latest`` frame is pinned (r14, guide §7.2):
     callers reference the returned frame more than once (the ingest's
     touched-cluster probe and its member pull), and each reference
     used to re-execute the whole digest-membership + ``max_by`` fold —
     after the checkpoint a reference costs one base scan plus a
     broadcast of the batch-sized fold, and the checkpoint itself is
-    batch-sized (never the corpus)."""
+    batch-sized (never the corpus).  A caller passing a ``held`` list
+    gets the pinned fold appended, to release once it is done with
+    the returned frame."""
     # Reads take the writer-side schema contract when the caller can
     # supply the id field (r15: skips one footer-inference job per
     # table); the public no-hints path infers the assign schema once
@@ -602,11 +587,13 @@ def _current_assign(
     )
     delta = delta.join(F.broadcast(live_ids), id_col, "left_semi")
     val_cols = [c for c in base.columns if c != id_col]
-    latest = (
+    latest = pinned(
         delta.groupBy(id_col)
         .agg(F.max_by(F.struct(*val_cols), F.col("seq")).alias("__v__"))
         .select(id_col, "__v__.*")
-    ).transform(_pin)
+    )
+    if held is not None:
+        held.append(latest)
     return base.join(
         F.broadcast(latest.select(id_col)), id_col, "left_anti"
     ).unionByName(latest)
@@ -925,8 +912,8 @@ def ingest_pipeline_incremental(
         confirmed = digests_t.select("dg").join(
             F.broadcast(maybe_keys), "dg", "left_semi"
         )
-        # EAGER localCheckpoint rather than persist (r15): surv_keys is
-        # the batch's survivor (id, dg) set — referenced by the batch
+        # Pinned rather than persisted (r15): surv_keys is the
+        # batch's survivor (id, dg) set — referenced by the batch
         # key, the survivor semi-join, AND (new this round) the commit
         # block's bloom/digests appends.  A persist keeps lineage over
         # the PRE-COMMIT digests listing, which is why the appends had
@@ -934,8 +921,8 @@ def ingest_pipeline_incremental(
         # corpus-text scans per ingest); the checkpoint has no lineage
         # to go stale, so the appends read the materialized batch-sized
         # blocks directly.  Failure-tolerance trade documented on
-        # ingest_pipeline_incremental.
-        surv_keys = _pin(new_keys.join(confirmed, "dg", "left_anti"))
+        # scale.pinned.
+        surv_keys = pinned(new_keys.join(confirmed, "dg", "left_anti"))
         # deterministic batch identity: an order-independent reduction
         # of the survivor digest set (+ count).  A crash replay, whose
         # survivor set is identical because the digests commit point
@@ -964,14 +951,14 @@ def ingest_pipeline_incremental(
         # 393 parquet scans / 309 BroadcastExchanges in ONE plan string
         # and the candidate+verify block alone cost 52 of the call's
         # 108 jobs — almost all AQE broadcast stages over duplicated
-        # cached subtrees plus the driver planning them.  An EAGER
-        # localCheckpoint here (batch-sized rows — guide §2.4/§7.2:
-        # shrink the plan, not just the data) makes every downstream
+        # cached subtrees plus the driver planning them.  Pinning here
+        # (batch-sized rows — guide §2.4/§7.2: shrink the plan, not
+        # just the data) makes every downstream
         # reference a flat scan; cache=False because the checkpoint is
         # the kernel's only materialization.
         f_new = _minhash_front(
             survivors, col, id_col, k, num_hashes, seed, cache=False
-        ).transform(_pin)
+        ).transform(pinned)
         b_new = persisted(
             _band_frame(
                 f_new.select(id_col, "sig"), id_col, bands, rows_per_band
@@ -1010,9 +997,9 @@ def ingest_pipeline_incremental(
         combined_hs = f_ref.select(id_col, "hs").unionByName(
             f_new.select(id_col, "hs")
         )
-        # localCheckpoint, not persist: new_pairs is referenced by
-        # touched/graph/the pairs append, and each reference would
-        # EXPAND its whole logical subtree again in every downstream
+        # Pinned (by _verify_pairs' broadcast shape), not persisted:
+        # new_pairs is referenced by touched/graph/the pairs append,
+        # and each reference would EXPAND its whole logical subtree again in every downstream
         # plan (treeString prints shared subtrees by value — the
         # composed receipt plan grows multiplicatively and its
         # per-action stringification alone reached driver-heap scale).
@@ -1025,16 +1012,17 @@ def ingest_pipeline_incremental(
             id_col,
             threshold,
             broadcast_cand=True,
-        ).transform(_pin)
+        )
         # --- batch-sized component relabel over touched clusters ---
         # (the docstring's step 3).  Reads of the corpus-scale assign
         # table are broadcast-pruned scans; the cc runs on new pairs +
         # star edges of the touched clusters' members only.  The
         # broadcast probe sides skip .distinct() (r15): semi-joins are
         # set-shaped anyway, and both frames are batch-sized.
+        held: list = []
         cur = _current_assign(
             spark, path, exclude_batch_key=batch_key,
-            id_field=id_field, digests=digests_t,
+            id_field=id_field, digests=digests_t, held=held,
         )
         touched = (
             new_pairs.select(F.col("id_a").alias(id_col))
@@ -1048,7 +1036,7 @@ def ingest_pipeline_incremental(
         # nodes, and the reassign diff — three plan references
         members = cur.join(
             F.broadcast(touched_clusters), "cluster_id", "left_semi"
-        ).transform(_pin)
+        ).transform(pinned)
         star = members.filter(F.col(id_col) != F.col("cluster_id")).select(
             F.col(id_col).alias("id_a"), F.col("cluster_id").alias("id_b")
         )
@@ -1169,19 +1157,19 @@ def ingest_pipeline_incremental(
                 _append_front, _append_bloom,
             )
             dg_new.write.mode("append").parquet(f"{path}/digests")
-        # Release THIS call's cached frames now that the receipt and
-        # the state commits are durable: their plans embed pre-commit
-        # file listings of the state tables, and Spark's CacheManager
-        # would substitute them into a LATER call's identical-looking
-        # scan subtrees — recomputing evicted blocks from files the
-        # swap has deleted.  (The receipt read has no cached ancestry.)
-        # (f_new/surv_keys/new_pairs/members are localCheckpoints —
-        # their blocks are reclaimed by the ContextCleaner when the
-        # frames go out of scope, and they never enter the
-        # CacheManager, so the stale plan-substitution hazard doesn't
-        # apply to them.)
-        for _frame in (new_keys, survivors, b_new):
-            _frame.unpersist()
+        # Release THIS call's held frames now that the receipt and the
+        # state commits are durable.  The persisted ones' plans embed
+        # pre-commit file listings of the state tables, and Spark's
+        # CacheManager would substitute them into a LATER call's
+        # identical-looking scan subtrees — recomputing evicted blocks
+        # from files the swap has deleted.  The pinned ones never enter
+        # the CacheManager, but nothing frees their blocks until they
+        # are released, so a stream of calls would pile them up.  (The
+        # receipt read has no held ancestry.)
+        release(
+            new_keys, survivors, b_new, surv_keys, f_new, new_pairs,
+            members, *held,
+        )
         return receipt
     finally:
         _release_lease(spark, path, token)
@@ -1293,6 +1281,7 @@ def ingest_state_compact(
         id_field = front.schema.fields[0]
         id_col = id_field.name
 
+        held: list = []
         run_jobs(
             # one row per id — replay duplicates are bit-identical (the
             # Arrow kernel is deterministic), so the hash-aggregate
@@ -1321,9 +1310,10 @@ def ingest_state_compact(
             ),
             lambda: _fold(
                 "assign",
-                _current_assign(spark, path, id_field=id_field),
+                _current_assign(spark, path, id_field=id_field, held=held),
             ),
         )
+        release(*held)
         run_jobs(
             lambda: _fold(
                 "digests",
@@ -1356,7 +1346,7 @@ def ingest_state_compact(
             .withColumn("m_bits", F.lit(int(m_bits)))
             .withColumn("k_hashes", F.lit(int(cur_k))),
         )
-        dgd.unpersist()
+        release(dgd)
         prm["m_bits"] = int(m_bits)
         _fold(
             "params",

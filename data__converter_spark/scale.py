@@ -18,6 +18,10 @@ knobs that need cooperation from the data layout or the query author:
   or a second reduce merges partials (agg). AQE's skew-join handles
   the join case adaptively at runtime; explicit salting is for the
   aggregation case and for engines/readers where AQE is off.
+
+- **Materialization** (:func:`persisted`, :func:`pinned`,
+  :func:`release`): the only place a frame is cached or checkpointed,
+  so every held block is registered and can be freed.
 """
 
 from __future__ import annotations
@@ -32,76 +36,101 @@ from pyspark.sql import types as T
 from . import commit
 
 
-#: Frames/RDDs cached via :func:`persisted`, awaiting release. Long-lived
-#: sessions (notebooks, services) call :func:`release_persisted` between
-#: jobs; otherwise MEMORY_AND_DISK blocks accumulate until session end.
-#: A thread's innermost :func:`persist_scope` captures its frames instead,
-#: so concurrent jobs sharing the module release only their own caches.
-_PERSISTED: list = []
+#: The one registry of held frames: every frame (or RDD) cached by
+#: :func:`persisted` or checkpointed by :func:`pinned`, keyed by
+#: ``id()`` (the entry holds the handle, so no id is reused while
+#: registered) with a flag marking the pinned ones.  Long-lived
+#: sessions (notebooks, services) call :func:`release_persisted`
+#: between jobs; otherwise the blocks accumulate until session end.
+_HELD: dict = {}
+_HELD_LOCK = _threading.Lock()
 
-_SCOPES = _threading.local()
+
+def _hold(frame, is_pinned: bool):
+    with _HELD_LOCK:
+        _HELD[id(frame)] = (frame, is_pinned)
+    return frame
 
 
 def persisted(df):
     """Engine-wide spill policy for a frame (or RDD) that feeds
     multiple plan branches: MEMORY_AND_DISK — recomputation is the
-    thing being avoided, so spill rather than evict at scale.
+    thing being avoided, so spill rather than evict at scale.  Lineage
+    is kept, so a lost or released block is recomputed.
 
-    The handle is recorded so :func:`release_persisted` can free every
-    cache block after the consuming job's final action — or, when the
-    calling thread is inside a :func:`persist_scope`, on that scope so
-    only its owner releases it. Operators whose cached frame dies
-    inside one call (e.g. connected_components' edges) still unpersist
-    inline themselves.
+    The handle is registered so :func:`release` (one frame, as soon as
+    its consumers are done) or :func:`release_persisted` (every held
+    frame, after a job's final action) frees the cache blocks.
     """
     from pyspark import StorageLevel
 
-    out = df.persist(StorageLevel.MEMORY_AND_DISK)
-    stack = getattr(_SCOPES, "stack", None)
-    (stack[-1] if stack else _PERSISTED).append(out)
-    return out
+    return _hold(df.persist(StorageLevel.MEMORY_AND_DISK), False)
 
 
-class persist_scope:
-    """Context manager giving a job its OWN persist registry: frames
-    cached by this thread inside the scope are unpersisted at exit and
-    never enter the module-global list, so concurrent jobs (threads,
-    services sharing the module) cannot free each other's live caches
-    mid-job. Scopes nest; each releases only its own frames."""
+def pinned(df: DataFrame, eager: bool = True) -> DataFrame:
+    """Materialize ``df`` and CUT its lineage — for a frame several
+    consumers reference, where each lineage reference would otherwise
+    re-embed (and under AQE re-execute) the whole upstream subtree, and
+    for an iterating frame whose plan would otherwise grow every round.
 
-    def __enter__(self):
-        stack = getattr(_SCOPES, "stack", None)
-        if stack is None:
-            stack = _SCOPES.stack = []
-        self._frames: list = []
-        stack.append(self._frames)
-        return self
+    Failure-tolerance trade: the default ``localCheckpoint`` stores
+    blocks on executors ONLY, so on a real cluster an executor loss
+    fails the job unrecoverably (lineage is gone, nothing can
+    recompute), unlike :func:`persisted` (recompute) or a reliable
+    checkpoint (replicated storage).  Escape hatch for clusters where
+    executor loss is routine: set a reliable checkpoint dir
+    (``spark.sparkContext.setCheckpointDir``) and every pinned frame
+    checkpoints to fault-tolerant storage instead — same values, same
+    lineage cut, durable blocks.
 
-    def __exit__(self, *exc) -> None:
-        _SCOPES.stack.pop()
-        for df in self._frames:
-            try:
-                df.unpersist()
-            except Exception:
-                pass  # session already stopped — nothing to free
-        self._frames.clear()
+    ``eager=False`` fuses the materialization into the frame's first
+    action — safe only when that action scans every partition; a
+    partial first action (e.g. ``limit(1)``) needs the eager default.
+    The frame is registered like a persisted one; once released it
+    cannot be recomputed, so release it only after its last use.
+    """
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        return _hold(df.checkpoint(eager=eager), True)
+    return _hold(df.localCheckpoint(eager=eager), True)
+
+
+def _free(frame, is_pinned: bool) -> None:
+    try:
+        if is_pinned:
+            # DataFrame.unpersist() asks the CacheManager, which never
+            # saw a checkpoint: the blocks belong to the RDD under the
+            # frame's LogicalRDD
+            frame._jdf.queryExecution().analyzed().rdd().unpersist(False)
+        else:
+            frame.unpersist()
+    except Exception:
+        pass  # session already stopped — nothing to free
+
+
+def release(*frames) -> None:
+    """Free the named held frames now and drop them from the registry
+    — for a frame whose last consumer has run while the caller goes on
+    (a loop's previous round, one call's intermediates).  Frames not
+    in the registry are ignored."""
+    for frame in frames:
+        with _HELD_LOCK:
+            entry = _HELD.pop(id(frame), None)
+        if entry is not None:
+            _free(*entry)
 
 
 def release_persisted() -> int:
-    """Unpersist every frame cached through :func:`persisted` outside
-    any scope since the last release. Call after the final action of a
-    job — unpersisting earlier is safe (Spark recomputes) but forfeits
-    the reuse the cache bought. Frames registered inside a
-    :func:`persist_scope` are NOT touched — their scope owns them.
-    Returns the number of handles released."""
-    n = len(_PERSISTED)
-    for df in _PERSISTED:
-        try:
-            df.unpersist()
-        except Exception:
-            pass  # session already stopped — nothing to free
-    _PERSISTED.clear()
-    return n
+    """Free every held frame, persisted and pinned, and empty the
+    registry.  Call after the final action of a job: a released
+    persisted frame recomputes from its lineage, but a released pinned
+    frame has none and fails when next used.  Returns the number of
+    handles released."""
+    with _HELD_LOCK:
+        held = list(_HELD.values())
+        _HELD.clear()
+    for entry in held:
+        _free(*entry)
+    return len(held)
 
 
 def run_jobs(*thunks, max_workers: int | None = None) -> list:
@@ -127,12 +156,8 @@ def run_jobs(*thunks, max_workers: int | None = None) -> list:
     failures were independent; callers needing
     minimal-mutation-on-error must sequence instead.
 
-    The submitting thread's :func:`persist_scope` stack is installed
-    in each pool thread for the thunk's duration (ADVICE r14): frames
-    a thunk caches register on the CALLER's innermost scope, not the
-    module-global list, so an enclosing scope still owns and releases
-    them.  Each thunk also runs under the caller's Spark job group,
-    local properties and session tags
+    Each thunk runs under the caller's Spark job group, local
+    properties and session tags
     (``pyspark.util.inheritable_thread_target``), so the jobs it submits
     are attributed to the caller.  Results return in thunk order.
 
@@ -147,32 +172,19 @@ def run_jobs(*thunks, max_workers: int | None = None) -> list:
     from pyspark import SparkContext
     from pyspark.util import inheritable_thread_target
 
-    caller_stack = getattr(_SCOPES, "stack", None)
     session = (
         SparkSession.active() if SparkContext._active_spark_context is not None else None
     )
 
-    def _scoped(t):
-        def run():
-            had = hasattr(_SCOPES, "stack")
-            prev = getattr(_SCOPES, "stack", None)
-            _SCOPES.stack = caller_stack if caller_stack else []
-            try:
-                return t()
-            finally:
-                if had:
-                    _SCOPES.stack = prev
-                else:
-                    del _SCOPES.stack
-
+    def _inherit(t):
         # Wrapped here, in the caller's thread: each thunk gets its own
         # copy of the caller's local properties, so a thunk's SQL
         # execution id never leaks into a sibling's.
-        return inheritable_thread_target(session)(run) if session else run
+        return inheritable_thread_target(session)(t) if session else t
 
     workers = max_workers or min(len(thunks), os.cpu_count() or 1)
     with ThreadPoolExecutor(workers) as pool:
-        futures = [pool.submit(_scoped(t)) for t in thunks]
+        futures = [pool.submit(_inherit(t)) for t in thunks]
         return [f.result() for f in futures]
 
 

@@ -648,6 +648,7 @@ def run_ingest_update(
     from pyspark.sql import functions as F
 
     from ..llmops.pipeline import ingest_pipeline_incremental
+    from ..scale import pinned, release
 
     receipts = f"{path}/receipts"
     last_batch = f"{path}/last_batch"
@@ -707,7 +708,7 @@ def run_ingest_update(
         # minhash front, survivor joins) and re-planning the source
         # subtree into every one of them both re-reads the input and
         # compounds plan depth on the stream-execution thread
-        stable = batch_df.localCheckpoint(eager=True)
+        stable = pinned(batch_df)
         try:
             receipt = ingest_pipeline_incremental(
                 stable, path, **ingest_kwargs
@@ -716,7 +717,7 @@ def run_ingest_update(
                 "__epoch__", F.lit(batch_id).cast("bigint")
             ).write.mode("append").parquet(receipts)
         finally:
-            stable.unpersist()
+            release(stable)
 
     q = (
         stream_df.writeStream.foreachBatch(body)

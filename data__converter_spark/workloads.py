@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import compare
-from .scale import local_frame, maybe_broadcast
+from .scale import local_frame, maybe_broadcast, pinned
 
 # ---------------------------------------------------------------------------
 # engine-portable money arithmetic
@@ -1188,7 +1188,7 @@ def q_bm25_after_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     surviving docs with bm25_retrieval's SQL verbatim: index-after-
     deletes == rebuild-from-surviving-docs IS the retraction
     contract.  The tf state feeds both the retraction lookup and the
-    final index, so it is pinned via eager localCheckpoint — unlike a
+    final index, so it is pinned (``scale.pinned``) — unlike a
     persist it also SEVERS lineage, so AQE plans the consumers against
     a materialized leaf instead of re-deriving the tokenize subtree
     per branch (r15, guide §2.4/§5: 27 → 16 jobs with the window-form
@@ -1205,9 +1205,7 @@ def q_bm25_after_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _load(spark, sf_dir, "documents")
     corpus = docs.filter(F.col("doc_id") % 97 != 0)
-    tf_state = _tf_of(corpus, "text", "doc_id", "match_id").localCheckpoint(
-        eager=True
-    )
+    tf_state = pinned(_tf_of(corpus, "text", "doc_id", "match_id"))
     doomed = corpus.filter(F.col("doc_id") % 5 == 0).select(
         F.col("doc_id").alias("match_id")
     )
@@ -10414,7 +10412,7 @@ def q_ivm_minmax_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     # state materializes between steps — exactly what a real deployment
     # does (the state IS a table); lazily the whole chain would
     # recompute once per branch, multiplying per step.  r15 (VERDICT
-    # r14 #3, guide §7.2): eager localCheckpoint replaces persist —
+    # r14 #3, guide §7.2): scale.pinned replaces persist —
     # persist keeps LINEAGE, so every downstream reference re-embedded
     # (and AQE re-planned) the whole upstream maintenance tree, 48 jobs
     # for the 4-step chain; the checkpoint truncates each step's plan
@@ -10430,19 +10428,19 @@ def q_ivm_minmax_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["o_custkey"],
         v,
         4,
-    ).coalesce(8).localCheckpoint(eager=True)
+    ).coalesce(8).transform(pinned)
     inserts = orders.filter(F.col("o_orderdate") >= ins_split).withColumn(
         "__sign__", F.lit(1).cast("bigint")
     )
     st = refresh_topk_with_retractions(
         st, inserts, ["o_custkey"], v, "__sign__", 4
-    ).coalesce(8).localCheckpoint(eager=True)
+    ).coalesce(8).transform(pinned)
     retracts = orders.filter(F.col("o_orderdate") >= ret_split).withColumn(
         "__sign__", F.lit(-1).cast("bigint")
     )
     st = refresh_topk_with_retractions(
         st, retracts, ["o_custkey"], v, "__sign__", 4
-    ).coalesce(8).localCheckpoint(eager=True)
+    ).coalesce(8).transform(pinned)
     surviving = orders.filter(F.col("o_orderdate") < ret_split)
     st = repair_topk(st, surviving, ["o_custkey"], v, 4)
     return st.select(

@@ -172,6 +172,19 @@ def test_bfs_hops_min_distance_and_cutoff(spark):
     assert got1 == {0: 0, 1: 1, 3: 1}
 
 
+def test_bfs_hops_source_frame_runs_no_job(spark):
+    """The 1-row source is a local relation with no lineage to cut, so
+    building the zero-hop result submits no Spark job."""
+    from data__converter_spark.graph import bfs_hops
+
+    e = spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long")
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    before = sched.nextJobId()
+    out = bfs_hops(e, 1, max_hops=0)
+    assert sched.nextJobId() - before == 0
+    assert [tuple(r) for r in out.collect()] == [(1, 0)]
+
+
 def test_bfs_hops_early_exit_and_degenerate(spark):
     """Exhausted component stops before the hop budget (empty-frontier
     probe) and never revisits; max_hops=0 is just the source; an

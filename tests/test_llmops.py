@@ -2697,8 +2697,8 @@ def test_ingest_replay_after_arbitrary_commit_subset_crash(spark, tmp_path):
 
 @pytest.mark.slow
 def test_ingest_pin_reliable_checkpoint_knob(spark, tmp_path):
-    """r15 (VERDICT r14 Next #7): the ingest paths' lineage pin
-    (pipeline._pin) defaults to executor-only localCheckpoint but
+    """r15 (VERDICT r14 Next #7): the lineage pin (scale.pinned)
+    defaults to executor-only localCheckpoint but
     switches to a RELIABLE checkpoint when the context has a
     checkpoint dir — same values either way, durable blocks under the
     knob.  Round-trip both modes through a real ingest call."""
@@ -2707,22 +2707,22 @@ def test_ingest_pin_reliable_checkpoint_knob(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from data__converter_spark.llmops.pipeline import (
-        _pin,
         ingest_pipeline_incremental,
         ingest_state_build,
     )
+    from data__converter_spark.scale import pinned
 
     df = spark.range(0, 5).select(F.col("id").alias("a"))
     want = sorted(r["a"] for r in df.collect())
     sc = spark.sparkContext
     assert sc.getCheckpointDir() is None  # suite default: local mode
-    assert sorted(r["a"] for r in _pin(df).collect()) == want
+    assert sorted(r["a"] for r in pinned(df).collect()) == want
 
     ckdir = str(tmp_path / "ck")
     sc.setCheckpointDir(ckdir)
     try:
-        pinned = _pin(df)
-        assert sorted(r["a"] for r in pinned.collect()) == want
+        durable = pinned(df)
+        assert sorted(r["a"] for r in durable.collect()) == want
         # blocks actually landed in the reliable dir
         found = [
             os.path.join(d, f)

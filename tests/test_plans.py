@@ -371,11 +371,19 @@ def test_order_count_distribution_keeps_zero_counts(spark):
     assert sum(rows.values()) == _load(spark, SF_DIR, "customer").count()
 
 
+_BARE_MATERIALIZATIONS = (
+    ".persist(", ".cache(", "localCheckpoint(", ".checkpoint(", ".unpersist(",
+)
+
+
 def test_no_bare_persist_in_package():
-    """Every cache in the package must route through scale.persisted()
-    so release_persisted() can free it — a bare .persist() leaks blocks
-    across queries in a long session (the CacheManager 'already cached'
-    warning). scale.py itself hosts the one legitimate .persist call."""
+    """Every cache and every lineage cut in the package must route
+    through scale.persisted() / scale.pinned(), and every free through
+    scale.release(), so the one registry sees them all — a bare
+    .persist() or localCheckpoint() leaks blocks across queries in a
+    long session, and a bare .unpersist() frees the blocks but leaves
+    the handle registered (on a checkpoint it frees nothing at all).
+    scale.py itself hosts the legitimate calls."""
     import pathlib
 
     import data__converter_spark as pkg
@@ -387,9 +395,9 @@ def test_no_bare_persist_in_package():
             continue
         for i, line in enumerate(py.read_text().splitlines(), 1):
             code = line.split("#", 1)[0]
-            if ".persist(" in code or ".cache(" in code:
+            if any(t in code for t in _BARE_MATERIALIZATIONS):
                 offenders.append(f"{py.relative_to(root)}:{i}")
-    assert not offenders, f"bare persist/cache outside scale.persisted: {offenders}"
+    assert not offenders, f"bare materialization outside scale.py: {offenders}"
 
 
 def test_swap_protocol_lives_only_in_commit_module():

@@ -156,51 +156,89 @@ def test_approx_count_distinct_scale_path(spark, orders):
     assert abs(approx - exact) / exact < 0.05
 
 
-def test_persist_scope_isolates_concurrent_jobs(spark, orders):
-    """Frames persisted inside a persist_scope belong to that scope:
-    release_persisted() must not free them mid-job, and scope exit must
-    unpersist them (ADVICE: concurrent jobs sharing the module must
-    not unpersist each other's live caches)."""
-    with scale.persist_scope():
-        inner = scale.persisted(orders.filter(F.col("o_orderkey") % 2 == 0))
-        inner.count()  # materialize the cache
-        assert inner.storageLevel.useMemory
-        # a concurrent job's release must not touch scoped frames
-        scale.release_persisted()
-        assert inner.storageLevel.useMemory
-    # scope exit frees its own frames
-    assert not inner.storageLevel.useMemory
+def test_release_persisted_frees_persisted_and_pinned_frames(spark, orders):
+    """One registry holds both kinds of held frame: release_persisted()
+    counts a pinned (checkpointed) frame with the persisted ones and
+    frees its blocks, which DataFrame.unpersist() alone leaves in
+    place; release() frees one named frame now and unregisters it."""
+    sc = spark.sparkContext._jsc.sc()
 
-    # outside any scope the global registry still works
+    def cached_rdds():
+        return {
+            i.id() for i in sc.getRDDStorageInfo()
+            if i.numCachedPartitions() > 0
+        }
+
+    def rdd_id(df):
+        return df._jdf.queryExecution().analyzed().rdd().id()
+
+    scale.release_persisted()
     outer = scale.persisted(orders.filter(F.col("o_orderkey") % 2 == 1))
     outer.count()
     assert outer.storageLevel.useMemory
-    scale.release_persisted()
+    pin = scale.pinned(orders.select("o_orderkey").repartition(3))
+    assert rdd_id(pin) in cached_rdds()
+    assert scale.release_persisted() == 2
     assert not outer.storageLevel.useMemory
+    assert rdd_id(pin) not in cached_rdds()
+    assert scale.release_persisted() == 0
+
+    one = scale.pinned(orders.select("o_custkey").repartition(2))
+    two = scale.pinned(orders.select("o_totalprice").repartition(2))
+    scale.release(one)
+    assert rdd_id(one) not in cached_rdds()
+    assert rdd_id(two) in cached_rdds()
+    assert two.count() == orders.count()
+    assert scale.release_persisted() == 1
+    assert rdd_id(two) not in cached_rdds()
 
 
-def test_run_jobs_thunks_inherit_callers_persist_scope(spark, orders):
-    """r15 (ADVICE r14): frames a run_jobs thunk caches must register
-    on the SUBMITTING thread's innermost persist_scope, not the
-    module-global list — otherwise a concurrent job's
-    release_persisted() could free them mid-job, the exact hazard the
-    scope exists to prevent."""
-    with scale.persist_scope():
-        holder = {}
+def test_registry_loses_no_handle_under_concurrent_release():
+    """Threads registering frames while others release them all: every
+    handle is freed exactly once — none is dropped between a release's
+    snapshot and its clear, none is freed twice."""
+    import sys
+    import threading
 
-        def thunk():
-            holder["df"] = scale.persisted(
-                orders.filter(F.col("o_orderkey") % 2 == 0)
-            )
-            holder["df"].count()
+    class Fake:
+        frees = 0
 
-        scale.run_jobs(thunk, lambda: orders.limit(1).count())
-        assert holder["df"].storageLevel.useMemory
-        # a concurrent job's global release must not touch it
-        scale.release_persisted()
-        assert holder["df"].storageLevel.useMemory
-    # the scope owns it: exit frees it
-    assert not holder["df"].storageLevel.useMemory
+        def persist(self, _level):
+            return self
+
+        def unpersist(self):
+            self.frees += 1
+
+    scale.release_persisted()
+    made: list = []
+    stop = threading.Event()
+
+    def register():
+        for _ in range(2000):
+            made.append(scale.persisted(Fake()))
+
+    def drain():
+        while not stop.is_set():
+            scale.release_persisted()
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        drainers = [threading.Thread(target=drain) for _ in range(2)]
+        writers = [threading.Thread(target=register) for _ in range(8)]
+        for t in drainers + writers:
+            t.start()
+        for t in writers:
+            t.join(timeout=60)
+        stop.set()
+        for t in drainers:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in drainers + writers)
+    scale.release_persisted()
+    assert len(made) == 16000
+    assert all(f.frees == 1 for f in made)
 
 
 def test_run_jobs_default_pool_is_bounded_by_cpu_count(monkeypatch):

@@ -627,6 +627,61 @@ def test_stream_band_candidates_equals_batch(spark, tmp_path):
     assert got == want
 
 
+def test_run_ingest_update_releases_every_batch_frame(spark, tmp_path):
+    """Each micro-batch of the streaming ingest releases every frame it
+    held — the batch checkpoint and the ingest's own persisted and
+    pinned intermediates: after two micro-batches the registry has not
+    grown and no RDD the batches cached keeps cached partitions."""
+    from data__converter_spark import scale
+    from data__converter_spark.llmops.pipeline import ingest_state_build
+    from data__converter_spark.streaming.runner import run_ingest_update
+
+    schema = "doc_id long, text string"
+    kw = dict(k=3, num_hashes=64, bands=16, threshold=0.3)
+    path = str(tmp_path / "state")
+    ingest_state_build(
+        spark.createDataFrame(
+            [
+                (1, "alpha beta gamma delta epsilon zeta"),
+                (2, "one two three four five six seven"),
+            ],
+            schema,
+        ),
+        path,
+        **kw,
+    )
+    src = tmp_path / "src"
+    src.mkdir()
+    ckpt = str(tmp_path / "ckpt")
+    sc = spark.sparkContext._jsc.sc()
+
+    def cached_rdds():
+        return {
+            i.id() for i in sc.getRDDStorageInfo()
+            if i.numCachedPartitions() > 0
+        }
+
+    scale.release_persisted()
+    cached = cached_rdds()
+    for name, rows in (
+        ("b1", [(10, "alpha beta gamma delta epsilon zeta eta")]),
+        ("b2", [(11, "one two three four five six seven eight")]),
+    ):
+        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
+            str(src / name)
+        )
+        run_ingest_update(
+            spark.readStream.schema(schema)
+            .option("recursiveFileLookup", "true")
+            .parquet(str(src)),
+            path, ckpt, timeout_s=600, **kw,
+        )
+        assert cached_rdds() <= cached, name
+        assert scale.release_persisted() == 0, name
+    receipts = spark.read.parquet(f"{path}/receipts")
+    assert sorted(r["doc_id"] for r in receipts.collect()) == [10, 11]
+
+
 def test_stream_band_candidates_bucket_cap(spark, tmp_path):
     """max_bucket_size stops ADMITTING members: identical docs all land
     in the same buckets, so a cap of 2 emits only the first pair and
