@@ -356,7 +356,6 @@ def bfs_hops(
     max_hops: int = 3,
     src_col: str = "src",
     dst_col: str = "dst",
-    probe_every: int = 1,
 ) -> DataFrame:
     """Breadth-first hop distance from ``source``: (node, hop) for
     every node reachable in <= ``max_hops`` edges, hop = the MINIMUM
@@ -375,23 +374,17 @@ def bfs_hops(
     frontier⋈edges hash join on src — edges can be pre-partitioned by
     src once and reused across all levels.
 
-    ``probe_every`` is the action cadence, as in
-    :func:`pagerank_until`: K levels chain lazily into ONE job before
-    the next checkpoint + emptiness probe.  MEASURED VERDICT (sf0.1
-    trade graph, 3 levels, best-of-3): K=1 4.15 s, K=2 4.55 s, K=3
-    7.27 s — unlike PageRank's in-row state, each un-checkpointed BFS
-    level re-executes its whole prefix (the frontier is referenced by
-    both the successor join and the anti-join, so the subtree
-    recomputes per reference, ~2^K), and that tax exceeds the ~0.5 s
-    probe saved.  K=1 therefore stays the default AND the recommended
-    setting; the parameter remains for diameter-bounded walks on
-    precomputed/cached frontiers and for the cadence-invariance
-    pytest, with results cadence-invariant by construction.
+    Every level is pinned and probed (a fixed cadence of one, unlike
+    :func:`pagerank_until`'s ``probe_every``).  Measured on the sf0.1
+    trade graph (3 levels, best-of-3), pinning every K levels took
+    K=1 4.15 s, K=2 4.55 s, K=3 7.27 s: unlike PageRank's in-row
+    state, each un-pinned BFS level re-executes its whole prefix (the
+    frontier is referenced by both the successor join and the
+    anti-join, so the subtree recomputes per reference, ~2^K), and
+    that tax exceeds the ~0.5 s probe saved.
     """
     if max_hops < 0:
         raise ValueError(f"max_hops must be >= 0, got {max_hops}")
-    if probe_every < 1:
-        raise ValueError(f"probe_every must be >= 1, got {probe_every}")
     from .scale import persisted, pinned
 
     spark = edges.sparkSession
@@ -419,10 +412,9 @@ def bfs_hops(
             # fewer jobs per call.
             dist = dist.unionByName(new)
             break
-        if h % probe_every == 0:
-            new = pinned(new)
-            if new.limit(1).count() == 0:
-                break
+        new = pinned(new)
+        if new.limit(1).count() == 0:
+            break
         dist = dist.unionByName(new)
         frontier = new.select("node")
     return dist

@@ -15,18 +15,14 @@ Reference semantics (pdf-tool/page.tsx):
   task costs far more than the byte surgery it would carry.
 
 Both collect only the requested PDFs. Page-level byte surgery needs a
-PDF codec; three implement the same protocol (count_pages/split/merge):
+PDF codec; two implement the same protocol (count_pages/split/merge):
 
-- ``PypdfCodec`` — full format coverage via pypdf (gated: not in this
-  container).
-- ``MiniPdfCodec`` — REAL stdlib codec for the uncompressed subset
-  (plain xref, flat page tree, uncompressed streams); genuine
-  byte-level merge/split round-trips are pytest-golden-tested, so the
-  D1/D2 surface no longer depends on any external dependency.
+- ``MiniPdfCodec`` — the real codec and the default: stdlib byte-level
+  page surgery for the uncompressed subset (plain xref, flat page tree,
+  uncompressed streams), with golden merge/split round-trip tests; any
+  other PDF raises ``ValueError``.
 - ``FakePdfCodec`` — trivial line-per-page stand-in kept for fast
   plumbing tests (manifest ordering, fan-out, name formatting).
-
-``default_codec()`` picks pypdf when installed, else MiniPdfCodec.
 """
 
 from __future__ import annotations
@@ -94,57 +90,14 @@ def parse_pages(spec: str) -> list[list[int]]:
 # ---------------------------------------------------------------------------
 
 
-class PypdfCodec:
-    """Real PDF page surgery via pypdf — gated (not in this container)."""
-
-    def __init__(self) -> None:
-        try:
-            import pypdf  # noqa: F401
-        except ImportError as e:
-            raise NotImplementedError(
-                "PDF page operations require pypdf; install it or use "
-                "FakePdfCodec for plumbing tests"
-            ) from e
-
-    def count_pages(self, data: bytes) -> int:
-        from pypdf import PdfReader
-
-        return len(PdfReader(io.BytesIO(data)).pages)
-
-    @staticmethod
-    def _write(pages) -> bytes:
-        from pypdf import PdfWriter
-
-        writer = PdfWriter()
-        for page in pages:
-            writer.add_page(page)
-        out = io.BytesIO()
-        writer.write(out)
-        return out.getvalue()
-
-    def split(self, data: bytes, groups: list[list[int]]) -> list[bytes]:
-        from pypdf import PdfReader
-
-        pages = PdfReader(io.BytesIO(data)).pages
-        return [self._write(pages[p - 1] for p in g) for g in groups]  # 1-based
-
-    def merge(self, docs: list[bytes]) -> bytes:
-        from pypdf import PdfReader
-
-        return self._write(
-            page for data in docs for page in PdfReader(io.BytesIO(data)).pages
-        )
-
-
 class MiniPdfCodec:
     """REAL minimal PDF codec, stdlib only — genuine byte-level page
     surgery for the uncompressed subset of PDF (plain xref table,
     flat /Kids page tree, uncompressed content streams): exactly the
     class of file :meth:`make` writes, which any PDF viewer opens.
 
-    Compressed/object-stream PDFs raise ``ValueError`` (honest gate);
-    ``PypdfCodec`` covers them when pypdf is installed. Protocol
-    matches PypdfCodec/FakePdfCodec: count_pages / split / merge.
+    Compressed/object-stream PDFs raise ``ValueError`` (honest gate).
+    Protocol matches FakePdfCodec: count_pages / split / merge.
     """
 
     @staticmethod
@@ -208,10 +161,10 @@ class MiniPdfCodec:
         (a stream that does mis-parses silently instead of hitting the
         loud gates below). This codec only reads PDFs this module's
         writer produced — uncompressed text streams from
-        :meth:`_page_stream` — where those keywords cannot occur;
-        arbitrary external PDFs route through the pypdf path or the
-        NotImplementedError gate. A general parser would bound stream
-        extraction by the declared ``/Length`` instead.
+        :meth:`make` — where those keywords cannot occur;
+        arbitrary external PDFs hit the ``ValueError`` gates. A general
+        parser would bound stream extraction by the declared ``/Length``
+        instead.
         """
         objs = {
             int(m.group(1)): m.group(2)
@@ -267,19 +220,10 @@ class MiniPdfCodec:
         return self._build(pages)
 
 
-def default_codec():
-    """pypdf when installed (full format coverage), else the real
-    stdlib MiniPdfCodec (uncompressed subset, loud failure beyond it)."""
-    try:
-        return PypdfCodec()
-    except NotImplementedError:
-        return MiniPdfCodec()
-
-
 class FakePdfCodec:
     """Deterministic test codec: ``%PDF-FAKE\\n`` header + one line per
-    page. Same protocol as PypdfCodec; exists so the distributed
-    plumbing is testable without the binary dependency."""
+    page. Same protocol as MiniPdfCodec; exists so the distributed
+    plumbing is testable without building real PDF bytes."""
 
     HEADER = b"%PDF-FAKE\n"
 
@@ -337,7 +281,7 @@ def merge_pdfs(
     """D1: merge validated PDFs in the explicit ``order`` of paths
     (O4 stable input ordering). PDF assembly is sequential by nature —
     one driver-coordinated pass; only the scan/validate distributes."""
-    codec = codec or default_codec()
+    codec = codec or MiniPdfCodec()
     if len(order) < 2:
         raise ValueError("merge needs >= 2 files (pdf-tool/page.tsx:317)")
     rank = {_norm_path(p): i for i, p in enumerate(order)}
@@ -366,7 +310,7 @@ def split_pdf(
     driver and builds every group (``codec.split``), and the outputs
     come back as an Arrow local frame — no Python worker, no shuffle.
     """
-    codec = codec or default_codec()
+    codec = codec or MiniPdfCodec()
     data = _requested(df, [path]).get(_norm_path(path))
     if data is None:
         raise ValueError(f"not a valid PDF: {path}")

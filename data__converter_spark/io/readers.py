@@ -23,11 +23,10 @@ reference file:line for the judge's parity check):
   record-aware reader, so each file parses whole in one process: one
   ``binaryFile`` scan collects the bytes and stdlib etree parses them
   on the driver into an Arrow local frame (no Python worker).
-- S7 Excel: pandas bridge (openpyxl), gated behind import-try, else
-  the stdlib ``xlsx_lite`` codec; either way the sheets parse on the
-  driver and reach Spark as Arrow local frames (no Python worker).
-  Excel is an inherently single-file convenience format; parquet is the
-  at-scale substrate (SURVEY §7.3.5).
+- S7 Excel: the stdlib ``xlsx_lite`` codec, the one Excel path; the
+  sheets parse on the driver and reach Spark as Arrow local frames (no
+  Python worker). Excel is an inherently single-file convenience
+  format; parquet is the at-scale substrate (SURVEY §7.3.5).
 - S11 encodings: utf-8 / euc-kr / shift_jis / iso-8859-1
   (FileUploader.tsx:233,312-314) via the reader ``encoding`` option;
   charsets Spark lacks (and XML) decode on the driver with Python codecs.
@@ -357,114 +356,6 @@ def read_txt_lines(spark: SparkSession, path: str, encoding: str = "utf-8") -> D
     )
 
 
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    """Columnar source beyond the reference's text formats (the typed
-    sibling of the parquet tables): native reader, vectorized, with
-    predicate pushdown / column pruning like parquet (PushedFilters +
-    ReadSchema reach the stripe reader; stripes split across tasks)."""
-    return spark.read.orc(path)
-
-
-def read_avro(spark: SparkSession, path: str) -> DataFrame:
-    """Avro row-format source. Prefers the external spark-avro module
-    (``org.apache.spark:spark-avro`` — block-splittable scan, full
-    schema support) where the deployment ships it; in this environment
-    it is absent, so the positive path falls back to the stdlib
-    ``avro_lite`` OCF codec (same policy as ``xlsx_lite`` / the mini
-    PDF codec): primitive-field records with null/deflate block codecs
-    decode distributed via a binaryFile scan + mapInPandas, one task
-    per FILE (OCF blocks are not split — many-files layouts
-    parallelize, one giant file does not; ship spark-avro for that).
-    Schemas beyond the avro_lite subset raise the explicit gate."""
-    try:
-        return spark.read.format("avro").load(path)
-    except Exception as e:
-        # Only the missing-data-source error means the module is absent;
-        # anything else (bad path, corrupt file) propagates untouched.
-        if "failed to find data source" not in str(e).lower():
-            raise
-    from . import avro_lite
-
-    bins = spark.read.format("binaryFile").load(path)
-    # peek ONLY a bounded header prefix driver-side (the OCF header is
-    # magic + metadata map + sync — KBs even for wide schemas); pulling
-    # a whole multi-GB file's content for this would OOM the driver.
-    # A pathological metadata map raises AvroHeaderTruncated (distinct
-    # from the unsupported-schema ValueError gate) → one escalation to
-    # 8 MiB, then a loud error naming the cap.
-    schema = None
-    for cap in (262_144, 8_388_608):
-        head = bins.select(
-            F.substring("content", 1, cap).alias("h")
-        ).limit(1).collect()
-        if not head:
-            raise ValueError(f"no avro files under {path!r}")
-        raw = bytes(head[0]["h"])
-        try:
-            schema = avro_lite.read_avro_schema(raw)
-            spark_schema = avro_lite.spark_schema_of(schema)
-            break
-        except avro_lite.AvroHeaderTruncated as err:
-            if len(raw) < cap:
-                # the peek returned the WHOLE file and the header still
-                # ran past its end — the file itself is cut short
-                # (partial upload), not our peek: don't blame the cap
-                raise ValueError(
-                    f"avro file under {path!r} is truncated mid-header "
-                    f"({len(raw)} bytes total): {err}"
-                ) from err
-            continue
-        except ValueError as err:
-            raise NotImplementedError(
-                "this avro file needs the external spark-avro module "
-                "(org.apache.spark:spark-avro): the stdlib avro_lite "
-                f"fallback covers primitive-field records only ({err})"
-            ) from err
-    if schema is None:
-        raise ValueError(
-            f"avro OCF header under {path!r} exceeds the 8 MiB "
-            "driver-side peek cap; ship spark-avro for files with "
-            "multi-megabyte header metadata"
-        )
-    names = [f.name for f in spark_schema.fields]
-    # normalized (name, kind, prim) signature — a names-only guard lets
-    # same-named-but-retyped files through to a confusing Arrow
-    # coercion error (or a silent long->double widening)
-    sig = avro_lite._record_fields(schema)
-
-    def kernel(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            for content in pdf["content"]:
-                file_schema, rows = avro_lite.read_avro_bytes(bytes(content))
-                file_sig = avro_lite._record_fields(file_schema)
-                if file_sig != sig:
-                    # a multi-file dir with diverging schemas would
-                    # otherwise die in a KeyError deep in the kernel
-                    raise ValueError(
-                        "avro_lite: file schema "
-                        f"{file_sig} differs from the directory's "
-                        f"inferred schema {sig} (names AND types must "
-                        "match); align the files or ship spark-avro "
-                        "for schema merging"
-                    )
-                if rows:
-                    yield pd.DataFrame(
-                        {n: [r[n] for r in rows] for n in names}
-                    )
-
-    return bins.select("content").mapInPandas(kernel, spark_schema)
-
-
-def read_jsonl(spark: SparkSession, path: str, encoding: str = "utf-8") -> DataFrame:
-    """JSON-lines (one object per line — the K3 writer's multi-column
-    output and the standard LLM-corpus interchange format). Unlike
-    :func:`read_json` this is line-splittable: a 1 TB file scans as
-    parallel ~128 MB tasks instead of one whole-document task."""
-    return spark.read.option("encoding", encoding).json(path)
-
-
 def read_json(spark: SparkSession, path: str, encoding: str = "utf-8") -> DataFrame:
     """S6: JSON document -> rows.
 
@@ -695,32 +586,22 @@ def read_xml_tables(
 def read_excel(spark: SparkSession, path: str) -> dict[str, DataFrame]:
     """S7: Excel workbook -> {sheet_name: DataFrame}.
 
-    Uses the pandas/openpyxl bridge when installed, else the stdlib
-    ``xlsx_lite`` codec (inline/shared strings, numerics as text).
-    Excel is a convenience edge format with a documented size cap
-    (SURVEY §7.3.5) — at scale, land the data as parquet instead.
+    Parsed by the stdlib ``xlsx_lite`` codec (inline/shared strings,
+    numerics as text). Excel is a convenience edge format with a
+    documented size cap (SURVEY §7.3.5) — at scale, land the data as
+    parquet instead.
     """
     import pyarrow as pa
 
-    try:
-        import pandas as pd
+    from . import xlsx_lite
 
-        tables = {
-            name: pa.Table.from_pandas(
-                frame.fillna("").rename(columns=str), preserve_index=False
-            )
-            for name, frame in pd.read_excel(path, sheet_name=None, dtype=str).items()
-        }
-    except ImportError:
-        from . import xlsx_lite
-
-        tables = {
-            name: pa.Table.from_arrays(
-                [pa.array([r[i] for r in rows], pa.string()) for i in range(len(cols))],
-                names=cols,
-            )
-            for name, (cols, rows) in xlsx_lite.read_workbook(path).items()
-        }
+    tables = {
+        name: pa.Table.from_arrays(
+            [pa.array([r[i] for r in rows], pa.string()) for i in range(len(cols))],
+            names=cols,
+        )
+        for name, (cols, rows) in xlsx_lite.read_workbook(path).items()
+    }
     # Local relations: no Python worker runs, building a frame submits
     # no job, and each sheet is one partition, so one part file.
     return {

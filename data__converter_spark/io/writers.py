@@ -18,7 +18,7 @@ inside the engine.
   like Excel it is an inherently single-file edge format: rows format
   in parallel on executors, the driver streams partition results to
   disk via ``toLocalIterator`` (no full materialization).
-- K5 Excel: pandas bridge, gated; documented row cap.
+- K5 Excel: the stdlib ``xlsx_lite`` codec; documented row cap.
 - K6 ZIP: driver-side packaging of an output directory.
 """
 
@@ -46,14 +46,6 @@ def write_csv(df: DataFrame, path: str, header: bool = True, sep: str = ",") -> 
         .option("escape", '"')
         .csv(path)
     )
-
-
-def write_orc(df: DataFrame, path: str, compression: str = "zstd") -> None:
-    """Columnar sink beyond the reference's text formats: ORC with
-    zstd, typed schema preserved (unlike the stringly CSV/XML edge).
-    The engine-to-engine interchange path — a downstream Spark/Trino/
-    Hive reader gets predicate pushdown and column pruning for free."""
-    df.write.mode("overwrite").option("compression", compression).orc(path)
 
 
 def write_txt(df: DataFrame, path: str) -> None:
@@ -144,40 +136,24 @@ def write_xml(
 def write_excel(sheets: dict[str, DataFrame], path: str) -> None:
     """K5/K7: {sheet_name: df} -> one xlsx workbook.
 
-    pandas/openpyxl bridge when installed, stdlib ``xlsx_lite`` codec
-    otherwise. Enforces the xlsx row cap — at scale this format is a
-    preview/interchange edge, parquet is the substrate.
+    Written by the stdlib ``xlsx_lite`` codec. Enforces the xlsx row
+    cap — at scale this format is a preview/interchange edge, parquet is
+    the substrate.
     """
+    from . import xlsx_lite
     from .readers import sanitize_sheet_name
 
     taken: set[str] = set()
-    try:
-        import pandas as pd
-
-        with pd.ExcelWriter(path) as xw:
-            for name, df in sheets.items():
-                n = df.count()
-                if n > EXCEL_MAX_ROWS:
-                    raise ValueError(
-                        f"sheet {name!r}: {n} rows exceeds xlsx cap {EXCEL_MAX_ROWS}"
-                    )
-                pdf = stringify_all(df).toPandas()
-                pdf.to_excel(
-                    xw, sheet_name=sanitize_sheet_name(name, taken), index=False
-                )
-    except ImportError:
-        from . import xlsx_lite
-
-        payload = {}
-        for name, df in sheets.items():
-            n = df.count()
-            if n > EXCEL_MAX_ROWS:
-                raise ValueError(
-                    f"sheet {name!r}: {n} rows exceeds xlsx cap {EXCEL_MAX_ROWS}"
-                )
-            rows = [list(r) for r in stringify_all(df).collect()]
-            payload[sanitize_sheet_name(name, taken)] = (df.columns, rows)
-        xlsx_lite.write_workbook(path, payload)
+    payload = {}
+    for name, df in sheets.items():
+        n = df.count()
+        if n > EXCEL_MAX_ROWS:
+            raise ValueError(
+                f"sheet {name!r}: {n} rows exceeds xlsx cap {EXCEL_MAX_ROWS}"
+            )
+        rows = [list(r) for r in stringify_all(df).collect()]
+        payload[sanitize_sheet_name(name, taken)] = (df.columns, rows)
+    xlsx_lite.write_workbook(path, payload)
 
 
 def zip_directory(src_dir: str, zip_path: str) -> list[str]:

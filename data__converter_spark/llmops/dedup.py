@@ -476,37 +476,6 @@ def _shingle_hash_sets(df: DataFrame, col: str, id_col: str, k: int) -> DataFram
     )
 
 
-def _sig_from_hs_udf(num_hashes: int, seed: int):
-    """Arrow kernel: shingle-hash array -> minhash signature via the
-    seeded affine permutations, pure numpy (products < 2⁶², no int64
-    overflow). No hashing or tokenizing here — that happened JVM-side
-    in :func:`_shingle_hash_sets`."""
-    from pyspark.sql.functions import pandas_udf
-
-    coeffs = _perm_coeffs(num_hashes, seed)
-
-    @pandas_udf("array<long>")
-    def sig(hs: pd.Series) -> pd.Series:
-        import numpy as np
-
-        A = np.array([a for a, _ in coeffs], dtype=np.int64)[:, None]
-        B = np.array([b for _, b in coeffs], dtype=np.int64)[:, None]
-        out = []
-        for h in hs:
-            if h is None or len(h) == 0:
-                out.append(None)
-                continue
-            hv = np.asarray(h, dtype=np.int64)[None, :]
-            out.append(((A * hv + B) % _MERSENNE_P).min(axis=1))
-        return pd.Series(out)
-
-    # Deterministic in fact; marked nondeterministic so Catalyst cannot
-    # duplicate the kernel into sibling expressions (a filter on the
-    # struct output plus the projection of it used to compile to TWO
-    # stacked ArrowEvalPython evals of the same text batch).
-    return sig.asNondeterministic()
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
     col: str = "text",
@@ -1081,31 +1050,6 @@ def simhash_pairs(
 # ---------------------------------------------------------------------------
 # embedding-cosine near-dup
 # ---------------------------------------------------------------------------
-
-
-def cosine_col(a: Column, b: Column) -> Column:
-    """Cosine similarity of two float arrays, computed in double with a
-    sequential fold so results are reproducible across engines."""
-    dot = F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    na = F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )
-    nb = F.sqrt(
-        F.aggregate(
-            F.transform(b, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )
-    return dot / (na * nb)
 
 
 def embedding_pairs(

@@ -6,25 +6,20 @@ feature-extract / resize / frame-sample run as Arrow-batched
 ``mapInPandas`` stages so bytes never round-trip row-at-a-time through
 Python.
 
-Codec status (no external image/audio libraries in this container):
+Codecs (stdlib only, one per format):
 
-- **REAL decode via stdlib-only codecs**: 24-bit BMP (header parse +
-  pixel array, nearest-neighbor resize), non-interlaced 8-bit PNG
-  gray/RGB/RGBA (zlib inflate + all five scanline unfilters —
-  `encode_png` / `_try_decode_png`, so a COMPRESSED format has a real
-  in-container positive path, oracle-proven bit-exact per corpus row
-  by `png_roundtrip_features`), and 16-bit PCM WAV audio (RIFF parse)
-  — pixel- and sample-exact under pytest golden tests.
-- **Optional PIL leg for other compressed images** (JPEG/WebP/
-  palette or interlaced PNG/...): the decode chain
-  (`_try_decode_image`) tries stdlib BMP, stdlib PNG, then PIL when
-  the executor can import it — a deployment that installs pillow gets
-  the rest with no code change. Compressed audio/video (MP3/MP4)
-  still needs ffmpeg and stays behind the explicit gate.
+- **REAL decode**: 24-bit BMP (header parse + pixel array,
+  nearest-neighbor resize), non-interlaced 8-bit PNG gray/RGB/RGBA
+  (zlib inflate + all five scanline unfilters — `encode_png` /
+  `_try_decode_png`, oracle-proven bit-exact per corpus row by
+  `png_roundtrip_features`), and 16-bit PCM WAV audio features (RIFF
+  parse) — pixel- and sample-exact under pytest golden tests. The image
+  decode chain (`_try_decode_image`) is BMP -> PNG -> stub.
 - **Deterministic stub fallback** (clearly marked, keyed on the
-  payload hash) when no codec can decode the payload. The Spark-side
-  contract (schemas, partitioning, batch shape, null handling) is
-  identical on every path.
+  payload hash) for every other payload: JPEG/WebP, palette or
+  interlaced PNG, compressed audio/video. The Spark-side contract
+  (schemas, partitioning, batch shape, null handling) is identical on
+  every path.
 """
 
 from __future__ import annotations
@@ -32,8 +27,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-from ..scale import local_frame
 
 MEDIA_SCHEMA = T.StructType(
     [
@@ -72,7 +65,7 @@ STUB_FEATURE_DIM = 8
 
 def _payload_digest_ints(payload: bytes, n: int) -> list[int]:
     """STUB decode kernel: deterministic pseudo-decode from sha256 of
-    the payload. Replace with a real codec (PIL/ffmpeg) in deployment."""
+    the payload, for payloads no stdlib codec here decodes."""
     import hashlib
 
     h = hashlib.sha256(payload or b"").digest()
@@ -201,7 +194,7 @@ def _try_decode_png(payload):
     RGB array, or None when the payload is not a decodable PNG.  Pure
     stdlib: zlib inflate + all five scanline unfilters.  Gray expands
     to three equal channels and alpha is dropped — the same (h, w, 3)
-    contract as the BMP and PIL branches, so downstream kernels stay
+    contract as the BMP branch, so downstream kernels stay
     codec-agnostic."""
     import struct
     import zlib
@@ -281,58 +274,15 @@ def _try_decode_png(payload):
         return None
 
 
-def _try_decode_pil(payload):
-    """Compressed-image decode (JPEG/PNG/…) via PIL WHEN INSTALLED ->
-    (h, w, 3) uint8 RGB array, else None. The optional-dependency slot
-    of the capability gate: this container has no PIL, so the chain
-    falls through to the deterministic stub; a deployment that
-    pip-installs pillow gets real decode with no code change."""
-    try:
-        from PIL import Image
-    except ImportError:
-        return None
-    import io
-
-    import numpy as np
-
-    try:
-        with Image.open(io.BytesIO(bytes(payload))) as im:
-            return np.asarray(im.convert("RGB"), dtype=np.uint8)
-    except Exception:
-        return None
-
-
 def _try_decode_image(payload):
     """Image decode chain: stdlib 24-bit BMP -> stdlib 8-bit PNG ->
-    PIL (when installed) -> None (caller falls back to the
-    deterministic hash stub). Every branch yields the same (h, w, 3)
-    uint8 RGB contract, so the feature/resize kernels are
-    codec-agnostic.  With the PNG branch the container now has a REAL
-    compressed-format positive path (zlib is stdlib); PIL remains the
-    slot for JPEG/WebP/palette-PNG and friends."""
+    None (caller falls back to the deterministic hash stub). Both
+    codecs yield the same (h, w, 3) uint8 RGB contract, so the
+    feature/resize kernels are codec-agnostic."""
     px = _try_decode_bmp(payload)
     if px is not None:
         return px
-    px = _try_decode_png(payload)
-    if px is not None:
-        return px
-    return _try_decode_pil(payload)
-
-
-def encode_wav(samples, sample_rate: int = 16_000) -> bytes:
-    """int16 mono sample array -> 16-bit PCM WAV bytes (stdlib wave)."""
-    import io
-    import wave
-
-    import numpy as np
-
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as wf:
-        wf.setnchannels(1)
-        wf.setsampwidth(2)
-        wf.setframerate(sample_rate)
-        wf.writeframes(np.asarray(samples, dtype="<i2").tobytes())
-    return buf.getvalue()
+    return _try_decode_png(payload)
 
 
 def _try_decode_wav(payload):
@@ -357,25 +307,6 @@ def _try_decode_wav(payload):
             return wf.getframerate(), arr
     except Exception:
         return None
-
-
-def synthetic_media(spark, n: int = 64) -> DataFrame:
-    """Deterministic fake media table for tests/demos (no codecs in
-    container). Payload bytes derive from media_id; metadata is typed."""
-    rows = []
-    kinds = ["image", "audio", "video"]
-    for i in range(n):
-        kind = kinds[i % 3]
-        payload = f"media-{i}".encode() * (4 + i % 5)
-        rows.append(
-            (
-                i,
-                kind,
-                bytearray(payload),
-                (64 + i % 8, 48 + i % 6, 1000 * (1 + i % 7), f"x/{kind}"),
-            )
-        )
-    return local_frame(spark, rows, MEDIA_SCHEMA)
 
 
 def media_from_documents(
@@ -472,9 +403,9 @@ def image_features(media: DataFrame, batch_hint: int | None = None) -> DataFrame
     The kernel sees pandas batches (zero-copy Arrow transfer); output
     partitioning follows the input — no shuffle. Decode is REAL for
     24-bit BMP payloads (stdlib parse; Rec.601 luma, 8-vertical-band
-    mean-luma feature) and for compressed formats when PIL is
-    installed (optional dependency, import-gated per executor); the
-    deterministic hash stub remains the documented fallback.
+    mean-luma feature) and non-interlaced 8-bit PNG payloads (stdlib
+    inflate + unfilter); the deterministic hash stub is the fallback
+    for every other payload.
     """
     imgs = media.filter(F.col("kind") == "image").select("media_id", "payload", "meta")
 
@@ -522,8 +453,8 @@ def image_features(media: DataFrame, batch_hint: int | None = None) -> DataFrame
 
 def resize_images(media: DataFrame, width: int, height: int) -> DataFrame:
     """Resize images to (width, height). REAL nearest-neighbor resample
-    + BMP re-encode for 24-bit BMP payloads and (with optional PIL)
-    compressed inputs — output payloads normalize to BMP either way;
+    + BMP re-encode for 24-bit BMP and 8-bit PNG payloads — output
+    payloads normalize to BMP either way;
     deterministic stub rewrite when no codec can decode the payload."""
     imgs = media.filter(F.col("kind") == "image")
 
@@ -673,49 +604,6 @@ def audio_features(media: DataFrame) -> DataFrame:
             )
 
     return auds.mapInPandas(kernel, AUDIO_FEATURES_SCHEMA)
-
-
-def decode_audio(media: DataFrame, assume_wav: bool = False) -> DataFrame:
-    """Raw audio decode (full PCM out).
-
-    REAL for 16-bit PCM WAV payloads — pass ``assume_wav=True`` to get
-    (media_id, sample_rate, samples: array<double> in [-1, 1]) via the
-    stdlib RIFF parser. For compressed audio the container has no codec
-    library, so the default remains an explicit NotImplementedError
-    gate per SURVEY; a deployment swaps the kernel body for ffmpeg."""
-    if not assume_wav:
-        raise NotImplementedError(
-            "compressed-audio decode requires a codec library not present in "
-            "this environment; for 16-bit PCM WAV payloads call with "
-            "assume_wav=True (stdlib decoder), or use audio_features()"
-        )
-    auds = media.filter(F.col("kind") == "audio").select("media_id", "payload")
-
-    def kernel(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            ids, rates, samples = [], [], []
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                r = _try_decode_wav(p)
-                if r is None:
-                    continue  # non-WAV rows drop; caller asked for WAV
-                rate, arr = r
-                ids.append(mid)
-                rates.append(rate)
-                samples.append([float(s) / 32768.0 for s in arr])
-            yield pd.DataFrame(
-                {"media_id": ids, "sample_rate": rates, "samples": samples}
-            )
-
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("sample_rate", T.IntegerType()),
-            T.StructField("samples", T.ArrayType(T.DoubleType())),
-        ]
-    )
-    return auds.mapInPandas(kernel, schema)
 
 
 def image_dhash(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:

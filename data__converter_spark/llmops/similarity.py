@@ -23,7 +23,6 @@ from pyspark.sql import functions as F
 
 from .. import commit
 from ..scale import local_frame
-from .dedup import cosine_col
 
 # All three entry points broadcast the probe set from the driver — the
 # documented "few probes" contract. The guard keeps that honest at
@@ -1564,7 +1563,6 @@ def build_text_index(
     col: str = "text",
     id_col: str = "doc_id",
     path: str | None = None,
-    persist_tf: bool = False,
     bucket_table: str | None = None,
     n_buckets: int = 32,
 ) -> tuple[DataFrame, DataFrame]:
@@ -1586,12 +1584,11 @@ def build_text_index(
     no tokenizer, df/dl/avgdl already joined in.
 
     Plan shape: tf/df/dl are three slim aggregates off one exploded
-    token pass (``persist_tf=True`` caches the tf frame so the build
-    scans the corpus once instead of once per branch — worth it when
-    the corpus is remote/expensive, measured not-worth-it for local
-    parquet at sf0.1 in BOTH forms: 1.7 s vs 3.6 s lazy-vs-persisted
-    for the in-memory pair, 2.6 s vs 3.3 s for the written artifact);
-    the df and dl joins are term-/doc-keyed equi-joins of
+    token pass, left lazy so each branch re-scans the corpus: caching
+    the tf frame to scan it once was measured slower for local parquet
+    at sf0.1 in BOTH forms (1.7 s lazy vs 3.6 s persisted for the
+    in-memory pair, 2.6 s vs 3.3 s for the written artifact); the df
+    and dl joins are term-/doc-keyed equi-joins of
     aggregate-sized frames.  The postings table is the
     natural bucketing candidate, and ``bucket_table`` does exactly
     that: the postings save as a catalog table bucketed (and sorted)
@@ -1608,12 +1605,7 @@ def build_text_index(
             "build_text_index: pass either path (bare parquet) or "
             "bucket_table (bucketed catalog table), not both"
         )
-    c_tf = _tf_of(corpus_df, col, id_col, "match_id")
-    if persist_tf:
-        from ..scale import persisted
-
-        c_tf = persisted(c_tf)
-    postings, stats = index_from_tf(c_tf)
+    postings, stats = index_from_tf(_tf_of(corpus_df, col, id_col, "match_id"))
     if path is not None or bucket_table is not None:
         # a durable index artifact must fail fast on a degenerate
         # corpus — a (0, NULL, NULL) stats parquet read back by a later
@@ -1678,9 +1670,14 @@ def index_from_tf(c_tf: DataFrame) -> tuple[DataFrame, DataFrame]:
     same artifact the batch builder writes) — df, dl and the corpus
     stats are all additive over new documents, so maintenance is an
     append plus these two slim aggregates, never a corpus rescan.
-    Extra columns (e.g. the state table's ``__epoch__``) are dropped.
+    Extra columns (e.g. the state table's ``__epoch__``) are dropped,
+    and so are rows with a NULL ``term`` or ``match_id``, before any
+    statistic: the postings' df/dl and the stats' n_docs/total_tok/avgdl
+    all count the same rows.
     """
-    c_tf = c_tf.select("match_id", "term", "tf")
+    c_tf = c_tf.select("match_id", "term", "tf").filter(
+        F.col("term").isNotNull() & F.col("match_id").isNotNull()
+    )
     dl = c_tf.groupBy("match_id").agg(
         F.sum("tf").cast("bigint").alias("dl")
     )
@@ -1706,14 +1703,9 @@ def index_from_tf(c_tf: DataFrame) -> tuple[DataFrame, DataFrame]:
     # (broadcastable only at toy scale — at 100 TB dl is n_docs-sized
     # and the joins become full sort-merge exchanges).  Two window
     # passes keyed (term) then (match_id) compute the identical
-    # columns with strictly fewer exchanges at every scale.  The
-    # null-key filter reproduces the inner equi-join's semantics
-    # exactly: a NULL term or id never matched its aggregate row.
+    # columns with strictly fewer exchanges at every scale.
     postings = (
-        c_tf.filter(
-            F.col("term").isNotNull() & F.col("match_id").isNotNull()
-        )
-        .withColumn(
+        c_tf.withColumn(
             "df",
             F.count(F.lit(1))
             .over(Window.partitionBy("term"))
@@ -1951,7 +1943,6 @@ def bm25_retrieval(
     k1_milli: int = 1200,
     b_milli: int = 750,
     max_df: int | None = None,
-    persist_stats: bool = False,
 ) -> DataFrame:
     """BM25-family lexical ranking over the same inverted-index join
     as :func:`sparse_retrieval` — rare-term weighting (idf), term-
@@ -1995,16 +1986,14 @@ def bm25_retrieval(
     # that is the FASTER shape (1.7 s lazy vs 3.6 s persisted — the
     # tokenize is a cheap JVM split/explode, while caching the
     # million-row tf frame pays serialization + a materialization
-    # barrier), hence persist_stats defaults False.  The real 100 TB
+    # barrier), so the tf frame is never cached.  The real 100 TB
     # answer is neither: df/dl/avgdl are INDEX artifacts — call
     # :func:`build_text_index` with a path once at corpus-build time
     # and rank every later query batch with :func:`bm25_from_index`
     # against the written postings, exactly as a search engine does.
     # The max_df cap applied post-join here pushes down onto the df
     # aggregate, keeping the old pre-join prune shape.
-    postings, stats = build_text_index(
-        corpus_df, col, id_col, persist_tf=persist_stats
-    )
+    postings, stats = build_text_index(corpus_df, col, id_col)
     return bm25_from_index(
         queries_df,
         postings,

@@ -199,28 +199,17 @@ def _shingles_udf(k: int):
     return sh.asNondeterministic()
 
 
-def fingerprint_col(col: str | Column = "text", k: int = 3) -> Column:
-    """Document fingerprint: min SHA-256 over word k-gram shingles
-    (a 1-permutation MinHash — stable under small reorderings at the
-    edges); whole-doc hash when shorter than k tokens.
-
-    Column form for composition; prefer :func:`fingerprints` on whole
-    tables (sha2-inside-HOF evaluates interpreted per element)."""
-    c = F.col(col) if isinstance(col, str) else col
-    sh = shingles_col(c, k)
-    whole = F.sha2(F.coalesce(c.cast("string"), F.lit("")), 256)
-    return F.when(F.size(sh) == 0, whole).otherwise(
-        F.array_min(F.transform(sh, lambda s: F.sha2(s, 256)))
-    )
-
-
 def fingerprints(
     df: DataFrame, col: str = "text", id_col: str = "doc_id", k: int = 3
 ) -> DataFrame:
-    """Table-level fingerprint: explode shingles, sha2 in whole-stage
-    codegen, min per doc (one partial-agg shuffle of 64-byte digests).
-    Same result as :func:`fingerprint_col`, ~5× faster — the hash runs
-    codegen'd over flat rows instead of interpreted inside a lambda."""
+    """Document fingerprint: min SHA-256 over word k-gram shingles (a
+    1-permutation MinHash — stable under small reorderings at the
+    edges); whole-doc hash when shorter than k tokens.
+
+    Explode shingles, sha2 in whole-stage codegen, min per doc (one
+    partial-agg shuffle of 64-byte digests): ~5× faster than the same
+    hash as a per-row column expression, where sha2 evaluates
+    interpreted inside a lambda."""
     sh = shingles_col(col, k)
     whole = F.sha2(F.coalesce(F.col(col).cast("string"), F.lit("")), 256)
     exploded = df.select(

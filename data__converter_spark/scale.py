@@ -407,19 +407,6 @@ def compact_parquet(
     return int(n)
 
 
-def plan_has_exchange(df: DataFrame) -> bool:
-    """True when the physical plan contains a shuffle Exchange —
-    the test hook for bucketing/co-location assertions."""
-    spark = df.sparkSession
-    plan = df._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("simple")
-    )
-    return any(
-        line.strip().lstrip("+-: ").startswith("Exchange")
-        for line in plan.splitlines()
-    )
-
-
 def zonemap_stats(
     df: DataFrame, shard_col: str, stat_cols: list[str]
 ) -> DataFrame:

@@ -93,18 +93,3 @@ def flatten(df: DataFrame) -> DataFrame:
     """
     return df.select(*_flatten_cols(df.schema))
 
-
-def fill_missing_empty(df: DataFrame) -> DataFrame:
-    """String columns: null -> '' (the reference's output contract).
-
-    A coalesce projection rather than ``fillna(subset=...)`` — fillna
-    parses dots in column names as struct paths, which breaks on the
-    dotted names :func:`flatten` produces."""
-    return df.select(
-        *[
-            F.coalesce(F.col(f"`{f.name}`"), F.lit("")).alias(f.name)
-            if isinstance(f.dataType, T.StringType)
-            else F.col(f"`{f.name}`")
-            for f in df.schema.fields
-        ]
-    )

@@ -63,31 +63,6 @@ def run_once(
     return spark.table(name)
 
 
-def run_to_parquet(
-    stream_df: DataFrame,
-    path: str,
-    checkpoint: str,
-    timeout_s: int = 120,
-) -> None:
-    """Drain the stream (availableNow) into a parquet file sink with a
-    checkpoint — the production sink shape. Exactly-once contract:
-    source offsets commit to the checkpoint WAL and output files commit
-    through the file-sink metadata log, so a crashed/restarted query
-    resumes from the last committed offset and never re-emits a batch
-    (pinned by tests/test_streaming.py's restart test). Swap format for
-    Delta/Kafka in deployments; the call shape does not change.
-    """
-    q = (
-        stream_df.writeStream.format("parquet")
-        .option("path", path)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(timeout_s)
-
-
 def _crash_safe_merge(table_path: str, combine, epoch_aware: bool | None = None):
     """foreachBatch body factory: read the parquet table (None when it
     does not exist yet), compute ``combine(base, batch)``, and swap the

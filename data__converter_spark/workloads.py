@@ -4425,8 +4425,8 @@ def q_bfs_hops_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     customers -> those customers' suppliers), so the oracle is the
     statically-unrolled 3-level anti-join chain; every (node, hop)
     pair is hash-pinned, which catches both a missed frontier node and
-    a node re-entered at the wrong (non-minimal) level. Probe cadence
-    stays at the default 1: the measured sweep (graph.py:bfs_hops
+    a node re-entered at the wrong (non-minimal) level. bfs_hops pins
+    and probes every level: the measured sweep (graph.py:bfs_hops
     docstring) shows per-level checkpointing BEATS chaining here —
     an un-checkpointed level re-executes its prefix ~2^K times, which
     costs more than the probe it saves."""

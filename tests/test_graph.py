@@ -299,26 +299,3 @@ def test_feature_propagate_floored_mean_and_keep(spark):
     }
     assert got2[1] == 9
 
-
-def test_bfs_probe_cadence_invariant(spark):
-    from data__converter_spark.graph import bfs_hops
-
-    edges = spark.createDataFrame(
-        [(0, 1), (1, 2), (2, 3), (3, 4), (1, 5)], "src long, dst long"
-    )
-    want = sorted(
-        tuple(r) for r in bfs_hops(edges, 0, max_hops=4).collect()
-    )
-    for k in (2, 3, 4, 7):
-        got = sorted(
-            tuple(r)
-            for r in bfs_hops(edges, 0, max_hops=4, probe_every=k).collect()
-        )
-        assert got == want, f"probe_every={k} diverged"
-    # early exit still fires on probe levels: frontier dies at hop 2
-    small = spark.createDataFrame([(0, 1), (1, 2)], "src long, dst long")
-    got = sorted(
-        tuple(r)
-        for r in bfs_hops(small, 0, max_hops=6, probe_every=2).collect()
-    )
-    assert got == sorted(tuple(r) for r in bfs_hops(small, 0, 6).collect())

@@ -205,7 +205,7 @@ def test_txt_writer_json_lines_mode(spark, tmp_path, orders):
     df = orders.select("o_orderkey", "o_orderstatus").limit(5)
     out = str(tmp_path / "out_jsonl")
     writers.write_txt(df, out)
-    back = readers.read_jsonl(spark, out)
+    back = spark.read.json(out)
     assert back.count() == 5 and set(back.columns) == {"o_orderkey", "o_orderstatus"}
 
 
@@ -262,122 +262,6 @@ def test_xml_autodetect_tables(spark, tmp_path):
     assert any(k.endswith("item") for k in tables)
     (name,) = [k for k in tables if k.endswith("item")]
     assert tables[name].count() == 2
-
-
-AVRO_SCHEMA = {
-    "type": "record",
-    "name": "ev",
-    "fields": [
-        {"name": "id", "type": "long"},
-        {"name": "name", "type": "string"},
-        {"name": "score", "type": ["null", "double"]},
-        {"name": "ok", "type": "boolean"},
-    ],
-}
-
-AVRO_ROWS = [
-    {"id": 1, "name": "a", "score": 1.5, "ok": True},
-    {"id": 2, "name": "유니코드", "score": None, "ok": False},
-    {"id": 3, "name": "", "score": -0.25, "ok": True},
-]
-
-
-def test_avro_positive_path_stdlib_fallback(spark, tmp_path):
-    # spark-avro is absent here, so read_avro must fall through to the
-    # stdlib avro_lite OCF codec and produce real rows — per codec.
-    from data__converter_spark.io import avro_lite
-
-    for codec in ("null", "deflate"):
-        d = tmp_path / codec
-        d.mkdir()
-        avro_lite.write_avro(str(d / "part1.avro"), AVRO_ROWS[:2], AVRO_SCHEMA, codec)
-        avro_lite.write_avro(str(d / "part2.avro"), AVRO_ROWS[2:], AVRO_SCHEMA, codec)
-        df = readers.read_avro(spark, str(d))
-        assert [f.name for f in df.schema.fields] == ["id", "name", "score", "ok"]
-        got = sorted(
-            (r["id"], r["name"], r["score"], r["ok"]) for r in df.collect()
-        )
-        assert got == [(1, "a", 1.5, True), (2, "유니코드", None, False),
-                       (3, "", -0.25, True)]
-
-
-def test_avro_gate_on_unsupported_schema(spark, tmp_path):
-    # a schema beyond the avro_lite subset (array field) must raise the
-    # explicit spark-avro gate, not decode garbage
-    import io as _io
-    import json as _json
-
-    from data__converter_spark.io import avro_lite
-
-    buf = _io.BytesIO()
-    buf.write(avro_lite.MAGIC)
-    schema = {"type": "record", "name": "r",
-              "fields": [{"name": "xs", "type": {"type": "array", "items": "long"}}]}
-    meta = {"avro.schema": _json.dumps(schema).encode(), "avro.codec": b"null"}
-    avro_lite._write_long(buf, len(meta))
-    for k, v in meta.items():
-        avro_lite._write_bytes(buf, k.encode())
-        avro_lite._write_bytes(buf, v)
-    avro_lite._write_long(buf, 0)
-    buf.write(b"0123456789abcdef")
-    (tmp_path / "bad.avro").write_bytes(buf.getvalue())
-    with pytest.raises(NotImplementedError, match="spark-avro"):
-        readers.read_avro(spark, str(tmp_path / "bad.avro"))
-
-
-def test_avro_header_truncation_is_distinct_and_peek_escalates(spark, tmp_path):
-    # an OCF whose metadata map exceeds the 256 KB first peek must not
-    # be misdiagnosed as an unsupported schema: read_avro_schema raises
-    # the distinct AvroHeaderTruncated on the short prefix, and
-    # read_avro escalates to the 8 MiB peek and succeeds
-    from data__converter_spark.io import avro_lite
-
-    d = tmp_path / "bigheader"
-    d.mkdir()
-    big_meta = {"junk.padding": b"x" * 400_000}
-    avro_lite.write_avro(
-        str(d / "big.avro"), AVRO_ROWS, AVRO_SCHEMA, "null", meta=big_meta
-    )
-    raw = (d / "big.avro").read_bytes()
-    with pytest.raises(avro_lite.AvroHeaderTruncated):
-        avro_lite.read_avro_schema(raw[:262_144])
-    df = readers.read_avro(spark, str(d))
-    assert df.count() == len(AVRO_ROWS)
-
-
-def test_avro_multi_file_type_divergence_guard(spark, tmp_path):
-    # same field NAMES, different field TYPES across a directory: the
-    # kernel guard must fail loudly naming both signatures, not let a
-    # silent long->double widening or Arrow coercion error through
-    from data__converter_spark.io import avro_lite
-
-    d = tmp_path / "retyped"
-    d.mkdir()
-    avro_lite.write_avro(str(d / "a.avro"), AVRO_ROWS, AVRO_SCHEMA, "null")
-    schema2 = {
-        "type": "record",
-        "name": "ev",
-        "fields": [
-            {"name": "id", "type": "double"},  # was long
-            {"name": "name", "type": "string"},
-            {"name": "score", "type": ["null", "double"]},
-            {"name": "ok", "type": "boolean"},
-        ],
-    }
-    avro_lite.write_avro(
-        str(d / "b.avro"),
-        [{"id": 9.5, "name": "z", "score": None, "ok": False}],
-        schema2,
-        "null",
-    )
-    with pytest.raises(Exception, match="names AND types"):
-        readers.read_avro(spark, str(d)).collect()
-
-
-def test_avro_empty_dir_raises(spark, tmp_path):
-    (tmp_path / "empty").mkdir()
-    with pytest.raises(Exception):
-        readers.read_avro(spark, str(tmp_path / "empty"))
 
 
 def test_xml_selector_path_child_combinator(spark, tmp_path):
@@ -581,7 +465,7 @@ def test_convert_xml_to_csv(spark, tmp_path):
 
 
 def test_flatten_nested_structs_to_dotted_names(spark):
-    from data__converter_spark.schema import fill_missing_empty, flatten
+    from data__converter_spark.schema import flatten
 
     df = spark.createDataFrame(
         [(1, ("x", (2, None)), ["k"])],
@@ -589,61 +473,6 @@ def test_flatten_nested_structs_to_dotted_names(spark):
     )
     flat = flatten(df)
     assert flat.columns == ["id", "a.b", "a.c.d", "a.c.e", "tags"]
-    row = fill_missing_empty(flat).collect()[0]
-    assert row["a.b"] == "x" and row["a.c.d"] == 2 and row["a.c.e"] == ""
+    row = flat.collect()[0]
+    assert row["a.b"] == "x" and row["a.c.d"] == 2 and row["a.c.e"] is None
     assert row["tags"] == ["k"]
-
-
-def test_orc_roundtrip_with_pushdown(spark, tmp_path):
-    """ORC read/write round-trip; the filter must reach the ORC scan
-    (searchArgument pushdown) and the projection must prune."""
-    df = spark.createDataFrame(
-        [(i, f"n{i}", float(i)) for i in range(100)], "id long, name string, v double"
-    )
-    p = str(tmp_path / "t.orc")
-    writers.write_orc(df, p)
-    back = readers.read_orc(spark, p)
-    assert back.count() == 100
-    q = back.filter("id >= 90").select("id", "name")
-    assert q.count() == 10
-    plan = q._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters: [" in plan and "id" in plan.split("PushedFilters")[1][:80]
-    assert "v:" not in plan.split("ReadSchema:")[1].splitlines()[0]
-
-
-def test_avro_lite_union_branch_order(tmp_path):
-    """[T, "null"] unions (null declared SECOND) must round-trip: the
-    branch index follows the declared order, not a hardcoded
-    ["null", T] (regression: decoding a present double as branch 0 =
-    null desyncs the byte stream)."""
-    from data__converter_spark.io import avro_lite
-
-    schema = {
-        "type": "record",
-        "name": "r",
-        "fields": [
-            {"name": "a", "type": ["double", "null"]},
-            {"name": "b", "type": ["null", "long"]},
-        ],
-    }
-    rows = [{"a": 1.5, "b": None}, {"a": None, "b": 7}, {"a": -2.25, "b": 0}]
-    p = str(tmp_path / "u.avro")
-    avro_lite.write_avro(p, rows, schema)
-    with open(p, "rb") as f:
-        _, got = avro_lite.read_avro_bytes(f.read())
-    assert got == rows
-
-
-def test_avro_truncated_small_file_blames_the_file_not_the_cap(spark, tmp_path):
-    # a genuinely cut-off file SMALLER than the peek must be diagnosed
-    # as a truncated file (partial upload), not as exceeding the peek
-    # cap, and never escalate to the 8 MiB retry
-    from data__converter_spark.io import avro_lite
-
-    d = tmp_path / "cut"
-    d.mkdir()
-    avro_lite.write_avro(str(d / "a.avro"), AVRO_ROWS, AVRO_SCHEMA, "null")
-    raw = (d / "a.avro").read_bytes()
-    (d / "a.avro").write_bytes(raw[:20])  # cut mid-metadata-map
-    with pytest.raises(ValueError, match="truncated mid-header"):
-        readers.read_avro(spark, str(d))

@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from data__converter_spark.llmops import dedup, similarity, textstats
+from helpers import sig_from_hs_udf
 
 
 @pytest.fixture(scope="module")
@@ -351,10 +352,8 @@ def test_lang_id(spark):
 
 def test_fingerprint_stability(spark, dup_docs):
     fp = {
-        r["doc_id"]: r["fp"]
-        for r in dup_docs.select(
-            "doc_id", textstats.fingerprint_col("text", 3).alias("fp")
-        ).collect()
+        r["doc_id"]: r["fingerprint"]
+        for r in textstats.fingerprints(dup_docs, "text", "doc_id", 3).collect()
     }
     assert fp[1] == fp[2]          # identical docs
     assert fp[1] != fp[4]          # different docs
@@ -696,9 +695,30 @@ def test_bm25_rare_terms_saturation_and_length_norm(spark):
     # only doc 1 still shares a term with the query
     capped = bm25_retrieval(q, c, top_k=4, max_df=3).collect()
     assert {r["match_id"] for r in capped} == {1}
-    # persist_stats caches the tf frame (hot-loop mode): same rows
-    hot = bm25_retrieval(q, c, top_k=4, persist_stats=True).collect()
-    assert sorted(map(tuple, hot)) == sorted(map(tuple, rows))
+
+
+def test_index_from_tf_stats_count_the_postings_rows(spark):
+    """A NULL term or a NULL id never reaches the postings, and the
+    corpus stats come from the same rows: n_docs, total_tok and avgdl
+    describe exactly the documents and dl values the postings carry."""
+    from data__converter_spark.llmops.similarity import index_from_tf
+
+    c_tf = spark.createDataFrame(
+        [
+            (1, "cat", 2),
+            (1, "dog", 1),
+            (1, None, 7),  # NULL term: must not lengthen doc 1
+            (2, "cat", 3),
+            (None, "cat", 5),  # NULL id: not a document
+        ],
+        "match_id long, term string, tf long",
+    )
+    postings, stats = index_from_tf(c_tf)
+    dl = {r["match_id"]: r["dl"] for r in postings.collect()}
+    assert dl == {1: 3, 2: 3}
+    s = stats.collect()[0]
+    assert (s["n_docs"], s["total_tok"]) == (len(dl), sum(dl.values()))
+    assert s["avgdl"] == s["total_tok"] // s["n_docs"]
 
 
 def test_text_index_artifact_matches_inline_ranking(spark, tmp_path):
@@ -786,7 +806,7 @@ def test_minhash_signature_paths_agree(spark, dup_docs):
     split = {
         r["doc_id"]: r["sig"]
         for r in hashed.select(
-            "doc_id", dedup._sig_from_hs_udf(64, 42)(F.col("hs")).alias("sig")
+            "doc_id", sig_from_hs_udf(64, 42)(F.col("hs")).alias("sig")
         ).collect()
     }
     # doc 5 has < 3 tokens: direct yields NULL and split yields no row

@@ -6,6 +6,7 @@ import pytest
 
 from data__converter_spark.io import pdf
 from data__converter_spark.llmops import multimodal
+from helpers import encode_wav, synthetic_media
 
 # ---------------------------------------------------------------------------
 # F21 page-spec parser
@@ -115,24 +116,13 @@ def test_merge_and_split_collect_only_requested(spark, pdf_dir, monkeypatch):
     assert "PythonRDD" not in split._jdf.rdd().toDebugString()
 
 
-def test_pypdf_codec_gated():
-    try:
-        import pypdf  # noqa: F401
-
-        pytest.skip("pypdf installed")
-    except ImportError:
-        pass
-    with pytest.raises(NotImplementedError):
-        pdf.PypdfCodec()
-
-
 # ---------------------------------------------------------------------------
 # multimodal plumbing
 # ---------------------------------------------------------------------------
 
 
 def test_image_features_schema_and_determinism(spark):
-    media = multimodal.synthetic_media(spark, 30)
+    media = synthetic_media(spark, 30)
     feats = multimodal.image_features(media)
     rows = feats.collect()
     n_images = media.filter("kind = 'image'").count()
@@ -146,7 +136,7 @@ def test_image_features_schema_and_determinism(spark):
 
 
 def test_resize_images_retags_meta(spark):
-    media = multimodal.synthetic_media(spark, 12)
+    media = synthetic_media(spark, 12)
     out = multimodal.resize_images(media, 32, 16)
     for r in out.collect():
         assert (r.width, r.height) == (32, 16)
@@ -154,7 +144,7 @@ def test_resize_images_retags_meta(spark):
 
 
 def test_sample_frames_fanout(spark):
-    media = multimodal.synthetic_media(spark, 30)
+    media = synthetic_media(spark, 30)
     frames = multimodal.sample_frames(media, every_ms=1000)
     got = frames.groupBy("media_id").count().collect()
     meta = {
@@ -168,7 +158,7 @@ def test_sample_frames_fanout(spark):
 
 
 def test_audio_features_schema_and_determinism(spark):
-    media = multimodal.synthetic_media(spark, 30)
+    media = synthetic_media(spark, 30)
     feats = multimodal.audio_features(media)
     rows = feats.collect()
     assert len(rows) == media.filter("kind = 'audio'").count()
@@ -181,12 +171,6 @@ def test_audio_features_schema_and_determinism(spark):
         assert r.n_samples == durations[r.media_id] * 16
         assert 0.0 <= r.mean_amp <= 1.0
         assert len(r.feature) == multimodal.STUB_FEATURE_DIM
-
-
-def test_audio_decode_gated(spark):
-    media = multimodal.synthetic_media(spark, 6)
-    with pytest.raises(NotImplementedError):
-        multimodal.decode_audio(media)
 
 
 def test_write_outputs_and_timestamp_name(spark, pdf_dir, tmp_path):
@@ -258,13 +242,12 @@ def test_bmp_roundtrip_and_real_image_features(spark):
 
 
 def test_decode_chain_contract_and_pil_slot(spark):
-    """The decode chain (_try_decode_image) must keep one contract on
-    every branch: BMP decodes identically to _try_decode_bmp; an
-    undecodable compressed payload returns None (feature kernel then
-    uses the stub with METADATA dims, same schema); and when PIL is
-    installed the compressed branch returns a real (h, w, 3) array in
-    the same slot — stub and real paths differ only in values, never
-    in columns or types."""
+    """The decode chain (_try_decode_image: BMP -> PNG -> stub) must
+    keep one contract on every branch: BMP decodes identically to
+    _try_decode_bmp; a payload neither codec decodes (JPEG here, the
+    slot an optional PIL branch once filled) returns None and the
+    feature kernel uses the stub with METADATA dims — stub and real
+    paths differ only in values, never in columns or types."""
     import numpy as np
 
     px = np.arange(2 * 2 * 3, dtype=np.uint8).reshape(2, 2, 3)
@@ -272,13 +255,7 @@ def test_decode_chain_contract_and_pil_slot(spark):
     assert np.array_equal(multimodal._try_decode_image(bmp), px)
 
     fake_jpeg = b"\xff\xd8\xff\xe0" + b"not really a jpeg" * 4
-    try:
-        import PIL  # noqa: F401
-
-        has_pil = True
-    except ImportError:
-        has_pil = False
-    assert multimodal._try_decode_image(fake_jpeg) is None  # both gates hold
+    assert multimodal._try_decode_image(fake_jpeg) is None
 
     media = spark.createDataFrame(
         [
@@ -292,16 +269,6 @@ def test_decode_chain_contract_and_pil_slot(spark):
     assert (rows[1].width, rows[1].height) == (2, 2)
     assert (rows[2].width, rows[2].height) == (32, 16)
     assert len(rows[1].feature) == len(rows[2].feature) == 8
-
-    if has_pil:
-        # real PIL leg: a valid PNG decodes to its true pixels
-        import io
-
-        from PIL import Image
-
-        buf = io.BytesIO()
-        Image.fromarray(px).save(buf, format="PNG")
-        assert np.array_equal(multimodal._try_decode_image(buf.getvalue()), px)
 
 
 def test_bmp_real_resize_nearest_neighbor(spark):
@@ -323,7 +290,7 @@ def test_wav_real_audio_features_and_decode(spark):
     import numpy as np
 
     samples = np.array([0, 16384, -16384, 32767] * 4, dtype=np.int16)
-    payload = multimodal.encode_wav(samples, 8000)
+    payload = encode_wav(samples, 8000)
     media = spark.createDataFrame(
         [(2, "audio", bytearray(payload), (0, 0, 1000, "audio/wav"))],
         multimodal.MEDIA_SCHEMA,
@@ -332,10 +299,6 @@ def test_wav_real_audio_features_and_decode(spark):
     assert row.sample_rate == 8000 and row.n_samples == 16
     expected = float(np.abs(samples.astype(np.float64)).mean() / 32768.0)
     assert abs(row.mean_amp - expected) < 1e-12
-
-    dec = multimodal.decode_audio(media, assume_wav=True).collect()[0]
-    assert dec.sample_rate == 8000
-    assert np.allclose(dec.samples, samples.astype(np.float64) / 32768.0)
 
 
 def test_minipdf_real_roundtrip(tmp_path, spark):
@@ -373,38 +336,16 @@ def test_minipdf_rejects_compressed_like_input():
         pdf.MiniPdfCodec().count_pages(b"%PDF-1.7\ngarbage with no objects")
 
 
-def test_default_codec_is_real_without_pypdf():
-    c = pdf.default_codec()
-    doc = pdf.MiniPdfCodec.make(["x"])
-    assert c.count_pages(doc) == 1
-
-
-def test_capability_gate_contracts(spark, tmp_path):
-    """The three honest NotImplementedError gates must keep their exact
-    contracts so deployment swaps (spark-avro jar, pypdf, ffmpeg) are
-    drop-in: error type AND the actionable hint in the message."""
-    from data__converter_spark.io import readers
-
-    # avro: the stdlib avro_lite fallback is the positive path now
-    # (test_io covers it); the gate fires only for schemas beyond the
-    # avro_lite subset (test_avro_gate_on_unsupported_schema).  A
-    # missing path is a plain data error, NOT a capability gate — it
-    # must propagate as Spark's path error, never be converted.
-    from pyspark.errors.exceptions.captured import AnalysisException
-
-    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
-        readers.read_avro(spark, str(tmp_path / "x.avro"))
-
-    # pypdf codec: constructor gates, FakePdfCodec stays available
-    with pytest.raises(NotImplementedError, match="pypdf"):
-        pdf.PypdfCodec()
-
-    # compressed audio: default decode gates with the WAV escape hatch
-    dummy = spark.createDataFrame(
-        [("m1", "audio", b"\x00")], "media_id string, kind string, payload binary"
-    )
-    with pytest.raises(NotImplementedError, match="assume_wav=True"):
-        multimodal.decode_audio(dummy)
+def test_default_codec_is_real_without_pypdf(spark, tmp_path):
+    """merge_pdfs / split_pdf with no codec argument run the real
+    stdlib MiniPdfCodec."""
+    (tmp_path / "a.pdf").write_bytes(pdf.MiniPdfCodec.make(["a-1", "a-2"]))
+    (tmp_path / "b.pdf").write_bytes(pdf.MiniPdfCodec.make(["b-1"]))
+    df = pdf.read_pdfs(spark, str(tmp_path / "*.pdf"))
+    merged = pdf.merge_pdfs(df, [str(tmp_path / "b.pdf"), str(tmp_path / "a.pdf")])
+    assert pdf.MiniPdfCodec().count_pages(merged.content) == 3
+    outs = pdf.split_pdf(df, str(tmp_path / "a.pdf"))
+    assert [pdf.MiniPdfCodec().count_pages(bytes(r.content)) for r in outs.collect()] == [1, 1]
 
 
 def test_png_codec_roundtrip_all_filters_and_types():
@@ -438,10 +379,9 @@ def test_png_codec_roundtrip_all_filters_and_types():
 
 
 def test_png_codec_agrees_with_pil_when_installed():
-    """Cross-decoder parity: PIL (the deployment codec) reads our
-    encoder's bytes to the same pixels, and our decoder reads
-    PIL-saved PNGs — skipped in containers without pillow, where the
-    stdlib codec is the positive path instead of the stub."""
+    """Cross-decoder parity against an independent decoder: PIL reads
+    our encoder's bytes to the same pixels, and our decoder reads
+    PIL-saved PNGs — skipped where pillow is not installed."""
     import io
 
     import numpy as np

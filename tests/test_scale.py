@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from data__converter_spark import scale
+from helpers import plan_has_exchange
 
 
 @pytest.fixture(scope="module")
@@ -29,20 +30,20 @@ def warehouse_tables(spark, orders):
 def test_bucketed_join_skips_shuffle(spark, warehouse_tables, orders):
     ta, tb = warehouse_tables
     joined = spark.table(ta).join(spark.table(tb), "o_orderkey")
-    assert not scale.plan_has_exchange(joined), "bucketed join must not shuffle"
+    assert not plan_has_exchange(joined), "bucketed join must not shuffle"
     assert joined.count() == orders.count()
     # the same join on raw parquet does shuffle — the bucketing is what
     # removed the Exchange
     raw = orders.select("o_orderkey", "o_totalprice").join(
         orders.select("o_orderkey", "o_orderstatus"), "o_orderkey"
     )
-    assert scale.plan_has_exchange(raw)
+    assert plan_has_exchange(raw)
 
 
 def test_bucketed_agg_skips_shuffle(spark, warehouse_tables):
     ta, _ = warehouse_tables
     agg = spark.table(ta).groupBy("o_orderkey").agg(F.sum("o_totalprice"))
-    assert not scale.plan_has_exchange(agg)
+    assert not plan_has_exchange(agg)
 
 
 def test_salted_join_equals_plain_join(spark, orders, sf_dir):
@@ -115,20 +116,6 @@ def test_compact_parquet_partitioned_layout(spark, orders, tmp_path):
     got = spark.read.parquet(out)
     assert got.count() == n_rows
     assert set(got.columns) == set(orders.columns)
-
-
-def test_orc_roundtrip_preserves_types(spark, orders, tmp_path):
-    from data__converter_spark.io import readers, writers
-
-    out = str(tmp_path / "orders_orc")
-    sample = orders.limit(500)
-    writers.write_orc(sample, out)
-    back = readers.read_orc(spark, out)
-    assert back.schema == sample.schema  # typed, unlike the text edge
-    assert back.count() == 500
-    # predicate pushdown reaches the ORC scan
-    plan = back.filter(F.col("o_orderkey") == 1)._jdf.queryExecution().toString()
-    assert "PushedFilters" in plan
 
 
 def test_partitioned_write_prunes_partitions(spark, orders, tmp_path):
@@ -440,7 +427,7 @@ def test_zshard_is_deterministic_projection(spark, orders):
     mins = {"k": 1, "p": 0}
     maxs = {"k": 60000, "p": 600000}
     a = scale.zshard(src, ["k", "p"], mins, maxs, 4, 16)
-    assert not scale.plan_has_exchange(a.select("zshard"))
+    assert not plan_has_exchange(a.select("zshard"))
     xs = {r["zshard"] for r in a.select("zshard").distinct().collect()}
     assert xs and all(0 <= x < 16 for x in xs)
     b = scale.zshard(src, ["k", "p"], mins, maxs, 4, 16)

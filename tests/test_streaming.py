@@ -244,20 +244,26 @@ def test_stream_stream_range_join_equals_batch(spark, events):
 
 
 def test_stream_checkpoint_restart_no_reprocess(spark, tmp_path):
-    """Exactly-once at the sink: a second run over the SAME checkpoint
-    finds no new source offsets and emits nothing — restart-safe resume
-    rather than reprocess-and-duplicate."""
-    from data__converter_spark.streaming.runner import (
-        read_events_stream,
-        run_to_parquet,
-    )
+    """Exactly-once over the events file source: a second run over the
+    SAME checkpoint finds no new source offsets and emits nothing —
+    restart-safe resume rather than reprocess-and-duplicate."""
+    from data__converter_spark.streaming.runner import read_events_stream
 
     out = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
 
     def run_once_more():
         s = read_events_stream(spark, "/root/testdata/sf0.001")
-        run_to_parquet(s.select("event_id", "user_id", "ts"), out, ckpt)
+        (
+            s.select("event_id", "user_id", "ts")
+            .writeStream.format("parquet")
+            .option("path", out)
+            .option("checkpointLocation", ckpt)
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination(120)
+        )
 
     run_once_more()
     n1 = spark.read.parquet(out).count()
