@@ -1213,8 +1213,10 @@ def ingest_state_compact(
     :func:`~data__converter_spark.commit.swap` as the index
     compactors, ``commit.recover`` at entry included:
 
-    - ``front``: one row per id (duplicates are bit-identical — the
-      Arrow kernel is deterministic — so any one survives);
+    - ``front``: one row per id — replay duplicates are bit-identical
+      (the Arrow kernel is deterministic); an id reused with changed
+      text leaves two different rows, and the smallest (hs, sig) one
+      survives, the same on every run;
     - ``buckets``: distinct (id, band, bucket);
     - ``pairs``: distinct (id_a, id_b, jaccard);
     - ``digests``: distinct (id, dg);
@@ -1281,13 +1283,15 @@ def ingest_state_compact(
         id_field = front.schema.fields[0]
         id_col = id_field.name
 
+        # one row per id, picked by value (the smallest (hs, sig)) so
+        # an id reused with changed text folds the same on every run
+        rest = [c for c in front.columns if c != id_col]
+        front_one = front.groupBy(id_col).agg(
+            F.min(F.struct(*rest)).alias("__r__")
+        ).select(id_col, *[F.col(f"__r__.{c}").alias(c) for c in rest])
         held: list = []
         run_jobs(
-            # one row per id — replay duplicates are bit-identical (the
-            # Arrow kernel is deterministic), so the hash-aggregate
-            # dedup (r15) picks the same row the old per-key
-            # row_number window did, without the window's sort
-            lambda: _fold("front", front.dropDuplicates([id_col])),
+            lambda: _fold("front", front_one),
             lambda: _fold(
                 "buckets",
                 spark.read.schema(

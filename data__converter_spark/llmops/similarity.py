@@ -1,39 +1,84 @@
-"""Approximate-nearest-neighbor search over an embedding column.
+"""Similarity search over an embedding column, and the standing ANN index.
+
+The five dense top-k operators share one pipeline: a per-index
+candidate stage, then one scoring stage, then one rank stage
+(:func:`_rank`, cosine descending or ADC distance ascending, ties to
+the smaller neighbor id).
 
 - :func:`brute_force_topk` — exact cosine top-k per probe. The
   correctness baseline: probes × corpus is fine when probes are few
   (broadcast the probes, never shuffle the corpus).
-- :func:`lsh_topk` — random-hyperplane LSH: corpus and probes hash to
-  sign-pattern buckets; candidates come only from matching buckets
-  (with multi-probe re-ranking exact). The 100 TB path: the corpus is
-  bucketed once (write-time), each query touches ~n/2^bits rows.
+- :func:`lsh_topk` — random-hyperplane LSH: candidates come only from
+  buckets the probe hashes to, re-ranked by exact cosine.
 - :func:`ivf_topk` — IVF-flat: Voronoi cells around a deterministic
-  centroid sample; probes score nprobe/n_cells of the corpus. The
-  other standard scale path (write the corpus partitioned by cell);
-  degenerates to exact brute force at nprobe == n_cells.
+  centroid sample; probes score nprobe/n_cells of the corpus, and
+  nprobe == n_cells degenerates to exact brute force.
+- :func:`pq_topk` — product quantization: asymmetric distances from a
+  per-probe lookup table over m code ids per vector.
+- :func:`ivf_pq_topk` — IVF-PQ: cell pruning, then PQ distances.
 
-Scoring runs as vectorized numpy over Arrow batches; brute_force_topk
-is the exactness baseline the approximate paths are tested against.
+Brute force and LSH share one grid-cosine kernel (:func:`_grid_cosine`);
+PQ and IVF-PQ share one lookup-table builder and one ADC stage.
+
+The standing IVF-PQ artifact (:func:`ann_index_build`, ``_append``,
+``_delete``, ``_compact``, ``_retrain``; queried by
+:func:`ivf_pq_from_index`) has one layout: the frozen ``cellbook`` and
+``codebook`` tables, one ``index`` table of (vid, s, code) rows
+partitioned by ``cell``, and a ``tombstones`` table of deleted vids.
+The streaming ANN state holds the same rows (:func:`ivf_pq_from_state`),
+and both rank through :func:`_ivf_pq_rank`.
 """
 
 from __future__ import annotations
+
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .. import commit
-from ..scale import local_frame
+from ..scale import local_frame, run_jobs
 
-# All three entry points broadcast the probe set from the driver — the
+# Every top-k operator broadcasts the probe set from the driver — the
 # documented "few probes" contract. The guard keeps that honest at
 # scale: a caller with a large probe side gets a clear error pointing
 # at the bucketed path instead of a silent driver OOM.
 MAX_BROADCAST_PROBES = 10_000
 
-_TOPK_SCHEMA = "probe_id long, neighbor_id long, cosine double, rank int"
+#: Integer grid for embedding quantization: ``floor(x * VEC_QUANT + 0.5)``.
+#: With |x| ≲ 8 and dim ≤ 512, every dot-product term and partial sum is an
+#: integer < 2^53, so float accumulation is EXACT in any order — numpy SIMD,
+#: a SQL fold, and DuckDB's list_dot_product agree bit-for-bit. 2^17 keeps
+#: ~5 significant decimal digits of each component.
+VEC_QUANT = float(1 << 17)
+
+# One typed empty result per score kind.
+_TOPK_SCHEMA = {
+    "cosine": "probe_id long, neighbor_id long, cosine double, rank int",
+    "adc_dist": "probe_id long, neighbor_id long, adc_dist long, rank int",
+}
+_SCORED_SCHEMA = "probe_id long, neighbor_id long, cosine double"
+
+# The ANN artifact's tables, written and read under these schemas (a
+# schema-less parquet read runs a footer-inference job). ``cell`` is the
+# index table's partition column, so it reads back last.
+_BOOK_SCHEMA = "cid long, pos int, val_q long"
+_INDEX_SCHEMA = "vid long, s int, code long, cell long"
+_TOMB_SCHEMA = "vid long"
 
 
-def _collect_probes(probes: DataFrame, id_col: str, vec_col: str) -> list:
+def _grid(m):
+    """``m`` on the :data:`VEC_QUANT` integer grid (float64 values)."""
+    import numpy as np
+
+    return np.floor(m * VEC_QUANT + 0.5)
+
+
+def _probe_matrix(probes: DataFrame, id_col: str, vec_col: str):
+    """The broadcast probe set as (ids int64, float64 matrix), or None
+    when it is empty."""
+    import numpy as np
+
     rows = (
         probes.select(F.col(id_col), F.col(vec_col))
         .limit(MAX_BROADCAST_PROBES + 1)
@@ -46,11 +91,64 @@ def _collect_probes(probes: DataFrame, id_col: str, vec_col: str) -> list:
             "probes, pre-bucket both sides with hyperplane_bucket_col() "
             "and join on the bucket instead."
         )
-    return rows
+    if not rows:
+        return None
+    return (
+        np.array([r[0] for r in rows], dtype=np.int64),
+        np.stack([np.asarray(r[1], dtype=np.float64) for r in rows]),
+    )
 
 
-def _empty_topk(spark) -> DataFrame:
-    return local_frame(spark, [], _TOPK_SCHEMA)
+def _rank(scored: DataFrame, k: int, score: str, include_self: bool) -> DataFrame:
+    """The one rank stage: drop self pairs unless asked, number each
+    probe's neighbors best first — ``cosine`` descending or
+    ``adc_dist`` ascending, ties to the smaller neighbor id — and keep
+    the top ``k``. Output: (probe_id, neighbor_id, <score>, rank)."""
+    if not include_self:
+        scored = scored.filter(F.col("probe_id") != F.col("neighbor_id"))
+    best = F.desc(score) if score == "cosine" else F.asc(score)
+    w = Window.partitionBy("probe_id").orderBy(best, F.asc("neighbor_id"))
+    return scored.select(
+        "probe_id", "neighbor_id", score, F.row_number().over(w).alias("rank")
+    ).filter(F.col("rank") <= k)
+
+
+def _grid_cosine(
+    corpus: DataFrame, probe_ids, pm, id_col: str, vec_col: str, pick
+) -> DataFrame:
+    """One Arrow pass over the corpus: the exact grid cosine of every
+    batch row against every broadcast probe. ``pick(vq, cos)`` returns
+    the (row, probe) index arrays to emit as (probe_id, neighbor_id,
+    cosine) — the candidate rule is the only per-operator part.
+
+    On the :data:`VEC_QUANT` grid dots and norms are exact integer
+    sums, so cosine = dot / sqrt(n2a * n2b) is bit-identical across
+    numpy and SQL engines."""
+    import numpy as np
+
+    pq = _grid(pm)
+    bc = corpus.sparkSession.sparkContext.broadcast(
+        (probe_ids, pq, np.einsum("ij,ij->i", pq, pq))
+    )
+
+    def kernel(batches):
+        import pandas as pd
+
+        ids_p, mat_pq, pn2 = bc.value
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            nid = pdf[id_col].to_numpy(dtype=np.int64)
+            vq = _grid(np.stack(pdf[vec_col].to_numpy()).astype(np.float64))
+            cos = (vq @ mat_pq.T) / np.sqrt(
+                np.outer(np.einsum("ij,ij->i", vq, vq), pn2)
+            )  # (batch, n_probes)
+            ii, jj = pick(vq, cos)
+            yield pd.DataFrame(
+                {"probe_id": ids_p[jj], "neighbor_id": nid[ii], "cosine": cos[ii, jj]}
+            )
+
+    return corpus.select(id_col, vec_col).mapInPandas(kernel, _SCORED_SCHEMA)
 
 
 def brute_force_topk(
@@ -65,66 +163,41 @@ def brute_force_topk(
 
     Output: (probe_id, neighbor_id, cosine, rank). The probe matrix is
     broadcast (small by construction); corpus partitions stream through
-    a numpy matmul kernel (mapInPandas, Arrow batches) emitting
-    batch-local top-k per probe, then one small window ranks the
-    partials — shuffle volume is n_batches*n_probes*k rows, never the
-    corpus. Deterministic (cosine desc, neighbor_id) order.
+    the grid-cosine kernel emitting batch-local top-(k+1) per probe,
+    then one small window ranks the partials — shuffle volume is
+    n_batches*n_probes*k rows, never the corpus. Deterministic
+    (cosine desc, neighbor_id) order.
     """
     import numpy as np
 
-    spark = corpus.sparkSession
-    rows = _collect_probes(probes, id_col, vec_col)
-    if not rows:
-        return _empty_topk(spark)
-    probe_ids = np.array([r[0] for r in rows], dtype=np.int64)
-    pm = np.stack([np.asarray(r[1], dtype=np.float64) for r in rows])
-    # VEC_QUANT integer grid -> exact dot/norm sums in any accumulation
-    # order; cosine = dot / sqrt(n2a * n2b) is then bit-identical
-    # across numpy and SQL engines (see VEC_QUANT).
-    pq = np.floor(pm * VEC_QUANT + 0.5)
-    pn2 = np.einsum("ij,ij->i", pq, pq)
-    bc = spark.sparkContext.broadcast((probe_ids, pq, pn2))
+    probe = _probe_matrix(probes, id_col, vec_col)
+    if probe is None:
+        return local_frame(corpus.sparkSession, [], _TOPK_SCHEMA["cosine"])
 
-    def kernel(batches):
-        import pandas as pd
+    def pick(vq, cos):
+        # per-probe partial top-(k+1) within this batch (+1: the probe
+        # itself) bounds the shuffle to n_batches * n_probes * k rows
+        kk = min(k + 1, len(cos))
+        top = np.argpartition(-cos, kk - 1, axis=0)[:kk]
+        return top.T.ravel(), np.repeat(np.arange(cos.shape[1]), kk)
 
-        ids_p, mat_pq, p_n2 = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            nid = pdf[id_col].to_numpy(dtype=np.int64)
-            cm = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            cq = np.floor(cm * VEC_QUANT + 0.5)
-            cn2 = np.einsum("ij,ij->i", cq, cq)
-            sims = (cq @ mat_pq.T) / np.sqrt(
-                np.outer(cn2, p_n2)
-            )  # (batch, n_probes)
-            out_p, out_n, out_c = [], [], []
-            # per-probe partial top-k within this batch bounds the
-            # shuffle to n_batches * n_probes * k rows
-            kk = min(k + 1, len(nid))
-            top = np.argpartition(-sims, kk - 1, axis=0)[:kk]
-            for j in range(len(ids_p)):
-                rows_j = top[:, j]
-                out_p.extend([ids_p[j]] * len(rows_j))
-                out_n.extend(nid[rows_j])
-                out_c.extend(sims[rows_j, j])
-            yield pd.DataFrame(
-                {"probe_id": out_p, "neighbor_id": out_n, "cosine": out_c}
-            )
+    scored = _grid_cosine(corpus, *probe, id_col, vec_col, pick)
+    return _rank(scored, k, "cosine", include_self)
 
-    scored = corpus.select(id_col, vec_col).mapInPandas(
-        kernel, "probe_id long, neighbor_id long, cosine double"
-    )
-    if not include_self:
-        scored = scored.filter(F.col("probe_id") != F.col("neighbor_id"))
-    w = Window.partitionBy("probe_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
+
+def _md5_sample(df: DataFrame, k: int, vec_col: str, id_col: str, seed: int) -> list:
+    """The ``k`` rows with the smallest md5("{id}:{seed}"), in (hash,
+    id) order — the engine-portable centroid draw (the DuckDB oracle
+    draws the identical sample)."""
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("probe_id", "neighbor_id", "cosine", "rank")
+        df.select(F.col(id_col), F.col(vec_col))
+        .withColumn(
+            "__h__",
+            F.md5(F.concat_ws(":", F.col(id_col).cast("string"), F.lit(str(seed)))),
+        )
+        .orderBy("__h__", id_col)
+        .limit(k)
+        .collect()
     )
 
 
@@ -149,22 +222,17 @@ def ivf_topk(
     identical sample. At scale the corpus is written partitioned by
     cell; a query reads nprobe/n_cells of it. With ``nprobe ==
     n_cells`` every cell is probed and the result equals brute force
-    exactly (tested).
+    exactly (tested). Scoring is normalized-float cosine, which the
+    oracle SQL replicates.
     """
     import numpy as np
 
-    # deterministic centroid sample: n_cells corpus vectors w/ smallest id-hash
-    cent_rows = (
-        corpus.select(F.col(id_col), F.col(vec_col))
-        .withColumn(
-            "__h__",
-            F.md5(F.concat_ws(":", F.col(id_col).cast("string"), F.lit(str(seed)))),
-        )
-        .orderBy("__h__", id_col)
-        .limit(n_cells)
-        .collect()
+    C = np.stack(
+        [
+            np.asarray(r[1], dtype=np.float64)
+            for r in _md5_sample(corpus, n_cells, vec_col, id_col, seed)
+        ]
     )
-    C = np.stack([np.asarray(r[1], dtype=np.float64) for r in cent_rows])
     C = C / np.linalg.norm(C, axis=1, keepdims=True)
     spark = corpus.sparkSession
     bc_c = spark.sparkContext.broadcast(C)
@@ -184,25 +252,21 @@ def ivf_topk(
     )
 
     # probes are small: rank their cells driver-side, explode to nprobe rows
-    p_rows = _collect_probes(probes, id_col, vec_col)
-    if not p_rows:
-        return _empty_topk(spark)
-    pm = np.stack([np.asarray(r[1], dtype=np.float64) for r in p_rows])
-    pm = pm / np.linalg.norm(pm, axis=1, keepdims=True)
-    cell_rank = np.argsort(-(pm @ C.T), axis=1)[:, :nprobe]
+    probe = _probe_matrix(probes, id_col, vec_col)
+    if probe is None:
+        return local_frame(spark, [], _TOPK_SCHEMA["cosine"])
+    probe_ids, pm = probe
+    pn = pm / np.linalg.norm(pm, axis=1, keepdims=True)
+    cell_rank = np.argsort(-(pn @ C.T), axis=1)[:, :nprobe]
     probe_cells = local_frame(
         spark,
         [
-            (int(r[0]), [float(x) for x in np.asarray(r[1], dtype=np.float64)], int(c))
-            for r, cells in zip(p_rows, cell_rank)
+            (int(pid), [float(x) for x in vec], int(c))
+            for pid, vec, cells in zip(probe_ids, pm, cell_rank)
             for c in cells
         ],
         "probe_id long, probe_vec array<double>, cell int",
     )
-
-    cand = corpus_cells.join(F.broadcast(probe_cells), "cell")
-    if not include_self:
-        cand = cand.filter(F.col("probe_id") != F.col(id_col))
 
     def score(batches):
         import pandas as pd
@@ -222,21 +286,10 @@ def ivf_topk(
                 }
             )
 
-    scored = cand.mapInPandas(score, "probe_id long, neighbor_id long, cosine double")
-    w = Window.partitionBy("probe_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("probe_id", "neighbor_id", "cosine", "rank")
+    scored = corpus_cells.join(F.broadcast(probe_cells), "cell").mapInPandas(
+        score, _SCORED_SCHEMA
     )
-
-
-#: Integer grid for embedding quantization: ``floor(x * VEC_QUANT + 0.5)``.
-#: With |x| ≲ 8 and dim ≤ 512, every dot-product term and partial sum is an
-#: integer < 2^53, so float accumulation is EXACT in any order — numpy SIMD,
-#: a SQL fold, and DuckDB's list_dot_product agree bit-for-bit. 2^17 keeps
-#: ~5 significant decimal digits of each component.
-VEC_QUANT = float(1 << 17)
+    return _rank(scored, k, "cosine", include_self)
 
 
 def _hyperplane_table(dim: int, bits: int, seed: int):
@@ -357,70 +410,35 @@ def lsh_topk(
     or ``tables`` up for recall, the reverse for cost. Candidate volume
     scales ~ tables * n / 2^bits per probe, never n².
 
-    One mapInPandas pass does everything per Arrow batch: sign-matmul
-    bucketing (buckets identical to :func:`hyperplane_bucket_col`, so a
-    corpus pre-bucketed at write time can skip straight to the match),
-    bucket-equality match against the broadcast probe buckets, and
-    exact cosine scoring of the surviving pairs — each (probe,
-    neighbor) pair is emitted at most once, so the only shuffle is the
-    final per-probe rank over ~tables·n/2^bits candidate rows.
+    One pass of the shared grid-cosine kernel does everything per Arrow
+    batch: sign-matmul bucketing (buckets identical to
+    :func:`hyperplane_bucket_col`, so a corpus pre-bucketed at write
+    time can skip straight to the match), bucket-equality match against
+    the probe buckets, and exact cosine scores of the surviving pairs —
+    each (probe, neighbor) pair is emitted at most once, so the only
+    shuffle is the final per-probe rank over ~tables·n/2^bits rows.
     """
     import numpy as np
 
-    spark = corpus.sparkSession
+    probe = _probe_matrix(probes, id_col, vec_col)
+    if probe is None:
+        return local_frame(corpus.sparkSession, [], _TOPK_SCHEMA["cosine"])
     H = np.stack([_hyperplane_table(dim, bits, seed + t) for t in range(tables)])
     bit_weights = (1 << np.arange(bits)).astype(np.int64)
 
-    p_rows = _collect_probes(probes, id_col, vec_col)
-    if not p_rows:
-        return _empty_topk(spark)
-    probe_ids = np.array([r[0] for r in p_rows], dtype=np.int64)
-    pm = np.stack([np.asarray(r[1], dtype=np.float64) for r in p_rows])
-    # VEC_QUANT integer grid: projections, dots and norms below are all
-    # exact integer sums -> bucket bits and cosines are bit-identical
-    # across numpy, the hyperplane_bucket_col fold, and SQL oracles
-    # regardless of accumulation order.
-    pq = np.floor(pm * VEC_QUANT + 0.5)
-    pnorm2 = np.einsum("ij,ij->i", pq, pq)
-    # (tables, n_probes) bucket ids per probe
-    B_p = np.stack([((pq @ H[t].T) > 0) @ bit_weights for t in range(tables)])
-    bc = spark.sparkContext.broadcast((H, probe_ids, pq, pnorm2, B_p))
+    def buckets(vq):
+        # (tables, n) bucket ids; on the VEC_QUANT grid every projection
+        # is an exact integer sum, so the sign bits match the SQL fold
+        return np.stack([((vq @ H[t].T) > 0) @ bit_weights for t in range(tables)])
 
-    def kernel(batches):
-        import pandas as pd
+    b_p = buckets(_grid(probe[1]))
 
-        Ht, ids_p, mat_pq, pn2, buckets_p = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            nid = pdf[id_col].to_numpy(dtype=np.int64)
-            V = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            Vq = np.floor(V * VEC_QUANT + 0.5)
-            B_c = np.stack(
-                [((Vq @ Ht[t].T) > 0) @ bit_weights for t in range(tables)]
-            )  # (tables, n_batch)
-            match = (B_c[:, :, None] == buckets_p[:, None, :]).any(axis=0)
-            match &= nid[:, None] != ids_p[None, :]
-            ii, jj = np.nonzero(match)
-            vn2 = np.einsum("ij,ij->i", Vq, Vq)
-            yield pd.DataFrame(
-                {
-                    "probe_id": ids_p[jj],
-                    "neighbor_id": nid[ii],
-                    "cosine": np.einsum("ij,ij->i", Vq[ii], mat_pq[jj])
-                    / np.sqrt(vn2[ii] * pn2[jj]),
-                }
-            )
+    def pick(vq, cos):
+        return np.nonzero((buckets(vq)[:, :, None] == b_p[:, None, :]).any(axis=0))
 
-    scored = corpus.select(id_col, vec_col).mapInPandas(
-        kernel, "probe_id long, neighbor_id long, cosine double"
-    )
-    w = Window.partitionBy("probe_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("probe_id", "neighbor_id", "cosine", "rank")
-    )
+    scored = _grid_cosine(corpus, *probe, id_col, vec_col, pick)
+    return _rank(scored, k, "cosine", include_self=False)
+
 
 def kmeans_step(
     df: DataFrame,
@@ -469,24 +487,28 @@ def _seed_centroids(df: DataFrame, k: int, vec_col: str, id_col: str, seed: int)
     corpus vectors with the smallest md5('{id}:{seed}')."""
     import numpy as np
 
-    cent_rows = (
-        df.select(F.col(id_col), F.col(vec_col))
-        .withColumn(
-            "__h__",
-            F.md5(F.concat_ws(":", F.col(id_col).cast("string"), F.lit(str(seed)))),
-        )
-        .orderBy("__h__", id_col)
-        .limit(k)
-        .collect()
-    )
+    cent_rows = _md5_sample(df, k, vec_col, id_col, seed)
     cent_rows.sort(key=lambda r: r[0])  # cluster ids ascending for tie rule
     cids = np.array([r[0] for r in cent_rows], dtype=np.int64)
-    cq = np.floor(
+    cq = _grid(
         np.stack([np.asarray(r[1], dtype=np.float64) for r in cent_rows])
-        * VEC_QUANT
-        + 0.5
     ).astype(np.int64)
     return cids, cq
+
+
+def _nearest_cell(vq, cids, cq):
+    """Per grid row of ``vq``, the id of the nearest ``cq`` centroid by
+    exact grid cosine. cids must be ascending so numpy's first-match
+    argmax implements the smallest-id tie rule; a zero vector gets
+    cosine 0 everywhere and falls to that rule."""
+    import numpy as np
+
+    vq = vq.astype(np.int64)
+    c_norm = np.sqrt(np.einsum("ij,ij->i", cq, cq).astype(np.float64))
+    v_norm = np.sqrt(np.einsum("ij,ij->i", vq, vq).astype(np.float64))
+    dots = (vq @ cq.T).astype(np.float64)
+    denom = np.where(v_norm > 0, v_norm, 1.0)[:, None] * c_norm[None, :]
+    return cids[(dots / denom).argmax(axis=1)]
 
 
 def _assign_to_grid(
@@ -494,24 +516,16 @@ def _assign_to_grid(
 ) -> DataFrame:
     """Nearest-centroid assignment by cosine against an integer-grid
     centroid matrix riding the task closure (no shuffle of vectors).
-    cids must be ascending so numpy's first-match argmax implements the
-    smallest-cluster-id tie rule."""
+    Output: the id and vector columns plus ``cluster``."""
     import numpy as np
-
-    c_norm = np.sqrt(np.einsum("ij,ij->i", cq, cq).astype(np.float64))
 
     def assign(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
             m = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            vq = np.floor(m * VEC_QUANT + 0.5).astype(np.int64)
-            v_norm = np.sqrt(np.einsum("ij,ij->i", vq, vq).astype(np.float64))
-            dots = (vq @ cq.T).astype(np.float64)
-            denom = np.where(v_norm > 0, v_norm, 1.0)[:, None] * c_norm[None, :]
-            cos = dots / denom
             out = pdf[[id_col, vec_col]].copy()
-            out["cluster"] = cids[cos.argmax(axis=1)]
+            out["cluster"] = _nearest_cell(_grid(m), cids, cq)
             yield out
 
     return df.select(id_col, vec_col).mapInPandas(
@@ -693,21 +707,27 @@ def centroid_separation(
     )
 
 
-def _pq_encode(
-    corpus: DataFrame,
-    Cs: list,
-    cids_s: list,
-    d0: int,
-    vec_col: str,
-    id_col: str,
-) -> DataFrame:
-    """PQ code assignment — ONE Arrow pass, per-subspace codebooks in
-    the task closure.  ``Cs[s]`` is the (k_s, d0) integer-grid codeword
-    matrix of subspace ``s``; ``cids_s[s]`` its ascending code ids
-    (argmin-first = smallest-id tie rule).  Output: (vid, s, code)."""
-    import numpy as np
+def _slice_book(ids, q, m: int):
+    """A PQ codebook sliced per subspace: ``(Cs, cids_s)`` where
+    ``Cs[s]`` is the (k, dim/m) float64 integer-grid codeword matrix of
+    subspace ``s`` and ``cids_s[s]`` its ascending code ids."""
+    dim = q.shape[1]
+    if dim % m != 0:
+        raise ValueError(f"dim {dim} not divisible by m={m} subspaces")
+    d0 = dim // m
+    return [q[:, s * d0 : (s + 1) * d0].astype("float64") for s in range(m)], [ids] * m
 
-    m = len(Cs)
+
+def _encode(
+    df: DataFrame, Cs: list, cids_s: list, vec_col: str, id_col: str, cells=None
+) -> DataFrame:
+    """PQ code assignment — ONE Arrow pass, books in the task closure.
+    ``Cs[s]``/``cids_s[s]`` are subspace ``s``'s codewords and their
+    ascending ids (argmin-first = smallest-id tie rule). Output:
+    (vid, s, code); given the coarse book ``cells = (cell_ids,
+    cell_q)``, each row also carries its vector's cell — the ANN index
+    rows, :data:`_INDEX_SCHEMA`."""
+    import numpy as np
 
     def encode(batches):
         import pandas as pd
@@ -715,31 +735,30 @@ def _pq_encode(
         for pdf in batches:
             if not len(pdf):
                 continue
-            M = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            Q = np.floor(M * VEC_QUANT + 0.5)
+            Q = _grid(np.stack(pdf[vec_col].to_numpy()).astype(np.float64))
+            vid = pdf[id_col].to_numpy()
             frames = []
-            for s in range(m):
+            for s, C in enumerate(Cs):
+                d0 = C.shape[1]
                 A = Q[:, s * d0 : (s + 1) * d0]
                 # ||a-c||^2 = a.a - 2 a.c + c.c — exact integers in f64
                 d = (
                     np.einsum("ij,ij->i", A, A)[:, None]
-                    - 2.0 * (A @ Cs[s].T)
-                    + np.einsum("ij,ij->i", Cs[s], Cs[s])[None, :]
+                    - 2.0 * (A @ C.T)
+                    + np.einsum("ij,ij->i", C, C)[None, :]
                 )
                 frames.append(
                     pd.DataFrame(
-                        {
-                            "vid": pdf[id_col].to_numpy(),
-                            "s": s,
-                            "code": cids_s[s][d.argmin(axis=1)],
-                        }
+                        {"vid": vid, "s": s, "code": cids_s[s][d.argmin(axis=1)]}
                     )
                 )
-            yield pd.concat(frames, ignore_index=True)
+            out = pd.concat(frames, ignore_index=True)
+            if cells is not None:
+                out["cell"] = np.tile(_nearest_cell(Q, *cells), len(Cs))
+            yield out
 
-    return corpus.select(id_col, vec_col).mapInPandas(
-        encode, "vid long, s int, code long"
-    )
+    schema = "vid long, s int, code long" if cells is None else _INDEX_SCHEMA
+    return df.select(id_col, vec_col).mapInPandas(encode, schema)
 
 
 def pq_train(
@@ -757,7 +776,7 @@ def pq_train(
     prescribes, not just the sampled-codebook shortcut
     :func:`pq_topk` defaults to.
 
-    Each iteration is :func:`_pq_encode`'s single Arrow assignment
+    Each iteration is :func:`_encode`'s single Arrow assignment
     pass (codebooks ride the closure — vectors never shuffle) followed
     by ONE (subspace, code, pos) aggregation whose state is
     m·k·d0 cells, not rows.  Like :func:`kmeans_train`, the driver
@@ -776,13 +795,10 @@ def pq_train(
 
     if iterations < 1:
         raise ValueError(f"iterations must be >= 1, got {iterations}")
-    cids, cq = _seed_centroids(corpus, n_codes, vec_col, id_col, seed)
-    dim = cq.shape[1]
-    if dim % m != 0:
-        raise ValueError(f"dim {dim} not divisible by m={m} subspaces")
-    d0 = dim // m
-    Cs = [cq[:, s * d0 : (s + 1) * d0].astype(np.float64) for s in range(m)]
-    cids_s = [cids for _ in range(m)]
+    Cs, cids_s = _slice_book(
+        *_seed_centroids(corpus, n_codes, vec_col, id_col, seed), m
+    )
+    d0 = Cs[0].shape[1]
 
     sub_expl = corpus.select(
         F.col(id_col).alias("vid"),
@@ -796,7 +812,7 @@ def pq_train(
         .alias("vq"),
     )
     for _ in range(iterations):
-        codes = _pq_encode(corpus, Cs, cids_s, d0, vec_col, id_col)
+        codes = _encode(corpus, Cs, cids_s, vec_col, id_col)
         cent = (
             sub_expl.join(codes, ["vid", "s"])
             .groupBy("s", "code", "pos")
@@ -830,7 +846,7 @@ def pq_train(
             codes_here = sorted(by_sub.get(s, {}))
             cids_s.append(np.array(codes_here, dtype=np.int64))
             Cs.append(
-                np.floor(
+                _grid(
                     np.array(
                         [
                             [by_sub[s][c][p + 1] for p in range(d0)]
@@ -838,14 +854,43 @@ def pq_train(
                         ],
                         dtype=np.float64,
                     )
-                    * VEC_QUANT
-                    + 0.5
                 )
             )
     # same convention as kmeans_train: the final update was already
     # materialized for the codebook pull — return THOSE rows rather
     # than re-running the assignment pass
     return local_frame(corpus.sparkSession, rows, cent.schema)
+
+
+def _adc_lut(spark, probe_ids, pm, Cs: list, cids_s: list) -> DataFrame:
+    """The ADC lookup table (probe_id, s, code, d): every probe
+    subvector's exact squared grid distance to every codeword of its
+    subspace — probes × m × n_codes rows, constant in corpus size."""
+    import numpy as np
+
+    rows = []
+    for pid, v in zip(probe_ids, _grid(pm)):
+        for s, C in enumerate(Cs):
+            d0 = C.shape[1]
+            a = v[s * d0 : (s + 1) * d0]
+            d = np.dot(a, a) - 2.0 * (C @ a) + np.einsum("ij,ij->i", C, C)
+            rows.extend((int(pid), s, int(c), int(x)) for c, x in zip(cids_s[s], d))
+    return local_frame(spark, rows, "probe_id long, s int, code long, d long")
+
+
+def _adc_topk(
+    cand: DataFrame, lut: DataFrame, on: list, k: int, include_self: bool
+) -> DataFrame:
+    """The PQ scoring stage: candidates' (vid, s, code) rows join the
+    broadcast lookup table on ``on``, one (probe, vid) aggregation sums
+    the m subspace distances into the exact ``adc_dist``, and
+    :func:`_rank` ranks it ascending."""
+    adc = (
+        cand.join(F.broadcast(lut), on)
+        .groupBy("probe_id", F.col("vid").alias("neighbor_id"))
+        .agg(F.sum("d").cast("bigint").alias("adc_dist"))
+    )
+    return _rank(adc, k, "adc_dist", include_self)
 
 
 def pq_topk(
@@ -886,61 +931,55 @@ def pq_topk(
     (probe, vec) aggregation of m-row groups; ranking windows over
     probe partitions.  Output: (probe_id, neighbor_id, adc_dist, rank).
     """
-    import numpy as np
-
-    from pyspark.sql import Window as W
-
     spark = corpus.sparkSession
-    cids, cq = _seed_centroids(corpus, n_codes, vec_col, id_col, seed)
-    dim = cq.shape[1]
-    if dim % m != 0:
-        raise ValueError(f"dim {dim} not divisible by m={m} subspaces")
-    d0 = dim // m
-    # per-subspace codeword matrices on the integer grid
-    Cs = [cq[:, s * d0 : (s + 1) * d0].astype(np.float64) for s in range(m)]
-    cids_s = [cids for _ in range(m)]
-    codes = _pq_encode(corpus, Cs, cids_s, d0, vec_col, id_col)
-    C = np.stack(Cs)
-
-    p_rows = _collect_probes(probes, id_col, vec_col)
-    if not p_rows:
-        return local_frame(
-            spark, [], "probe_id long, neighbor_id long, adc_dist long, rank int"
-        )
-    lut_rows = []
-    for r in p_rows:
-        pq_vec = np.floor(
-            np.asarray(r[1], dtype=np.float64) * VEC_QUANT + 0.5
-        )
-        for s in range(m):
-            a = pq_vec[s * d0 : (s + 1) * d0]
-            d = (
-                np.dot(a, a)
-                - 2.0 * (C[s] @ a)
-                + np.einsum("ij,ij->i", C[s], C[s])
-            )
-            for j in range(n_codes):
-                lut_rows.append((int(r[0]), s, int(cids[j]), int(d[j])))
-    lut = local_frame(
-        spark, lut_rows, "probe_id long, s int, code long, d long"
+    Cs, cids_s = _slice_book(
+        *_seed_centroids(corpus, n_codes, vec_col, id_col, seed), m
     )
+    codes = _encode(corpus, Cs, cids_s, vec_col, id_col)
+    probe = _probe_matrix(probes, id_col, vec_col)
+    if probe is None:
+        return local_frame(spark, [], _TOPK_SCHEMA["adc_dist"])
+    lut = _adc_lut(spark, *probe, Cs, cids_s)
+    return _adc_topk(codes, lut, ["s", "code"], k, include_self)
 
-    adc = (
-        codes.join(F.broadcast(lut), ["s", "code"])
-        .groupBy("probe_id", F.col("vid").alias("neighbor_id"))
-        .agg(F.sum("d").cast("bigint").alias("adc_dist"))
+
+class _Books(NamedTuple):
+    """Frozen IVF-PQ books on the :data:`VEC_QUANT` grid: the coarse
+    cell centroids, the full-dim PQ codewords, and the codewords sliced
+    per subspace (:func:`_slice_book`)."""
+
+    cell_ids: object
+    cell_q: object
+    code_ids: object
+    code_q: object
+    Cs: list
+    cids_s: list
+
+
+def _books(cell: tuple, code: tuple, m: int) -> _Books:
+    return _Books(*cell, *code, *_slice_book(*code, m))
+
+
+def _draw_books(
+    corpus: DataFrame, n_cells: int, n_codes: int, m: int,
+    vec_col: str, id_col: str, seed: int,
+) -> _Books:
+    """The md5-sampled books of ``corpus``: cells from ``seed``,
+    codewords from ``seed + 1`` (decoupled samples). The two draws are
+    independent jobs, overlapped from driver threads (guide §2.6)."""
+    cell, code = run_jobs(
+        lambda: _seed_centroids(corpus, n_cells, vec_col, id_col, seed),
+        lambda: _seed_centroids(corpus, n_codes, vec_col, id_col, seed + 1),
     )
-    if not include_self:
-        adc = adc.filter(F.col("probe_id") != F.col("neighbor_id"))
-    w = W.partitionBy("probe_id").orderBy("adc_dist", "neighbor_id")
-    return (
-        adc.select(
-            "probe_id",
-            "neighbor_id",
-            "adc_dist",
-            F.row_number().over(w).alias("rank"),
-        )
-        .filter(F.col("rank") <= k)
+    return _books(cell, code, m)
+
+
+def _index_rows(df: DataFrame, books: _Books, vec_col: str, id_col: str) -> DataFrame:
+    """The ANN index rows (vid, s, code, cell) of ``df``'s vectors
+    against ``books`` — one Arrow pass, vectors never shuffle."""
+    return _encode(
+        df, books.Cs, books.cids_s, vec_col, id_col,
+        cells=(books.cell_ids, books.cell_q),
     )
 
 
@@ -962,9 +1001,9 @@ def ivf_pq_topk(
     ``n_cells`` Voronoi cells, and within the probed cells candidates
     score by PQ Asymmetric Distance over ``m`` code ids — the query
     touches ``nprobe/n_cells`` of a corpus that is ALSO compressed
-    dim-floats → m codes.  At 100 TB: write the codes table
-    partitioned by cell once; a query reads a few partitions of a
-    table ~100× smaller than the vectors.
+    dim-floats → m codes.  At 100 TB: write the index partitioned by
+    cell once (:func:`ann_index_build`); a query reads a few partitions
+    of a table ~100× smaller than the vectors.
 
     Determinism end to end: cells assign by grid-cosine argmax against
     md5-sampled centroids (exact integers — :func:`kmeans_step`'s
@@ -974,48 +1013,24 @@ def ivf_pq_topk(
     break on the neighbor id.  The DuckDB oracle reproduces the whole
     index bit-for-bit.
 
-    Scale shape: ONE Arrow pass assigns cells, ONE encodes PQ codes
-    (both with closure-resident codebooks — vectors never shuffle);
-    the probe→cell table (probes × nprobe) and the ADC lookup
-    (probes × m × n_codes) broadcast; candidate generation is a
-    broadcast join on the cell id, scoring a broadcast join + m-row
-    aggregate, ranking a per-probe window.
+    Scale shape: ONE Arrow pass assigns cells and encodes PQ codes
+    (closure-resident books — vectors never shuffle); the probe→cell
+    table (probes × nprobe) and the ADC lookup (probes × m × n_codes)
+    broadcast; candidate generation is a broadcast join on the cell id,
+    scoring a broadcast join + m-row aggregate, ranking a per-probe
+    window.
     """
-    import numpy as np
-
-    from pyspark.sql import Window as W
-
-    spark = corpus.sparkSession
-    cell_ids, cell_q = _seed_centroids(corpus, n_cells, vec_col, id_col, seed)
-    dim = cell_q.shape[1]
-    if dim % m != 0:
-        raise ValueError(f"dim {dim} not divisible by m={m} subspaces")
-    d0 = dim // m
-    code_ids, code_q = _seed_centroids(
-        corpus, n_codes, vec_col, id_col, seed + 1
-    )
-    Cs = [code_q[:, s * d0 : (s + 1) * d0].astype(np.float64) for s in range(m)]
-    cids_s = [code_ids for _ in range(m)]
-
-    cells = _assign_to_grid(corpus, cell_ids, cell_q, vec_col, id_col).select(
-        F.col(id_col).alias("vid"), F.col("cluster").alias("cell")
-    )
-    codes = _pq_encode(corpus, Cs, cids_s, d0, vec_col, id_col)
+    books = _draw_books(corpus, n_cells, n_codes, m, vec_col, id_col, seed)
     return _ivf_pq_rank(
-        spark, cells, codes, cell_ids, cell_q, code_ids, Cs, probes,
-        k=k, nprobe=nprobe, vec_col=vec_col, id_col=id_col,
-        include_self=include_self,
+        corpus.sparkSession, _index_rows(corpus, books, vec_col, id_col),
+        books, probes, k, nprobe, vec_col, id_col, include_self,
     )
 
 
 def _ivf_pq_rank(
     spark,
-    cells: DataFrame,
-    codes: DataFrame,
-    cell_ids,
-    cell_q,
-    code_ids,
-    Cs: list,
+    idx: DataFrame,
+    books: _Books,
     probes: DataFrame,
     k: int,
     nprobe: int,
@@ -1023,62 +1038,36 @@ def _ivf_pq_rank(
     id_col: str,
     include_self: bool,
 ) -> DataFrame:
-    """The probe side of IVF-PQ, against ALREADY-materialized cell
-    assignments + PQ codes + codebooks — shared verbatim by
-    :func:`ivf_pq_topk` (in-memory, corpus-derived) and
-    :func:`ivf_pq_from_index` (read from the standing on-disk
-    artifact), so append-then-query vs build-then-query can differ
-    ONLY in how cells/codes/books were produced."""
+    """The probe side of IVF-PQ over index rows (vid, s, code, cell) —
+    shared by :func:`ivf_pq_topk` (in memory), :func:`ivf_pq_from_index`
+    (the stored artifact) and :func:`ivf_pq_from_state` (the streaming
+    state), so the three can differ ONLY in how the rows were produced.
+
+    Each probe's ``nprobe`` nearest cells (exact grid cosine, ties to
+    the smaller cell id) are known driver-side, so their union becomes
+    an ``isin`` filter on ``idx`` — a PARTITION filter on the stored
+    artifact's scan: only nprobe/n_cells of its directories are read
+    before any join runs. A broadcast probe→cell join then routes each
+    candidate to the probes that chose its cell."""
     import numpy as np
 
-    from pyspark.sql import Window as W
-
-    m = len(Cs)
-    d0 = Cs[0].shape[1]
-    n_codes = len(code_ids)
-    p_rows = _collect_probes(probes, id_col, vec_col)
-    if not p_rows:
-        return local_frame(
-            spark, [], "probe_id long, neighbor_id long, adc_dist long, rank int"
-        )
-    # probe -> nprobe nearest cells by the same exact grid cosine
+    probe = _probe_matrix(probes, id_col, vec_col)
+    if probe is None:
+        return local_frame(spark, [], _TOPK_SCHEMA["adc_dist"])
+    probe_ids, pm = probe
+    cell_ids, cell_q = books.cell_ids, books.cell_q
     cell_norm = np.sqrt(np.einsum("ij,ij->i", cell_q, cell_q).astype(np.float64))
-    pc_rows, lut_rows = [], []
-    for r in p_rows:
-        pq_vec = np.floor(np.asarray(r[1], dtype=np.float64) * VEC_QUANT + 0.5)
-        p_norm = np.sqrt(np.dot(pq_vec, pq_vec))
-        denom = (p_norm if p_norm > 0 else 1.0) * cell_norm
-        cos = (cell_q @ pq_vec) / denom
-        # sort by (-cos, cell_id): argsort on structured order
+    pc_rows = []
+    for pid, v in zip(probe_ids, _grid(pm)):
+        p_norm = np.sqrt(np.dot(v, v))
+        cos = (cell_q @ v) / ((p_norm if p_norm > 0 else 1.0) * cell_norm)
         order = sorted(range(len(cell_ids)), key=lambda j: (-cos[j], cell_ids[j]))
-        for j in order[:nprobe]:
-            pc_rows.append((int(r[0]), int(cell_ids[j])))
-        for s in range(m):
-            a = pq_vec[s * d0 : (s + 1) * d0]
-            d = np.dot(a, a) - 2.0 * (Cs[s] @ a) + np.einsum(
-                "ij,ij->i", Cs[s], Cs[s]
-            )
-            for j in range(n_codes):
-                lut_rows.append((int(r[0]), s, int(code_ids[j]), int(d[j])))
-    probe_cells = local_frame(spark, pc_rows, "probe_id long, cell long")
-    lut = local_frame(spark, lut_rows, "probe_id long, s int, code long, d long")
-
-    cand = cells.join(F.broadcast(probe_cells), "cell").select("probe_id", "vid")
-    adc = (
-        cand.join(codes, "vid")
-        .join(F.broadcast(lut), ["probe_id", "s", "code"])
-        .groupBy("probe_id", F.col("vid").alias("neighbor_id"))
-        .agg(F.sum("d").cast("bigint").alias("adc_dist"))
+        pc_rows.extend((int(pid), int(cell_ids[j])) for j in order[:nprobe])
+    cand = idx.filter(F.col("cell").isin(sorted({c for _, c in pc_rows}))).join(
+        F.broadcast(local_frame(spark, pc_rows, "probe_id long, cell long")), "cell"
     )
-    if not include_self:
-        adc = adc.filter(F.col("probe_id") != F.col("neighbor_id"))
-    w = W.partitionBy("probe_id").orderBy("adc_dist", "neighbor_id")
-    return adc.select(
-        "probe_id",
-        "neighbor_id",
-        "adc_dist",
-        F.row_number().over(w).alias("rank"),
-    ).filter(F.col("rank") <= k)
+    lut = _adc_lut(spark, probe_ids, pm, books.Cs, books.cids_s)
+    return _adc_topk(cand, lut, ["probe_id", "s", "code"], k, include_self)
 
 
 def _ann_books_to_rows(ids, q) -> list:
@@ -1107,6 +1096,24 @@ def _ann_rows_to_book(rows):
     return ids, q
 
 
+def _read_ann_books(spark, path: str, m: int) -> _Books:
+    """Load the frozen books — two bounded, codebook-sized collects,
+    overlapped (guide §2.6: independent driver-side jobs)."""
+    cell_rows, code_rows = run_jobs(
+        lambda: spark.read.schema(_BOOK_SCHEMA).parquet(f"{path}/cellbook").collect(),
+        lambda: spark.read.schema(_BOOK_SCHEMA).parquet(f"{path}/codebook").collect(),
+    )
+    return _books(_ann_rows_to_book(cell_rows), _ann_rows_to_book(code_rows), m)
+
+
+def _tombstones(spark, path: str) -> DataFrame | None:
+    """The artifact's tombstone table, or None when it has none."""
+    tomb_path = f"{path}/tombstones"
+    if not commit.exists(spark, tomb_path):
+        return None
+    return spark.read.schema(_TOMB_SCHEMA).parquet(tomb_path)
+
+
 def ann_index_build(
     corpus: DataFrame,
     path: str,
@@ -1118,77 +1125,39 @@ def ann_index_build(
     seed: int = 42,
 ) -> None:
     """Write the STANDING IVF-PQ artifact — the embedding analog of
-    :func:`build_text_index`: four parquet tables under ``path``:
+    :func:`build_text_index`: three parquet tables under ``path``:
 
-    - ``cellbook`` (cell, pos, val_q): the IVF coarse centroids on the
+    - ``cellbook`` (cid, pos, val_q): the IVF coarse centroids on the
       integer grid — FROZEN at build time;
-    - ``codebook`` (code, pos, val_q): the full-dim PQ codewords
+    - ``codebook`` (cid, pos, val_q): the full-dim PQ codewords
       (subspace slices derive from ``m`` at read time) — FROZEN;
-    - ``cells`` (vid, cell): per-vector coarse assignment;
-    - ``codes`` (vid, s, code): per-vector PQ codes.
+    - ``index`` (vid, s, code) PARTITIONED BY ``cell``: each vector's
+      ``m`` PQ codes in its cell's directory — FAISS's inverted-list
+      files as hive partitioning, so a query reads only its probed
+      cells' directories (:func:`ivf_pq_from_index`).
 
     Codebooks are the md5-sampled draws of :func:`ivf_pq_topk` over
     THIS build's corpus; later appends assign against them without
     retraining (:func:`ann_index_append`), exactly how a production
     FAISS-style index absorbs new vectors between periodic retrains.
-    At 100 TB the cells/codes tables are the index (~100× smaller
-    than the vectors) and a build is two Arrow passes over the corpus
-    — the books are driver-side only at codebook size.
+    At 100 TB the index table is ~100× smaller than the vectors and a
+    build is one Arrow pass over the corpus — the books are
+    driver-side only at codebook size.
     """
-    import numpy as np
-
-    from ..scale import run_jobs
-
     spark = corpus.sparkSession
-    # the two book draws and the four table writes are independent
-    # jobs — overlapped from driver threads (guide §2.6) so the small
-    # jobs' tails back-fill each other instead of running in file
-    (cell_ids, cell_q), (code_ids, code_q) = run_jobs(
-        lambda: _seed_centroids(corpus, n_cells, vec_col, id_col, seed),
-        lambda: _seed_centroids(corpus, n_codes, vec_col, id_col, seed + 1),
-    )
-    dim = cell_q.shape[1]
-    if dim % m != 0:
-        raise ValueError(f"dim {dim} not divisible by m={m} subspaces")
-    d0 = dim // m
-    Cs = [code_q[:, s * d0 : (s + 1) * d0].astype(np.float64) for s in range(m)]
-    cids_s = [code_ids for _ in range(m)]
-    book_schema = "cid long, pos int, val_q long"
+    books = _draw_books(corpus, n_cells, n_codes, m, vec_col, id_col, seed)
+    # the three table writes are independent jobs — overlapped; a book
+    # is codebook-sized, so it lands as one file (one read per query)
     run_jobs(
         lambda: local_frame(
-            spark, _ann_books_to_rows(cell_ids, cell_q), book_schema
-        ).write.mode("overwrite").parquet(f"{path}/cellbook"),
+            spark, _ann_books_to_rows(books.cell_ids, books.cell_q), _BOOK_SCHEMA
+        ).coalesce(1).write.mode("overwrite").parquet(f"{path}/cellbook"),
         lambda: local_frame(
-            spark, _ann_books_to_rows(code_ids, code_q), book_schema
-        ).write.mode("overwrite").parquet(f"{path}/codebook"),
-        lambda: _assign_to_grid(corpus, cell_ids, cell_q, vec_col, id_col)
-        .select(F.col(id_col).alias("vid"), F.col("cluster").alias("cell"))
-        .write.mode("overwrite").parquet(f"{path}/cells"),
-        lambda: _pq_encode(corpus, Cs, cids_s, d0, vec_col, id_col)
-        .write.mode("overwrite").parquet(f"{path}/codes"),
+            spark, _ann_books_to_rows(books.code_ids, books.code_q), _BOOK_SCHEMA
+        ).coalesce(1).write.mode("overwrite").parquet(f"{path}/codebook"),
+        lambda: _index_rows(corpus, books, vec_col, id_col)
+        .write.mode("overwrite").partitionBy("cell").parquet(f"{path}/index"),
     )
-
-
-def _read_ann_books(spark, path: str, m: int):
-    """Load the frozen codebooks (a bounded, codebook-sized collect)
-    and slice the PQ book per subspace — the two collects overlap
-    (guide §2.6: independent driver-side jobs)."""
-    import numpy as np
-
-    from ..scale import run_jobs
-
-    cell_rows, code_rows = run_jobs(
-        lambda: spark.read.parquet(f"{path}/cellbook").collect(),
-        lambda: spark.read.parquet(f"{path}/codebook").collect(),
-    )
-    cell_ids, cell_q = _ann_rows_to_book([tuple(r) for r in cell_rows])
-    code_ids, code_q = _ann_rows_to_book([tuple(r) for r in code_rows])
-    dim = cell_q.shape[1]
-    if dim % m != 0:
-        raise ValueError(f"dim {dim} not divisible by m={m} subspaces")
-    d0 = dim // m
-    Cs = [code_q[:, s * d0 : (s + 1) * d0].astype(np.float64) for s in range(m)]
-    return cell_ids, cell_q, code_ids, Cs, d0
 
 
 def ann_index_append(
@@ -1199,32 +1168,26 @@ def ann_index_append(
     m: int = 4,
 ) -> None:
     """Absorb NEW embeddings into the standing IVF-PQ artifact against
-    the FROZEN codebooks — cell assignment + PQ codes for the DELTA
-    only (two Arrow passes over just the new vectors, appended to the
-    cells/codes tables); the base corpus is never rescanned and the
-    books never move, so append-then-query == build-from-scratch-with-
-    the-same-books-then-query EXACTLY (pinned by the
-    ``ann_append_query`` oracle and pytest).
+    the FROZEN codebooks: one Arrow pass assigns + encodes just the
+    delta, appended with the same ``partitionBy`` — each new row lands
+    in its cell's directory, the base directories are never rewritten,
+    the base corpus is never rescanned and the books never move, so
+    append-then-query == build-from-scratch-with-the-same-books-then-
+    query EXACTLY (pinned by the ``ann_append_query`` oracle and
+    pytest).
 
     The trade a frozen quantizer makes is staleness, not correctness:
     ADC distances stay exact against the stored books, but if the new
     vectors' distribution drifts off the build-time sample the cell
     balance and recall degrade — audit with the recall machinery
-    (``similarity_pq_recall``) and retrain/rebuild when it slips.
+    (``ann_recall_after_append``) and retrain when it slips
+    (:func:`ann_index_retrain`).
     Contract: ids in the delta must be NEW (an upstream dedup gate —
     re-appending an id would double its index rows)."""
-    from ..scale import run_jobs
-
-    spark = delta.sparkSession
-    cell_ids, cell_q, code_ids, Cs, d0 = _read_ann_books(spark, path, m)
-    cids_s = [code_ids for _ in range(len(Cs))]
-    run_jobs(
-        lambda: _assign_to_grid(delta, cell_ids, cell_q, vec_col, id_col)
-        .select(F.col(id_col).alias("vid"), F.col("cluster").alias("cell"))
-        .write.mode("append").parquet(f"{path}/cells"),
-        lambda: _pq_encode(delta, Cs, cids_s, d0, vec_col, id_col)
-        .write.mode("append").parquet(f"{path}/codes"),
-    )
+    books = _read_ann_books(delta.sparkSession, path, m)
+    _index_rows(delta, books, vec_col, id_col).write.mode("append").partitionBy(
+        "cell"
+    ).parquet(f"{path}/index")
 
 
 def ann_index_delete(doc_ids: DataFrame, path: str) -> None:
@@ -1233,54 +1196,43 @@ def ann_index_delete(doc_ids: DataFrame, path: str) -> None:
     doomed ids append to ``{path}/tombstones`` (one bigint column) and
     :func:`ivf_pq_from_index` anti-joins them out of the candidate
     stream.  At 100 TB a takedown is therefore an O(deleted ids)
-    append; the cells/codes tables are untouched until
+    append; the index table is untouched until
     :func:`ann_index_compact` folds the tombstones in.  Deleting an
     unknown or already-deleted id is a no-op (the anti-join doesn't
     care); the books never move, so remaining rankings are unchanged
     (pinned: delete-then-query == build-without-the-deleted)."""
-    doc_ids.toDF("vid").distinct().write.mode("append").parquet(
-        f"{path}/tombstones"
-    )
+    doc_ids.toDF("vid").select(F.col("vid").cast("long")).distinct().write.mode(
+        "append"
+    ).parquet(f"{path}/tombstones")
 
 
 def ann_index_compact(spark, path: str) -> None:
-    """Fold the tombstones into the cells/codes tables: rewrite both
-    minus the deleted vids and clear the tombstone table.  The
-    maintenance OPTIMIZE for a delete-heavy index — run it when the
-    tombstone fraction makes the query-time anti-join's broadcast
-    side noticeable; until then deletes stay O(1).
+    """Fold the tombstones into the index table: rewrite it minus the
+    deleted vids and clear the tombstone table.  The maintenance
+    OPTIMIZE for a delete-heavy index — run it when the tombstone
+    fraction makes the query-time anti-join's broadcast side
+    noticeable; until then deletes stay O(1).
 
-    Each table rewrite is a :func:`~data__converter_spark.commit.swap`:
-    one data write per table, no staging residue, and a crash at any
-    point leaves a state the entry-time ``commit.recover`` repairs —
-    never a partially-written live table.  The tombstone
-    table is cleared only after BOTH swaps commit; a crash between
-    the cells and codes swaps re-runs to completion on the next call
-    because the surviving tombstones re-fold as a no-op anti-join
-    against the already-compacted table."""
-    tomb_path = f"{path}/tombstones"
-    for t in ("cells", "codes"):
-        commit.recover(spark, f"{path}/{t}")
-    if not commit.exists(spark, tomb_path):
+    The rewrite is one :func:`~data__converter_spark.commit.swap`: one
+    data write, no staging residue, and a crash at any point leaves a
+    state the entry-time ``commit.recover`` repairs — never a
+    partially-written live table.  The tombstone table is cleared only
+    after the swap commits; a crash before the clear re-runs as a
+    no-op anti-join against the already-compacted table."""
+    index_path = f"{path}/index"
+    commit.recover(spark, index_path)
+    tomb = _tombstones(spark, path)
+    if tomb is None:
         return  # nothing to fold
-    from ..scale import run_jobs
-
-    tomb = spark.read.parquet(tomb_path)
-
-    def _fold(t: str):
-        kept = (
-            spark.read.parquet(f"{path}/{t}")
-            .join(F.broadcast(tomb), "vid", "left_anti")
-        )
-        commit.swap(
-            spark, f"{path}/{t}", kept.write.mode("overwrite").parquet
-        )
-
-    # the two folds touch disjoint tables — overlap them (guide §2.6)
-    run_jobs(lambda: _fold("cells"), lambda: _fold("codes"))
-    local_frame(spark, [], "vid bigint").write.mode(
-        "overwrite"
-    ).parquet(tomb_path)
+    kept = spark.read.schema(_INDEX_SCHEMA).parquet(index_path).join(
+        F.broadcast(tomb), "vid", "left_anti"
+    )
+    commit.swap(
+        spark, index_path, kept.write.mode("overwrite").partitionBy("cell").parquet
+    )
+    local_frame(spark, [], _TOMB_SCHEMA).write.mode("overwrite").parquet(
+        f"{path}/tombstones"
+    )
 
 
 def ann_index_retrain(
@@ -1295,19 +1247,14 @@ def ann_index_retrain(
 ) -> None:
     """The RESPONSE to the recall drift alarm
     (``ann_recall_after_append``) — the last step of the standing
-    index lifecycle (VERDICT r11 Next #4): retrain the cell/code
-    books on the CURRENT corpus and migrate the artifact to a new
-    generation atomically.
+    index lifecycle: retrain the cell/code books on the CURRENT corpus
+    and migrate the artifact to a new generation atomically.
 
     PQ codes are lossy, so re-encoding needs the source vectors:
     ``corpus`` is the current vector set (the table the index was
     built and appended from).  Standing tombstones fold in — the
     live set is ``corpus`` minus tombstoned vids, and the new
-    generation carries no tombstone table.  The layout is preserved
-    (flat cells/codes or the cell-partitioned unified table — the
-    partitioned build parallelizes the rewrite per cell directory,
-    and its sampling/encode arithmetic is byte-identical to the flat
-    form, so either layout migrates to itself).
+    generation carries no tombstone table.
 
     The swap is generation-atomic: the whole artifact directory is one
     :func:`~data__converter_spark.commit.swap` — the new index builds
@@ -1315,25 +1262,21 @@ def ann_index_retrain(
     every table is written, and the directory replaces live as one
     unit.  A crash anywhere leaves a state ``commit.recover`` (run at
     entry) repairs to a CONSISTENT artifact — never mixed
-    generations, because the four tables move as one directory.
+    generations, because the tables move as one directory.
     Determinism: same corpus + same seed ⇒ the retrained books equal a
     fresh :func:`ann_index_build` over the live set, so
     migrated-artifact queries == fresh-build queries exactly (the
-    ``ann_retrain_query`` oracle pins this against the flat IVF-PQ
-    SQL verbatim)."""
+    ``ann_retrain_query`` oracle pins this against the IVF-PQ SQL
+    verbatim)."""
     spark = corpus.sparkSession
     commit.recover(spark, path)
     live = corpus
-    if commit.exists(spark, f"{path}/tombstones"):
-        tomb = spark.read.parquet(f"{path}/tombstones")
+    tomb = _tombstones(spark, path)
+    if tomb is not None:
         live = corpus.join(
-            F.broadcast(tomb),
-            corpus[id_col] == tomb["vid"],
-            "left_anti",
+            F.broadcast(tomb), corpus[id_col] == tomb["vid"], "left_anti"
         )
-    partitioned = commit.exists(spark, f"{path}/index")
-    build = ann_index_build_partitioned if partitioned else ann_index_build
-    commit.swap(spark, path, lambda staged: build(
+    commit.swap(spark, path, lambda staged: ann_index_build(
         live, staged, vec_col=vec_col, id_col=id_col,
         n_cells=n_cells, m=m, n_codes=n_codes, seed=seed,
     ))
@@ -1351,165 +1294,20 @@ def ivf_pq_from_index(
     include_self: bool = False,
 ) -> DataFrame:
     """:func:`ivf_pq_topk`'s query side against the standing on-disk
-    artifact: the books load driver-side (codebook-sized), the probe
-    LUT and probe→cell tables broadcast, and the stored cells/codes
-    tables are scanned — cell pruning is a broadcast join, so at scale
-    a query touches ``nprobe/n_cells`` of an already-100×-compressed
-    table.  Tombstoned vids (:func:`ann_index_delete`) anti-join out
-    of the cells scan before candidate generation.  Identical ranking
+    artifact: the books load driver-side (codebook-sized), the probed
+    cell set becomes a partition filter on the index scan (nprobe of
+    n_cells directories read), and the probe LUT and probe→cell tables
+    broadcast.  Tombstoned vids (:func:`ann_index_delete`) anti-join
+    out of the scan before candidate generation.  Identical ranking
     arithmetic to the in-memory op by construction (shared
     :func:`_ivf_pq_rank`)."""
-    cell_ids, cell_q, code_ids, Cs, _d0 = _read_ann_books(spark, path, m)
-    cells = spark.read.parquet(f"{path}/cells")
-    if commit.exists(spark, f"{path}/tombstones"):
-        tomb = spark.read.parquet(f"{path}/tombstones")
-        cells = cells.join(F.broadcast(tomb), "vid", "left_anti")
-    codes = spark.read.parquet(f"{path}/codes")
-    return _ivf_pq_rank(
-        spark, cells, codes, cell_ids, cell_q, code_ids, Cs, probes,
-        k=k, nprobe=nprobe, vec_col=vec_col, id_col=id_col,
-        include_self=include_self,
-    )
-
-
-def ann_index_build_partitioned(
-    corpus: DataFrame,
-    path: str,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    n_cells: int = 16,
-    m: int = 4,
-    n_codes: int = 16,
-    seed: int = 42,
-) -> None:
-    """:func:`ann_index_build`'s 100 TB layout: ONE unified index
-    table ``(vid, s, code)`` PARTITIONED BY ``cell`` (plus the same
-    frozen books).  A query knows its probed cells driver-side, so
-    the scan carries a partition filter and reads ``nprobe`` of
-    ``n_cells`` directories — physical partition pruning instead of a
-    post-scan broadcast-join filter (PartitionFilters pinned in
-    pytest).  This is FAISS's inverted-list file layout expressed as
-    hive partitioning: the list for a cell IS that cell's directory.
-
-    Appends compose: assign+encode a delta against the frozen books
-    and append with the same ``partitionBy`` — new rows land in their
-    cells' directories.  Deletes ride the same tombstone table as the
-    flat layout."""
-    import numpy as np
-
-    from ..scale import run_jobs
-
-    spark = corpus.sparkSession
-    # independent book draws / writes overlap as in ann_index_build
-    (cell_ids, cell_q), (code_ids, code_q) = run_jobs(
-        lambda: _seed_centroids(corpus, n_cells, vec_col, id_col, seed),
-        lambda: _seed_centroids(corpus, n_codes, vec_col, id_col, seed + 1),
-    )
-    dim = cell_q.shape[1]
-    if dim % m != 0:
-        raise ValueError(f"dim {dim} not divisible by m={m} subspaces")
-    d0 = dim // m
-    Cs = [code_q[:, s * d0 : (s + 1) * d0].astype(np.float64) for s in range(m)]
-    book_schema = "cid long, pos int, val_q long"
-    cells = _assign_to_grid(corpus, cell_ids, cell_q, vec_col, id_col).select(
-        F.col(id_col).alias("vid"), F.col("cluster").alias("cell")
-    )
-    codes = _pq_encode(
-        corpus, Cs, [code_ids for _ in Cs], d0, vec_col, id_col
-    )
-    run_jobs(
-        lambda: local_frame(
-            spark, _ann_books_to_rows(cell_ids, cell_q), book_schema
-        ).write.mode("overwrite").parquet(f"{path}/cellbook"),
-        lambda: local_frame(
-            spark, _ann_books_to_rows(code_ids, code_q), book_schema
-        ).write.mode("overwrite").parquet(f"{path}/codebook"),
-        lambda: codes.join(cells, "vid")
-        .select("vid", "s", "code", "cell")
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(f"{path}/index"),
-    )
-
-
-def ann_index_append_partitioned(
-    delta: DataFrame,
-    path: str,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    m: int = 4,
-) -> None:
-    """:func:`ann_index_append` for the cell-partitioned layout:
-    assign + encode the delta against the frozen books (two Arrow
-    passes over just the new vectors) and append with the same
-    ``partitionBy`` — each new row lands in its cell's directory, so
-    the partition-filter query path sees it immediately and the base
-    directories are never rewritten."""
-    spark = delta.sparkSession
-    cell_ids, cell_q, code_ids, Cs, d0 = _read_ann_books(spark, path, m)
-    cells = _assign_to_grid(delta, cell_ids, cell_q, vec_col, id_col).select(
-        F.col(id_col).alias("vid"), F.col("cluster").alias("cell")
-    )
-    codes = _pq_encode(delta, Cs, [code_ids for _ in Cs], d0, vec_col, id_col)
-    codes.join(cells, "vid").select("vid", "s", "code", "cell").write.mode(
-        "append"
-    ).partitionBy("cell").parquet(f"{path}/index")
-
-
-def ivf_pq_from_partitioned_index(
-    spark,
-    path: str,
-    probes: DataFrame,
-    k: int = 10,
-    nprobe: int = 4,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    m: int = 4,
-    include_self: bool = False,
-) -> DataFrame:
-    """Query the cell-partitioned artifact: the probed cell set is
-    known driver-side (codebook-sized math), so it becomes an
-    ``isin`` PARTITION filter on the unified index scan — only
-    nprobe/n_cells of the table's directories are read, before any
-    join runs.  Ranking then reuses :func:`_ivf_pq_rank` with the
-    pre-pruned frame on both the cells and codes legs (the broadcast
-    probe→cell join still routes each candidate to the right probe).
-    Identical results to the flat layout by construction."""
-    import numpy as np
-
-    cell_ids, cell_q, code_ids, Cs, _d0 = _read_ann_books(spark, path, m)
-    p_rows = _collect_probes(probes, id_col, vec_col)
-    if not p_rows:
-        return local_frame(
-            spark, [], "probe_id long, neighbor_id long, adc_dist long, rank int"
-        )
-    cell_norm = np.sqrt(
-        np.einsum("ij,ij->i", cell_q, cell_q).astype(np.float64)
-    )
-    probed: set = set()
-    for r in p_rows:
-        pq_vec = np.floor(
-            np.asarray(r[1], dtype=np.float64) * VEC_QUANT + 0.5
-        )
-        p_norm = np.sqrt(np.dot(pq_vec, pq_vec))
-        denom = (p_norm if p_norm > 0 else 1.0) * cell_norm
-        cos = (cell_q @ pq_vec) / denom
-        order = sorted(
-            range(len(cell_ids)), key=lambda j: (-cos[j], cell_ids[j])
-        )
-        probed.update(int(cell_ids[j]) for j in order[:nprobe])
-    idx = spark.read.parquet(f"{path}/index").filter(
-        F.col("cell").isin(sorted(probed))
-    )
-    if commit.exists(spark, f"{path}/tombstones"):
-        tomb = spark.read.parquet(f"{path}/tombstones")
+    books = _read_ann_books(spark, path, m)
+    idx = spark.read.schema(_INDEX_SCHEMA).parquet(f"{path}/index")
+    tomb = _tombstones(spark, path)
+    if tomb is not None:
         idx = idx.join(F.broadcast(tomb), "vid", "left_anti")
-    cells = idx.select("vid", "cell").distinct()
-    codes = idx.select("vid", "s", "code")
     return _ivf_pq_rank(
-        spark, cells, codes, cell_ids, cell_q, code_ids, Cs, probes,
-        k=k, nprobe=nprobe, vec_col=vec_col, id_col=id_col,
-        include_self=include_self,
+        spark, idx, books, probes, k, nprobe, vec_col, id_col, include_self
     )
 
 
@@ -1525,20 +1323,15 @@ def ivf_pq_from_state(
     m: int = 4,
     include_self: bool = False,
 ) -> DataFrame:
-    """Query the STREAMING ANN state table (unified ``(vid, cell, s,
-    code)`` rows maintained by :func:`~data__converter_spark.streaming.
-    runner.run_ann_index_update`) against the frozen books — the
-    read side that makes stream-built == batch-built provable: cells
-    and codes both derive from the one state frame (cells via a
-    distinct projection), then the shared :func:`_ivf_pq_rank` does
-    exactly what the batch artifact's query side does."""
-    cell_ids, cell_q, code_ids, Cs, _d0 = _read_ann_books(spark, books_path, m)
-    cells = state.select("vid", "cell").distinct()
-    codes = state.select("vid", "s", "code")
+    """Query the STREAMING ANN state table (the index rows ``(vid, s,
+    code, cell)`` maintained by :func:`~data__converter_spark.streaming.
+    runner.run_ann_index_update`) against the frozen books — the read
+    side that makes stream-built == batch-built provable: the shared
+    :func:`_ivf_pq_rank` does exactly what the stored artifact's query
+    side does."""
+    books = _read_ann_books(spark, books_path, m)
     return _ivf_pq_rank(
-        spark, cells, codes, cell_ids, cell_q, code_ids, Cs, probes,
-        k=k, nprobe=nprobe, vec_col=vec_col, id_col=id_col,
-        include_self=include_self,
+        spark, state, books, probes, k, nprobe, vec_col, id_col, include_self
     )
 
 

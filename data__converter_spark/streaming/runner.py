@@ -455,12 +455,12 @@ def run_ann_index_update(
     FROZEN books at ``books_path`` (the streaming half of
     :func:`~data__converter_spark.llmops.similarity.ann_index_append`,
     and the embedding analog of :func:`run_text_index_update`): every
-    micro-batch of NEW embeddings runs the two closure-codebook Arrow
-    passes — cell assignment + PQ encode, vectors never shuffle — and
-    the unified ``(vid, cell, s, code)`` rows append to the state
-    table through the same crash-safe swap as the other sinks.  The
-    servable (cells, codes) pair derives from the state at read time
-    via :func:`~data__converter_spark.llmops.similarity.
+    micro-batch of NEW embeddings runs the one closure-codebook Arrow
+    pass — cell assignment + PQ encode, vectors never shuffle — and
+    its ``(vid, s, code, cell)`` index rows (the stored artifact's row
+    shape) append to the state table through the same crash-safe swap
+    as the other sinks.  The state is queried directly by
+    :func:`~data__converter_spark.llmops.similarity.
     ivf_pq_from_state`.
 
     An append is NOT idempotent (a replayed epoch would duplicate
@@ -491,32 +491,19 @@ def _ann_index_combine(books_path: str, vec_col: str, id_col: str, m: int):
     """The epoch-guarded append body behind
     :func:`run_ann_index_update`, factored out for unit-level
     replay-contract tests: encode the batch against the frozen books
-    (two Arrow passes), append the unified rows on epoch advance,
+    (one Arrow pass), append its index rows on epoch advance,
     None on same-epoch replay, ValueError on an epoch regression."""
     from pyspark.sql import functions as F
 
-    from ..llmops.similarity import (
-        _assign_to_grid,
-        _pq_encode,
-        _read_ann_books,
-    )
+    from ..llmops.similarity import _index_rows, _read_ann_books
 
     def combine(
         base: DataFrame | None, batch_df: DataFrame, batch_id: int
     ) -> DataFrame | None:
-        spark = batch_df.sparkSession
-        cell_ids, cell_q, code_ids, Cs, d0 = _read_ann_books(
-            spark, books_path, m
+        books = _read_ann_books(batch_df.sparkSession, books_path, m)
+        delta = _index_rows(batch_df, books, vec_col, id_col).withColumn(
+            "__epoch__", F.lit(batch_id).cast("bigint")
         )
-        cells = _assign_to_grid(batch_df, cell_ids, cell_q, vec_col, id_col).select(
-            F.col(id_col).alias("vid"), F.col("cluster").alias("cell")
-        )
-        codes = _pq_encode(
-            batch_df, Cs, [code_ids for _ in Cs], d0, vec_col, id_col
-        )
-        delta = codes.join(cells, "vid").select(
-            "vid", "cell", "s", "code"
-        ).withColumn("__epoch__", F.lit(batch_id).cast("bigint"))
         if base is None:
             return delta
         applied = base.agg(F.max("__epoch__")).collect()[0][0]

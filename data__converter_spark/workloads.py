@@ -3262,9 +3262,9 @@ def q_ann_append_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental ANN maintenance (llmops/similarity.py:
     ann_index_build / ann_index_append / ivf_pq_from_index): the base
     corpus (vec_id % 7 != 0) builds the standing IVF-PQ artifact —
-    frozen md5-sampled cell/code books + cells/codes tables on
-    parquet — then the delta (vec_id % 7 == 0) APPENDS against the
-    frozen books (two Arrow passes over just the new vectors, no
+    frozen md5-sampled cell/code books + the cell-partitioned index
+    table — then the delta (vec_id % 7 == 0) APPENDS against the
+    frozen books (one Arrow pass over just the new vectors, no
     rescan, no retrain), and the usual probes rank against the
     on-disk index.  The oracle is the similarity_ivf_pq_topk SQL with
     the centroid samples drawn from the BASE subset only: append-
@@ -3291,7 +3291,7 @@ def q_ann_delete_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     similarity.py: ann_index_delete + ivf_pq_from_index): the full
     corpus builds the index, every vec_id % 9 == 0 is then deleted by
     appending its id to the tombstone table — O(deleted ids), books
-    and cells/codes untouched — and the probes rank against the
+    and the index table untouched — and the probes rank against the
     delete-aware index (tombstones anti-join out of the candidate
     stream; ann_index_compact folds them in offline).  Oracle: the
     similarity_ivf_pq_topk SQL with the candidate stream restricted
@@ -3364,27 +3364,22 @@ def q_ann_recall_after_append(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_ann_partitioned_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The 100 TB ANN layout (llmops/similarity.py:
-    ann_index_build_partitioned / ivf_pq_from_partitioned_index): the
-    unified (vid, s, code) index table is written PARTITIONED BY cell
-    — FAISS's inverted-list files as hive partitioning — and the
-    query's probed-cell set, known driver-side, becomes a partition
-    filter: the scan reads nprobe of n_cells directories before any
-    join runs (PartitionFilters pinned in tests/test_plans.py).
-    Oracle: similarity_ivf_pq_topk's SQL verbatim — layout must not
+    """The 100 TB ANN layout (llmops/similarity.py: ann_index_build /
+    ivf_pq_from_index) built and queried in one step: the index table
+    (vid, s, code) is written PARTITIONED BY cell — FAISS's
+    inverted-list files as hive partitioning — and the query's
+    probed-cell set, known driver-side, becomes a partition filter:
+    the scan reads nprobe of n_cells directories before any join runs
+    (PartitionFilters pinned in tests/test_plans.py).  Oracle:
+    similarity_ivf_pq_topk's SQL verbatim — the stored layout must not
     change a single ranking."""
-    from .llmops.similarity import (
-        ann_index_build_partitioned,
-        ivf_pq_from_partitioned_index,
-    )
+    from .llmops.similarity import ann_index_build, ivf_pq_from_index
 
     emb = _load(spark, sf_dir, "embeddings")
     path = _scratch_dir(spark, "ann_ivfpq_part")
-    ann_index_build_partitioned(emb, path, n_cells=16, m=4, n_codes=16)
+    ann_index_build(emb, path, n_cells=16, m=4, n_codes=16)
     probes = emb.filter(F.col("vec_id") % 25 == 0)
-    return ivf_pq_from_partitioned_index(
-        spark, path, probes, k=10, nprobe=4, m=4
-    )
+    return ivf_pq_from_index(spark, path, probes, k=10, nprobe=4, m=4)
 
 
 def q_ann_retrain_query(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1359,10 +1359,11 @@ def test_pq_train_refines_and_converges_like_kmeans(spark):
         similarity.pq_train(df, m=4, n_codes=4, iterations=0)
 
 
-def test_ivf_pq_equals_pq_when_all_cells_probed(spark):
-    """With nprobe = n_cells the IVF stage prunes nothing, so IVF-PQ
-    must reproduce plain PQ exactly (same codebook seed); with fewer
-    probes the result set per probe is a subset of the candidates."""
+def test_ivf_pq_equals_pq_when_all_cells_probed(spark, tmp_path):
+    """With nprobe = n_cells the IVF stage prunes nothing, so IVF-PQ —
+    in memory and from the stored artifact — must reproduce plain PQ
+    exactly (same codebook seed); with fewer probes the result set per
+    probe is a subset of the candidates."""
     import numpy as np
 
     rng = np.random.RandomState(3)
@@ -1381,6 +1382,10 @@ def test_ivf_pq_equals_pq_when_all_cells_probed(spark):
         (r["probe_id"], r["neighbor_id"], r["adc_dist"], r["rank"]) for r in rs
     )
     assert key(full) == key(pq) and len(full) == 10
+    path = str(tmp_path / "idx")
+    similarity.ann_index_build(df, path, n_cells=4, m=2, n_codes=8, seed=42)
+    stored = similarity.ivf_pq_from_index(spark, path, probes, k=5, nprobe=4, m=2)
+    assert key(stored.collect()) == key(pq)
     pruned = similarity.ivf_pq_topk(
         df, probes, k=5, n_cells=4, nprobe=1, m=2, n_codes=8, seed=42
     ).collect()
@@ -1430,23 +1435,19 @@ def test_ann_index_append_equals_frozen_book_rebuild(spark, tmp_path):
     )
 
     # (a) one-shot assignment of the FULL corpus against the same
-    # frozen (base-sampled) books: overwrite cells/codes by hand
+    # frozen (base-sampled) books: overwrite the index table by hand
     p_one = str(tmp_path / "one")
     ann_index_build(base, p_one, n_cells=4, m=2, n_codes=8, seed=42)
-    # rebuild cells/codes over the full corpus against p_one's books
+    # rebuild the index over the full corpus against p_one's books
     from data__converter_spark.llmops.similarity import (
-        _assign_to_grid,
-        _pq_encode,
+        _index_rows,
         _read_ann_books,
     )
 
-    cell_ids, cell_q, code_ids, Cs, d0 = _read_ann_books(spark, p_one, 2)
-    _assign_to_grid(full, cell_ids, cell_q, "embedding", "vec_id").select(
-        F.col("vec_id").alias("vid"), F.col("cluster").alias("cell")
-    ).write.mode("overwrite").parquet(f"{p_one}/cells")
-    _pq_encode(
-        full, Cs, [code_ids for _ in Cs], d0, "embedding", "vec_id"
-    ).write.mode("overwrite").parquet(f"{p_one}/codes")
+    books = _read_ann_books(spark, p_one, 2)
+    _index_rows(full, books, "embedding", "vec_id").write.mode(
+        "overwrite"
+    ).partitionBy("cell").parquet(f"{p_one}/index")
     want = key(
         ivf_pq_from_index(spark, p_one, probes, k=5, nprobe=4, m=2).collect()
     )
@@ -2168,15 +2169,18 @@ def test_ingest_pipeline_drops_dups_and_inherits_splits(spark):
     assert out[11][2] == 10
 
 
-@pytest.mark.slow
 def test_ann_tombstone_delete_and_compact(spark, tmp_path):
-    """ANN takedown (r11): tombstoned vids vanish from rankings
-    (delete-then-query == hand-filtered candidates), deleting unknown
-    ids is a no-op, and ann_index_compact folds tombstones into the
-    cells/codes tables without changing any ranking."""
+    """ANN takedown on the one artifact layout: tombstoned vids vanish
+    from rankings (survivors keep their exact ADC distances), deleting
+    unknown ids is a no-op, and ann_index_compact folds the tombstones
+    into the cell-partitioned index table — rankings unchanged, fewer
+    index rows, an empty tombstone table, no staging residue."""
+    import os
+
     import numpy as np
 
     from data__converter_spark.llmops.similarity import (
+        _INDEX_SCHEMA,
         ann_index_build,
         ann_index_compact,
         ann_index_delete,
@@ -2213,11 +2217,14 @@ def test_ann_tombstone_delete_and_compact(spark, tmp_path):
     dist_before = {(p, n): d for p, n, d, _ in before}
     for p, n, d, _ in after:
         assert dist_before.get((p, n), d) == d
-    # compact folds tombstones in; rankings unchanged, tables shrink
-    n_cells_before = spark.read.parquet(f"{path}/cells").count()
+    # compact folds tombstones in; rankings unchanged, the table shrinks
+    index = lambda: spark.read.schema(_INDEX_SCHEMA).parquet(f"{path}/index")
+    n_rows_before = index().count()
     ann_index_compact(spark, path)
-    assert spark.read.parquet(f"{path}/cells").count() == n_cells_before - len(doomed)
+    assert index().count() == n_rows_before - 2 * len(doomed)  # m=2 rows each
+    assert not {r["vid"] for r in index().collect()} & doomed
     assert spark.read.parquet(f"{path}/tombstones").count() == 0
+    assert [d for d in os.listdir(path) if "__" in d] == []
     compacted = key(
         ivf_pq_from_index(spark, path, probes, k=5, nprobe=4, m=2).collect()
     )
@@ -2225,21 +2232,22 @@ def test_ann_tombstone_delete_and_compact(spark, tmp_path):
 
 
 def test_ann_partitioned_append_lands_in_cell_dirs(spark, tmp_path):
-    """Appending to the cell-partitioned layout: delta rows land in
-    their cells' directories (base files untouched) and the
-    partition-filter query path sees them — equal to building the
-    partitioned index over the full corpus with the same frozen
-    (base-drawn) books never being possible here, so compare against
-    the FLAT frozen-book append path instead."""
+    """Appending to the cell-partitioned index: delta rows land in
+    their cells' directories, the base files stay untouched, and the
+    partition-filter query path sees them — equal to ranking the index
+    rows of the FULL corpus encoded against the same frozen
+    (base-drawn) books."""
+    import glob
+
     import numpy as np
 
     from data__converter_spark.llmops.similarity import (
+        _index_rows,
+        _read_ann_books,
         ann_index_append,
-        ann_index_append_partitioned,
         ann_index_build,
-        ann_index_build_partitioned,
         ivf_pq_from_index,
-        ivf_pq_from_partitioned_index,
+        ivf_pq_from_state,
     )
 
     rng = np.random.RandomState(41)
@@ -2251,28 +2259,28 @@ def test_ann_partitioned_append_lands_in_cell_dirs(spark, tmp_path):
     base = full.filter(F.col("vec_id") % 4 != 0)
     delta = full.filter(F.col("vec_id") % 4 == 0)
     probes = full.filter(F.col("vec_id") < 2)
-    p_part, p_flat = str(tmp_path / "part"), str(tmp_path / "flat")
-    ann_index_build_partitioned(base, p_part, n_cells=4, m=2, n_codes=8)
-    ann_index_build(base, p_flat, n_cells=4, m=2, n_codes=8)
-    ann_index_append_partitioned(delta, p_part, m=2)
-    ann_index_append(delta, p_flat, m=2)
+    path = str(tmp_path / "idx")
+    ann_index_build(base, path, n_cells=4, m=2, n_codes=8)
+    files = lambda: {
+        f: open(f, "rb").read()
+        for f in glob.glob(f"{path}/index/cell=*/*.parquet")
+    }
+    base_files = files()
+    ann_index_append(delta, path, m=2)
+    after = files()
+    assert all(after[f] == b for f, b in base_files.items())
+    assert len(after) > len(base_files)
     key = lambda rs: sorted(
         (r["probe_id"], r["neighbor_id"], r["adc_dist"], r["rank"]) for r in rs
     )
     got = key(
-        ivf_pq_from_partitioned_index(
-            spark, p_part, probes, k=5, nprobe=4, m=2
-        ).collect()
+        ivf_pq_from_index(spark, path, probes, k=5, nprobe=4, m=2).collect()
     )
+    one_shot = _index_rows(full, _read_ann_books(spark, path, 2), "embedding", "vec_id")
     want = key(
-        ivf_pq_from_index(spark, p_flat, probes, k=5, nprobe=4, m=2).collect()
+        ivf_pq_from_state(spark, path, one_shot, probes, k=5, nprobe=4, m=2).collect()
     )
     assert got == want and got
-    # physical layout: hive cell directories exist
-    import os
-
-    dirs = [d for d in os.listdir(f"{p_part}/index") if d.startswith("cell=")]
-    assert dirs, "index must be hive-partitioned by cell"
 
 
 def test_ann_index_compact_staging_hygiene_and_crash_recovery(spark, tmp_path):
@@ -2312,7 +2320,7 @@ def test_ann_index_compact_staging_hygiene_and_crash_recovery(spark, tmp_path):
         ivf_pq_from_index(spark, path, probes, k=5, nprobe=4, m=2).collect()
     )
     ann_index_compact(spark, path)
-    # hygiene: no staging or backup residue for either table
+    # hygiene: no staging or backup residue
     residue = [
         d for d in os.listdir(path)
         if "__staged" in d or "__bak" in d or "__new" in d
@@ -2324,39 +2332,39 @@ def test_ann_index_compact_staging_hygiene_and_crash_recovery(spark, tmp_path):
 
     # injected crash 1: between the renames — live table gone, staged
     # copy committed (_SUCCESS present).  Recovery must promote it.
-    cells, staged = f"{path}/cells", f"{path}/cells__staged"
-    shutil.copytree(cells, staged)
-    shutil.rmtree(cells)
+    index, staged = f"{path}/index", f"{path}/index__staged"
+    shutil.copytree(index, staged)
+    shutil.rmtree(index)
     assert os.path.exists(f"{staged}/_SUCCESS")
     ann_index_compact(spark, path)
-    assert os.path.isdir(cells) and not os.path.isdir(staged)
+    assert os.path.isdir(index) and not os.path.isdir(staged)
     assert key(
         ivf_pq_from_index(spark, path, probes, k=5, nprobe=4, m=2).collect()
     ) == want
 
     # injected crash 2: write died mid-flight — staged dir WITHOUT
     # _SUCCESS, live intact.  Recovery must drop the partial staging.
-    os.makedirs(f"{path}/codes__staged")
-    with open(f"{path}/codes__staged/part-00000.parquet", "wb") as f:
+    os.makedirs(f"{staged}/cell=0")
+    with open(f"{staged}/cell=0/part-00000.parquet", "wb") as f:
         f.write(b"partial")
     ann_index_compact(spark, path)
-    assert not os.path.isdir(f"{path}/codes__staged")
+    assert not os.path.isdir(staged)
 
     # injected crash 3: after the swap, before backup cleanup — both
     # live and __bak exist.  Recovery must drop the backup.
-    shutil.copytree(cells, f"{cells}__bak")
+    shutil.copytree(index, f"{index}__bak")
     ann_index_compact(spark, path)
-    assert not os.path.isdir(f"{cells}__bak")
+    assert not os.path.isdir(f"{index}__bak")
     assert key(
         ivf_pq_from_index(spark, path, probes, k=5, nprobe=4, m=2).collect()
     ) == want
 
     # injected crash 4: old table demoted but staged never committed —
     # __bak only.  Recovery must restore the backup.
-    shutil.copytree(cells, f"{cells}__bak")
-    shutil.rmtree(cells)
+    shutil.copytree(index, f"{index}__bak")
+    shutil.rmtree(index)
     ann_index_compact(spark, path)
-    assert os.path.isdir(cells) and not os.path.isdir(f"{cells}__bak")
+    assert os.path.isdir(index) and not os.path.isdir(f"{index}__bak")
     assert key(
         ivf_pq_from_index(spark, path, probes, k=5, nprobe=4, m=2).collect()
     ) == want
@@ -2446,7 +2454,8 @@ def test_ann_index_retrain_migration_lifecycle(spark, tmp_path):
     """r12 (VERDICT r11 Next #4): ann_index_retrain retrains the
     books on the current corpus and swaps the artifact generation
     atomically — retrained == fresh-build exactly, standing
-    tombstones fold in, the partitioned layout migrates to itself,
+    tombstones fold in, an artifact built from the stale corpus
+    migrates to the fresh generation,
     the recall alarm resets, and every injected crash state of the
     generation swap recovers to a consistent artifact."""
     import os
@@ -2457,12 +2466,10 @@ def test_ann_index_retrain_migration_lifecycle(spark, tmp_path):
     from data__converter_spark.llmops.similarity import (
         ann_index_append,
         ann_index_build,
-        ann_index_build_partitioned,
         ann_index_delete,
         ann_index_retrain,
         brute_force_topk,
         ivf_pq_from_index,
-        ivf_pq_from_partitioned_index,
     )
 
     rng = np.random.RandomState(7)
@@ -2535,10 +2542,10 @@ def test_ann_index_retrain_migration_lifecycle(spark, tmp_path):
     )
     ann_index_retrain(full, path, n_cells=4, m=2, n_codes=8, seed=42)
     assert not os.path.isdir(f"{path}/tombstones")
-    cells_vids = {
-        r["vid"] for r in spark.read.parquet(f"{path}/cells").collect()
+    index_vids = {
+        r["vid"] for r in spark.read.parquet(f"{path}/index").collect()
     }
-    assert 100 not in cells_vids and 104 not in cells_vids
+    assert 100 not in index_vids and 104 not in index_vids
 
     # injected crash 1: committed staged generation + live missing →
     # promoted at next entry
@@ -2564,17 +2571,14 @@ def test_ann_index_retrain_migration_lifecycle(spark, tmp_path):
     ) == want
     assert not os.path.isdir(f"{path}__bak")
 
-    # partitioned layout migrates to itself (auto-detected)
+    # a base-built artifact at a fresh path migrates to the same
+    # fresh-build generation, cell-partitioned index included
     p_path = str(tmp_path / "pidx")
-    ann_index_build_partitioned(
-        base, p_path, n_cells=4, m=2, n_codes=8, seed=42
-    )
+    ann_index_build(base, p_path, n_cells=4, m=2, n_codes=8, seed=42)
     ann_index_retrain(full, p_path, n_cells=4, m=2, n_codes=8, seed=42)
     assert os.path.isdir(f"{p_path}/index")
     got = key(
-        ivf_pq_from_partitioned_index(
-            spark, p_path, probes, k=5, nprobe=2, m=2
-        ).collect()
+        ivf_pq_from_index(spark, p_path, probes, k=5, nprobe=2, m=2).collect()
     )
     assert got == want
 
@@ -2643,6 +2647,54 @@ def test_ingest_state_replay_idempotence_and_compact(spark, tmp_path):
 
     # the next batch over the compacted state matches the clean run
     assert key(ingest_pipeline_incremental(batch2, path, **kw)) == r2
+
+
+def test_ingest_compact_front_fold_is_deterministic_on_id_reuse(spark, tmp_path):
+    """An id reused with changed text leaves two different front rows
+    for it; ingest_state_compact keeps the smallest (hs, sig) one
+    whatever order the rows are stored in, so the compacted front is
+    the same on every run."""
+    import shutil
+
+    from data__converter_spark.llmops.pipeline import (
+        ingest_pipeline_incremental,
+        ingest_state_build,
+        ingest_state_compact,
+    )
+    from data__converter_spark.scale import local_frame
+
+    docs = spark.createDataFrame(
+        [
+            (1, "alpha beta gamma delta epsilon zeta"),
+            (2, "one two three four five six seven"),
+        ],
+        "doc_id long, text string",
+    )
+    kw = dict(k=3, num_hashes=16, bands=4, threshold=0.3)
+    path = str(tmp_path / "state")
+    ingest_state_build(docs, path, **kw)
+    reused = spark.createDataFrame(
+        [(1, "completely rewritten text for the reused id")],
+        "doc_id long, text string",
+    )
+    ingest_pipeline_incremental(reused, path, **kw)
+    front = spark.read.parquet(f"{path}/front")
+    rows = sorted(map(tuple, front.collect()))
+    assert [r[0] for r in rows].count(1) == 2
+    key = lambda t: sorted(map(tuple, spark.read.parquet(t).collect()))
+    folded = []
+    for order in (rows, rows[::-1]):
+        state = str(tmp_path / f"state_{len(folded)}")
+        shutil.copytree(path, state)
+        shutil.rmtree(f"{state}/front")
+        local_frame(spark, order, front.schema).coalesce(1).write.parquet(
+            f"{state}/front"
+        )
+        ingest_state_compact(spark, state)
+        folded.append(key(f"{state}/front"))
+    assert folded[0] == folded[1]
+    kept = [r for r in folded[0] if r[0] == 1]
+    assert kept == [min(r for r in rows if r[0] == 1)]
 
 
 @pytest.mark.slow

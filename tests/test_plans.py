@@ -473,6 +473,42 @@ def test_no_optional_dependency_fallback_in_package():
     assert not offenders, f"import-gated fallback in the package: {offenders}"
 
 
+_DENSE_TOPK = (
+    "brute_force_topk", "lsh_topk", "ivf_topk", "pq_topk", "ivf_pq_topk",
+    "ivf_pq_from_index", "ivf_pq_from_state",
+)
+
+
+def test_dense_topk_share_one_rank_stage_and_one_index_layout():
+    """similarity.py's dense top-k operators, with every module-level
+    helper they reach, hold exactly one ``row_number().over(`` (the
+    shared rank stage); the module holds one ``dim % m`` check (the
+    shared book slicer); and the ANN artifact has one layout, so no
+    flat ``/cells`` or ``/codes`` table path remains."""
+    import ast
+
+    root, _ = _package_modules()
+    src = (root / "llmops" / "similarity.py").read_text()
+    defs = {
+        n.name: n for n in ast.parse(src).body
+        if isinstance(n, (ast.FunctionDef, ast.ClassDef))
+    }
+    reached, todo = set(), list(_DENSE_TOPK)
+    while todo:
+        name = todo.pop()
+        if name in reached:
+            continue
+        reached.add(name)
+        todo.extend(
+            n.id for n in ast.walk(defs[name])
+            if isinstance(n, ast.Name) and n.id in defs
+        )
+    body = "".join(ast.get_source_segment(src, defs[n]) for n in reached)
+    assert body.count("row_number().over(") == 1, sorted(reached)
+    assert src.count("dim % m") == 1
+    assert '/cells"' not in src and '/codes"' not in src
+
+
 # Public names kept although nothing outside tests/ reaches them, each
 # with its reason.
 _UNREACHED_ALLOWED = {
@@ -1069,19 +1105,18 @@ def test_k_anonymity_risk_total_broadcasts_over_class_table(spark):
 
 def test_ann_partitioned_index_prunes_cell_partitions(spark, tmp_path):
     """The cell-partitioned ANN layout's whole point: the probed-cell
-    set becomes a PARTITION filter on the unified index scan — the
-    plan's PartitionFilters carries the cell IN-set (pruning happens
-    before any join), and with nprobe < n_cells strictly fewer than
-    all partitions are read.  Results must equal the flat layout's
-    exactly (same probes, same books)."""
+    set becomes a PARTITION filter on the index scan — the plan's
+    PartitionFilters carries the cell IN-set (pruning happens before
+    any join), also under a tombstone anti-join.  Results must equal
+    the in-memory ivf_pq_topk's exactly (same probes, same books)."""
     import numpy as np
     from pyspark.sql import functions as F
 
     from data__converter_spark.llmops.similarity import (
         ann_index_build,
-        ann_index_build_partitioned,
+        ann_index_delete,
         ivf_pq_from_index,
-        ivf_pq_from_partitioned_index,
+        ivf_pq_topk,
     )
 
     rng = np.random.RandomState(31)
@@ -1091,25 +1126,57 @@ def test_ann_partitioned_index_prunes_cell_partitions(spark, tmp_path):
         "vec_id long, embedding array<float>",
     )
     probes = full.filter(F.col("vec_id") < 2)
-    p_part = str(tmp_path / "part")
-    p_flat = str(tmp_path / "flat")
-    ann_index_build_partitioned(full, p_part, n_cells=4, m=2, n_codes=8)
-    ann_index_build(full, p_flat, n_cells=4, m=2, n_codes=8)
-    got_df = ivf_pq_from_partitioned_index(
-        spark, p_part, probes, k=5, nprobe=2, m=2
-    )
-    plan = plan_of(got_df)
-    part_lines = [
-        ln for ln in plan.splitlines()
-        if "PartitionFilters:" in ln and "cell" in ln.split(
-            "PartitionFilters:", 1)[1]
-    ]
-    assert part_lines, "index scan must carry a cell partition filter"
+    path = str(tmp_path / "idx")
+    ann_index_build(full, path, n_cells=4, m=2, n_codes=8)
+
+    def cell_pruned(df) -> bool:
+        return any(
+            "cell" in ln.split("PartitionFilters:", 1)[1]
+            for ln in plan_of(df).splitlines()
+            if "PartitionFilters:" in ln
+        )
+
+    got_df = ivf_pq_from_index(spark, path, probes, k=5, nprobe=2, m=2)
+    assert cell_pruned(got_df), "index scan must carry a cell partition filter"
     key = lambda rs: sorted(
         (r["probe_id"], r["neighbor_id"], r["adc_dist"], r["rank"]) for r in rs
     )
     got = key(got_df.collect())
     want = key(
-        ivf_pq_from_index(spark, p_flat, probes, k=5, nprobe=2, m=2).collect()
+        ivf_pq_topk(
+            full, probes, k=5, n_cells=4, nprobe=2, m=2, n_codes=8
+        ).collect()
     )
     assert got == want and got
+    ann_index_delete(spark.createDataFrame([(5,)], "vec_id long"), path)
+    assert cell_pruned(ivf_pq_from_index(spark, path, probes, k=5, nprobe=2, m=2))
+
+
+def test_ann_index_query_frame_reads_under_writer_schemas(spark, tmp_path):
+    """Every ANN artifact table reads under the schema its writer used,
+    so building ivf_pq_from_index's query frame submits no Spark job
+    besides the two book collects — no footer-inference job per table
+    (cellbook, codebook, index, tombstones)."""
+    import numpy as np
+
+    from data__converter_spark.llmops.similarity import (
+        ann_index_build,
+        ann_index_delete,
+        ivf_pq_from_index,
+    )
+    from data__converter_spark.scale import local_frame
+
+    rng = np.random.RandomState(5)
+    rows = [
+        (i, [float(x) for x in rng.uniform(-1, 1, size=8)]) for i in range(24)
+    ]
+    schema = "vec_id long, embedding array<float>"
+    path = str(tmp_path / "idx")
+    ann_index_build(local_frame(spark, rows, schema), path, n_cells=4, m=2, n_codes=8)
+    ann_index_delete(local_frame(spark, [(3,)], "vec_id long"), path)
+    probes = local_frame(spark, rows[:2], schema)  # collected without a job
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    before = sched.nextJobId()
+    df = ivf_pq_from_index(spark, path, probes, k=5, nprobe=2, m=2)
+    assert sched.nextJobId() - before == 2
+    assert df.count() == 10

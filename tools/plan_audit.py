@@ -47,7 +47,7 @@ SHOWCASE = [
     ("session_paths", "sessionize window + per-session struct-sorted path assembly; top-N over the path aggregate, never the event stream"),
     ("events_anomalies", "two rank-selection windows on one group key; integer cross-multiplied 3-MAD flag, no interpolation"),
     ("pipeline_selection", "gate fuses into the scan; DSIR aggs + constant broadcasts; text crosses the wire once (into the shard windows)"),
-    ("similarity_ivf_pq_topk", "two closure-codebook Arrow passes (cells, codes); probe-cells + ADC lookup broadcast; candidates via broadcast cell join"),
+    ("similarity_ivf_pq_topk", "one closure-codebook Arrow pass emits (vid, s, code, cell) index rows; the probed-cell set filters them, probe-cells + ADC lookup broadcast; candidates via broadcast cell join — no vid join between cells and codes"),
     ("pmi_collocations", "unigram/bigram partial+final counts; min_count prune BEFORE the vocab-keyed count joins; 1-row corpus-total broadcast; TakeOrdered"),
     ("sparse_retrieval", "term-keyed postings join is the inverted index; contributions partial-sum map-side; per-query top-k via WindowGroupLimit, no forced build side"),
     ("bpe_train", "the RETURNED merge table is driver-collected constants (LocalTableScan); each training superstep was one Arrow encode + partial/final pair agg over the persisted word vocab + TakeOrdered(1)"),
@@ -117,15 +117,15 @@ SHOWCASE = [
     ("image_dhash_pairs", "one Arrow mapInPandas pass emits 2 longs per image; 16-bit band posting lists generate pairs in ONE exchange (hot-bucket cap); Hamming verification is JVM bit_count(xor) — all-pairs never in the plan"),
     ("auc_dsir_en", "Mann-Whitney without a per-row rank: rows collapse to (score, n_pos, n_neg) CELLS first, the ordered scan runs over the cell table (metadata scale), ties exact via the +n_neg term — 2U and the micro division are pure BIGINT"),
     ("bm25_after_delete", "document takedown without rebuild: the persisted tf state is read by BOTH the retraction lookup (semi-scoped to the doomed ids, negated) and the final index; the signed union nets per (doc, term) in ONE map-side-combinable aggregate before the df/dl aggregates — no second tokenizer pass, no corpus rescan, ranking identical to bm25_retrieval's shape"),
-    ("ann_append_query", "incremental IVF-PQ: the delta's cell assignment + PQ encode are two Arrow passes with the FROZEN books riding the task closure (base never rescanned); the query side scans the stored cells/codes tables, prunes by a broadcast probe→cell join, and the ADC lookup broadcasts — vectors never shuffle anywhere"),
+    ("ann_append_query", "incremental IVF-PQ: the delta's cell assignment + PQ encode are one Arrow pass with the FROZEN books riding the task closure (base never rescanned), appended into its cells' directories; the query side scans the cell-partitioned index table under a cell PartitionFilter, routes candidates by a broadcast probe→cell join, and the ADC lookup broadcasts — vectors never shuffle anywhere"),
     ("ingest_pipeline", "composed ingest loop: decontamination moves digests behind the size-gated Bloom position table (broadcast below the 2^20-bit gate, streamed-scan inversion above — documents never shuffle for it) and the exact confirm SCANS the corpus digests against broadcast candidates; the survivors frame is persisted for its three consumers; the only corpus-scale shuffles are the LSH pair generation the split assignment already requires"),
-    ("ann_delete_query", "ANN takedown: the tombstone table anti-joins (broadcast) out of the stored cells scan BEFORE candidate generation — a delete is an O(ids) append, the cells/codes tables and frozen books are untouched, and every surviving ranking is bit-identical"),
+    ("ann_delete_query", "ANN takedown: the tombstone table anti-joins (broadcast) out of the partition-filtered index scan BEFORE candidate generation — a delete is an O(ids) append, the index table and frozen books are untouched, and every surviving ranking is bit-identical"),
     ("ann_recall_after_append", "the drift alarm for the frozen-quantizer trade: both legs reuse their own checked plans (brute truth, appended-artifact ADC); the intersection is an equi-join on (probe, neighbor) + per-probe count — no new shuffle shapes"),
-    ("ann_partitioned_query", "the 100 TB layout: the unified index is hive-partitioned by cell and the probed-cell set (driver-side, codebook-scale math) is a PARTITION filter on the scan — nprobe of n_cells directories read before any join; PartitionFilters pinned in tests/test_plans.py"),
+    ("ann_partitioned_query", "build + query of the one artifact layout: the index table is hive-partitioned by cell and the probed-cell set (driver-side, codebook-scale math) is a PARTITION filter on the scan — nprobe of n_cells directories read before any join; every artifact table reads under its writer's schema, so no footer-inference job; PartitionFilters pinned in tests/test_plans.py"),
     ("ingest_incremental", "steady-state ingest: batch text is the ONLY text read (one Arrow pass over the batch front); batch-vs-corpus candidates come from a bucket join against the standing postings table (batch side broadcast); corpus-internal pairs read pre-verified from the state; the CC relabel runs over a BATCH-SIZED graph (new pairs + touched clusters' star edges from the standing assign table) — the standing pair graph is never rescanned; since r14 every per-batch state write is batch-sized too (the bloom OR-in is an append of the batch's positions, not a rewrite of the corpus-sized table)"),
     ("ingest_reassign", "merge-shaped ingest receipts: the standing assign table reads as base ∪ latest-per-doc delta with an r14 digest-membership filter hiding uncommitted-batch survivor rows (delta ids broadcast against the scanned digests table — every probe broadcasts the batch-sized side, the corpus-scale base/digests are scanned, never shuffled); reassignments were computed on the batch-sized star graph and appended, so the returned plan is exactly that base+delta read"),
     ("ingest_compact_resize", "bloom lifecycle: the compactor folds every state table through the staged swap and rebuilds the membership sketch at auto-sized geometry carried in the table's own columns; the post-resize ingest receipt plan is a bare FileScan of the durable batch receipt"),
-    ("ann_retrain_query", "the drift-alarm response: retrain = ann_index_build's two Arrow passes over the current corpus (books ride the task closure, vectors never shuffle) into a staged generation, then one commit.swap of the whole generation directory (root _SUCCESS marks it committed) — the query side is the standard stored-artifact scan + broadcast probe→cell pruning, identical to the fresh-build plan"),
+    ("ann_retrain_query", "the drift-alarm response: retrain = ann_index_build's one Arrow pass over the current corpus (books ride the task closure, vectors never shuffle) into a staged generation, then one commit.swap of the whole generation directory (root _SUCCESS marks it committed) — the query side is the standard partition-filtered artifact scan + broadcast probe→cell routing, identical to the fresh-build plan"),
 ]
 
 
